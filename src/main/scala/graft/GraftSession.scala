@@ -103,9 +103,31 @@ object GraftSession {
     val spark = (sharedConfs ++ envConfs).foldLeft(b) {
       case (bb, (k, v)) => bb.config(k, v) }
       .getOrCreate()
+    checkStaticConfs(spark.sparkContext.getConf)
     spark.sparkContext.setLogLevel(logLevel)
     applyEnvConfs(spark)
     spark
+  }
+
+  /** Confs that only take effect at SparkContext creation. */
+  private val staticKeys =
+    Seq("spark.serializer", "spark.shuffle.sort.bypassMergeThreshold")
+
+  /** Fails loudly when a running context does not carry the static confs
+    * [[create]] asked for ([[sharedConfs]], then `SPARK_GRAFT_CONF_*`
+    * overrides). `getOrCreate` returns a pre-existing session (a shell, a
+    * test-order leak) as is, and its builder confs are then silently
+    * dropped: such a session would run the JavaSerializer and the
+    * bypass-merge shuffle writer while every measurement assumed
+    * otherwise. */
+  private[graft] def checkStaticConfs(conf: org.apache.spark.SparkConf): Unit = {
+    val want = (sharedConfs ++ envConfs).toMap
+    val wrong = staticKeys.filterNot(k => conf.getOption(k) == want.get(k))
+    if (wrong.nonEmpty) throw new IllegalStateException(
+      "the running SparkContext was created without graft's static confs: " +
+        wrong.map(k => s"$k=${conf.getOption(k).getOrElse("<unset>")} " +
+          s"(want ${want(k)})").mkString(", ") +
+        "; stop the existing session before GraftSession.create")
   }
 
   /** `SPARK_GRAFT_CONF_*` env overrides as (dotted key, value) pairs. */

@@ -199,7 +199,7 @@ object Main {
       "trades" -> ("trade_time", "qty"),
       "order_books" -> ("update_time", "qty"))
     val (tsCol, valCol) = cols.getOrElse(table, ("open_time", "volume"))
-    operators.UpsertRouter.read(spark, s"$warehouseDir/$table") match {
+    operators.UpsertWriter.read(spark, s"$warehouseDir/$table") match {
       case Some(df) if df.columns.contains(tsCol) =>
         val r = operators.AggOps.tableStats(df, col(tsCol), col(valCol)).first()
         val n = r.getLong(r.fieldIndex("n"))

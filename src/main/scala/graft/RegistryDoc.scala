@@ -21,7 +21,7 @@ object RegistryDoc {
       """LmScore|AggOps|WindowOps|JoinOps|SetOps|RangeJoin|Mixture|Packing|""" +
       """Splits|Calibrate|Sessionize|ScanOps|Graph|Coverage|Salting|""" +
       """Expressions|Multimodal|MediaHeaders|Crypto|Readers|UpsertWriter|""" +
-      """BucketedUpsertWriter|JdbcUpsert|StatefulOps|StreamJoin|Bars)\.\w+""").r
+      """JdbcUpsert|StatefulOps|StreamJoin|Bars)\.\w+""").r
 
   /** (capability first sentence, entry points) per query, parsed from the
     * `queries` map region of SparkEntry.scala: the capability is the run

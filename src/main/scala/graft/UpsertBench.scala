@@ -3,18 +3,21 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{BucketedUpsertWriter, UpsertWriter}
+import graft.operators.UpsertWriter
 
-/** End-to-end comparison of the two upsert sinks at bench scale — the
-  * reference's K4 contract (overlapping-window re-ingest: each batch
-  * re-sends a trailing window of already-stored rows plus new ones;
-  * storage must stay idempotent) driven over the sf0.1 lineitem table.
+/** End-to-end comparison of the two bucket-count regimes of the one keyed
+  * upsert writer at bench scale — the reference's K4 contract
+  * (overlapping-window re-ingest: each batch re-sends a trailing window of
+  * already-stored rows plus new ones; storage must stay idempotent) driven
+  * over the sf0.1 lineitem table.
   *
-  * UpsertWriter rewrites the WHOLE table every batch (generation flip);
-  * BucketedUpsertWriter rewrites only the xxhash-buckets the batch
-  * touches. This main times both writers over the same batch sequence,
-  * verifies the final tables are content-identical (order-free xxhash
-  * fingerprint), and replays the last batch to confirm idempotency.
+  * At `numBuckets = 1` [[UpsertWriter]] rewrites the WHOLE table every
+  * batch (one generation flip); at `numBuckets = N` it rewrites only the
+  * xxhash-buckets the batch touches. This main drives two tables, one per
+  * count, through the same batch sequence — bulk re-ingest windows, then
+  * trickle batches of one order each — times both, verifies the final
+  * tables are content-identical (order-free xxhash fingerprint), and
+  * replays the last window to confirm idempotency.
   *
   * Usage: tools/run.sh graft.UpsertBench [sfDir] [numBuckets] [batches]
   */
@@ -60,80 +63,43 @@ object UpsertBench {
       (tInit, tBatches, fp)
     }
 
-    val fullDir = Files.createTempDirectory("graft-upsert-full").toString
+    val flatDir = Files.createTempDirectory("graft-upsert-flat").toString
     val bucketDir = Files.createTempDirectory("graft-upsert-bucketed").toString
-    val full = drive("full-rewrite",
-      b => UpsertWriter.upsert(spark, b, fullDir, keys),
-      () => UpsertWriter.read(spark, fullDir).get)
-    val bucketed = drive(s"bucketed($numBuckets)",
-      b => BucketedUpsertWriter.upsert(spark, b, bucketDir, keys, numBuckets),
-      () => BucketedUpsertWriter.read(spark, bucketDir).get)
+    def upsertFlat(b: DataFrame): Unit = UpsertWriter.upsert(spark, b, flatDir, keys)
+    def upsertBucketed(b: DataFrame): Unit =
+      UpsertWriter.upsert(spark, b, bucketDir, keys, numBuckets)
+    val flat = drive("1 bucket", upsertFlat, () => UpsertWriter.read(spark, flatDir).get)
+    val bucketed = drive(s"$numBuckets buckets", upsertBucketed,
+      () => UpsertWriter.read(spark, bucketDir).get)
 
-    require(full._3 == bucketed._3,
-      s"content diverged: full=${full._3} bucketed=${bucketed._3}")
+    require(flat._3 == bucketed._3,
+      s"content diverged: 1 bucket=${flat._3} $numBuckets buckets=${bucketed._3}")
     // Idempotency: replaying the last batch must not change the content.
-    BucketedUpsertWriter.upsert(spark, window(nBatches), bucketDir, keys, numBuckets)
-    val replayed = fingerprint(BucketedUpsertWriter.read(spark, bucketDir).get)
+    upsertBucketed(window(nBatches))
+    val replayed = fingerprint(UpsertWriter.read(spark, bucketDir).get)
     require(replayed == bucketed._3, s"bucketed replay not idempotent: $replayed vs ${bucketed._3}")
-    println(f"content identical (rows=${full._3._1}, fp=${full._3._2}); bucketed replay idempotent")
-    println(f"bulk-window regime: bucketed/full per-batch ratio = ${bucketed._2 / full._2}%.2f " +
+    println(f"content identical (rows=${flat._3._1}, fp=${flat._3._2}); bucketed replay idempotent")
+    println(f"bulk-window regime: bucketed/flat per-batch ratio = ${bucketed._2 / flat._2}%.2f " +
       "(a 30k-key batch hash-touches every bucket: pruning cannot engage)")
 
-    // Regime B — TRICKLE upserts, the streaming-sink shape the bucketed
-    // writer exists for: each batch updates the lines of ONE order (one
-    // micro-batch of bars, one late-correction replay). With k distinct
-    // keys over N buckets, E[untouched] = N·(1−1/N)^k — pruning engages
-    // when k ≲ N/3, so the trickle stays at a handful of keys per batch.
+    // Regime B — TRICKLE upserts, the streaming-sink shape buckets exist
+    // for: each batch updates the lines of ONE order (one micro-batch of
+    // bars, one late-correction replay). With k distinct keys over N
+    // buckets, E[untouched] = N·(1−1/N)^k — pruning engages when k ≲ N/3,
+    // so the trickle stays at a handful of keys per batch.
     val trickles = (1 to 10).map(i => li.where(col("l_orderkey") === i * 37L))
     def timeTrickles(apply: DataFrame => Unit): Double = {
       val t0 = System.nanoTime()
       trickles.foreach(apply)
       (System.nanoTime() - t0) / 1e9
     }
-    val tFull = timeTrickles(b => UpsertWriter.upsert(spark, b, fullDir, keys))
-    val tBucket = timeTrickles(b =>
-      BucketedUpsertWriter.upsert(spark, b, bucketDir, keys, numBuckets))
-    val fpF = fingerprint(UpsertWriter.read(spark, fullDir).get)
-    val fpB = fingerprint(BucketedUpsertWriter.read(spark, bucketDir).get)
+    val tFlat = timeTrickles(upsertFlat)
+    val tBucket = timeTrickles(upsertBucketed)
+    val fpF = fingerprint(UpsertWriter.read(spark, flatDir).get)
+    val fpB = fingerprint(UpsertWriter.read(spark, bucketDir).get)
     require(fpF == fpB, s"trickle content diverged: $fpF vs $fpB")
-    println(f"trickle regime (10 batches x ~dozen keys): full=${tFull / 10}%5.2f s/batch, " +
-      f"bucketed=${tBucket / 10}%5.2f s/batch -> ${tFull / tBucket}%.2fx bucketed speedup; content identical")
-
-    // Regime DISPATCH — the same two workloads driven through
-    // UpsertRouter.upsertAuto: the cardinality law must route each to the
-    // sink that won it above, and the routed wall times must reproduce the
-    // direct-writer times (the dispatcher's only overhead is one
-    // approx-distinct pass on a new table's first batch).
-    val routedBulkDir = Files.createTempDirectory("graft-upsert-rbulk").toString
-    val t2 = System.nanoTime()
-    val bulkRoute = operators.UpsertRouter.upsertAuto(
-      spark, initial, routedBulkDir, keys, numBuckets)
-    (1 to nBatches).foreach(i => operators.UpsertRouter.upsertAuto(
-      spark, window(i), routedBulkDir, keys, numBuckets))
-    val tRoutedBulk = (System.nanoTime() - t2) / 1e9
-    require(bulkRoute == operators.UpsertRouter.FullRewrite,
-      s"bulk initial batch routed $bulkRoute, expected FullRewrite")
-    val fpRB = fingerprint(operators.UpsertRouter.read(spark, routedBulkDir).get)
-    require(fpRB == full._3, s"routed bulk content diverged: $fpRB vs ${full._3}")
-
-    val routedTrickleDir = Files.createTempDirectory("graft-upsert-rtrickle").toString
-    // Warehouse shape: bulk seed pinned bucketed by hint, then the trickle
-    // stream routes bucketed by layout stickiness.
-    operators.UpsertRouter.upsertAuto(spark, initial, routedTrickleDir, keys,
-      numBuckets, layoutHint = Some(operators.UpsertRouter.Bucketed))
-    (1 to nBatches).foreach(i => operators.UpsertRouter.upsertAuto(
-      spark, window(i), routedTrickleDir, keys, numBuckets))
-    val t3 = System.nanoTime()
-    val trickleRoutes = trickles.map(b => operators.UpsertRouter.upsertAuto(
-      spark, b, routedTrickleDir, keys, numBuckets))
-    val tRoutedTrickle = (System.nanoTime() - t3) / 1e9
-    require(trickleRoutes.forall(_ == operators.UpsertRouter.Bucketed),
-      s"trickle batches routed ${trickleRoutes.distinct}, expected Bucketed")
-    val fpRT = fingerprint(operators.UpsertRouter.read(spark, routedTrickleDir).get)
-    require(fpRT == fpB, s"routed trickle content diverged: $fpRT vs $fpB")
-    println(f"routed: bulk(initial+$nBatches batches)=$tRoutedBulk%7.2fs via FullRewrite " +
-      f"(direct ${full._1 + full._2}%7.2fs); trickle=${tRoutedTrickle / 10}%5.2f s/batch " +
-      f"via Bucketed (direct ${tBucket / 10}%5.2f); content identical through the router")
+    println(f"trickle regime (10 batches x ~dozen keys): 1 bucket=${tFlat / 10}%5.2f s/batch, " +
+      f"$numBuckets buckets=${tBucket / 10}%5.2f s/batch -> ${tFlat / tBucket}%.2fx bucketed speedup; content identical")
     spark.stop()
   }
 }

@@ -63,19 +63,12 @@ object TextOps {
   def punctCount(text: Column): Column =
     length(regexp_replace(text, "[A-Za-z0-9\\s]", ""))
 
-  def upperCount(text: Column): Column =
-    length(regexp_replace(text, "[^A-Z]", ""))
-
   def nonWsCharCount(text: Column): Column =
     length(regexp_replace(text, "\\s", ""))
 
-  /** Composite quality score in [0,1]: length saturation + stopword density
-    * − punctuation density. The weights mirror common pretraining-data
-    * heuristics. */
-  def qualityScore(text: Column): Column =
-    qualityScoreMilli(text).cast("double") / 1000.0
-
-  /** The same score on a 0–1000 integer scale using ONLY integer arithmetic
+  /** Composite quality score on a 0–1000 integer scale: length saturation
+    * + stopword density − punctuation density, with weights mirroring
+    * common pretraining-data heuristics. ONLY integer arithmetic
     * (no floating point): score components are `(weight * saturated) DIV
     * denominator`. Bit-identical in any engine — rational weights like 0.4
     * frequently land float results exactly on rounding boundaries, where

@@ -53,10 +53,4 @@ object TimeOps {
 
   /** Epoch microseconds; same type-agnosticism contract as [[epochSeconds]]. */
   def epochMicros(c: Column): Column = unix_micros(c.cast("timestamp"))
-
-  /** Floor to an arbitrary epoch-aligned bucket of `seconds` width.
-    * Equivalent of a tumbling-window assignment done as a projection, so it
-    * can be a grouping key without the struct produced by `window()`. */
-  def timeBucket(ts: Column, seconds: Long): Column =
-    timestamp_seconds(floor(unix_timestamp(ts) / seconds) * seconds)
 }

@@ -423,11 +423,12 @@ object Graph {
         if (midKeep != null) midKeep.unpersist(blocking = false)
         throw e
     }
-    // it == 0 (empty seed under a forced-low dispatch threshold): curRdd is
-    // still seedRows — the persisted Row copy — so the uniform branch below
-    // returns it directly instead of rebuilding from `seed`, which was
-    // already unpersisted after seedRows.count() and would force a full
-    // lineage recompute while leaking the persisted seedRows (ADVICE r18).
+    // The one return covers every round count: curRdd is the last round's
+    // persisted output or, when no round ran (it == 0: empty seed under a
+    // forced-low dispatch threshold), seedRows — the persisted Row copy.
+    // Rebuilding from `seed` instead, already unpersisted after
+    // seedRows.count(), would force a full lineage recompute while leaking
+    // the persisted seedRows (ADVICE r18).
     (spark.createDataFrame(curRdd.asInstanceOf[RDD[Row]], edgeSchema), it)
   }
 

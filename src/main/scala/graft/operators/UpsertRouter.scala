@@ -1,113 +1,12 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-/** Regime-dispatching upsert front-end over the two keyed sinks.
-  *
-  * RUNLOG_r12 §5 measured the regimes: partition pruning in
-  * [[BucketedUpsertWriter]] is governed by the batch's distinct-key count
-  * k against the bucket count N — E[touched buckets] = N·(1−(1−1/N)^k) —
-  * and only engages when the expected touched fraction stays under ~1/3.
-  * A trickle batch (streaming micro-batch, one order's lines) touches 1–2
-  * of 32 buckets and ran 3× faster than full rewrite on a 4.5M-row table;
-  * a bulk re-ingest window hash-touches every bucket, pays the bucketed
-  * sink's staging/bookkeeping for zero pruning, and the plain
-  * [[UpsertWriter]] won that regime 1.6×. The runlog's conclusion — "pick
-  * the sink by batch-key cardinality, not by taste" — is this object.
-  *
-  * Layout is a TABLE property, not a batch property: the two sinks'
-  * on-disk formats differ (per-bucket generation dirs + META vs one flat
-  * generation dir), so the routing decision is made ONCE, when the table
-  * is first written, and every later batch follows the table's existing
-  * layout regardless of its own shape (a bucketed table absorbs an
-  * occasional bulk batch correctly — one write job covering all buckets —
-  * it just forgoes pruning for that batch; flip-flopping layouts per batch
-  * would need a full migration per flip). Callers that know their steady-
-  * state workload up front (bulk seed, then a trickle stream — the classic
-  * warehouse shape) pass `layoutHint` to pin the layout at creation
-  * instead of letting an unrepresentative first batch decide.
-  *
-  * The dispatch optimizes for AT-SCALE behavior: pruning saves O(table)
-  * read+write per batch, so the bucketed trickle win grows linearly with
-  * table size (3× at the 4.5M-row sf1 drill) while at toy tables the
-  * full rewrite can still edge it out on fixed bookkeeping — routing a
-  * trickle stream bucketed is the right call for every table that will
-  * ever be big, which is the design target.
-  *
-  * The first-batch cardinality estimate uses `approx_count_distinct`
-  * (single-pass, map-combinable, ~2 % rsd): the decision compares
-  * E[touched] against a N/3 threshold, where ±2 % on k moves nothing, and
-  * an exact distinct would pay a full exchange of the batch's keys just to
-  * sharpen a one-time heuristic.
-  */
+/** Forwarding alias of [[UpsertWriter.read]]. The benchmark harness under
+  * `perfbench/harness/` reads warehouse tables through this name and is
+  * built unchanged against every revision it compares, so the name stays;
+  * program and test code call [[UpsertWriter.read]] directly. */
 object UpsertRouter {
-  sealed trait Route
-  case object Bucketed extends Route
-  case object FullRewrite extends Route
-
-  /** The layout an existing table at `tableDir` already has, if any.
-    * Bucketed tables are recognized by their META pin (written on first
-    * bucketed upsert); flat tables by a CURRENT pointer without META. */
-  def existingRoute(tableDir: String): Option[Route] = {
-    val dir = Paths.get(tableDir)
-    if (Files.exists(dir.resolve("META"))) Some(Bucketed)
-    else if (Files.exists(dir.resolve("CURRENT"))) Some(FullRewrite)
-    else None
-  }
-
-  /** The measured regime law: route bucketed iff the expected touched
-    * bucket count for a k-distinct-key batch leaves pruning engaged
-    * (E[touched] = N·(1−(1−1/N)^k) ≤ N/3 ⇔ k ≲ 0.4·N). */
-  def decideByKeys(batchKeys: Long, numBuckets: Int): Route = {
-    val n = numBuckets.toDouble
-    val expectedTouched = n * (1.0 - math.pow(1.0 - 1.0 / n, batchKeys.toDouble))
-    if (expectedTouched <= n / 3.0) Bucketed else FullRewrite
-  }
-
-  /** Upserts `updates` into `tableDir` keyed by `keys`, choosing the sink
-    * by the regime law (new table) or the table's existing layout (all
-    * later batches). Returns the route taken so callers/specs can assert
-    * the dispatch. Semantics through either route are identical:
-    * last-write-wins per key, idempotent on replay. */
-  def upsertAuto(spark: SparkSession, updates: DataFrame, tableDir: String,
-                 keys: Seq[String], numBuckets: Int = 32,
-                 retainMillis: Long = 60000L,
-                 layoutHint: Option[Route] = None): Route = {
-    require(keys.nonEmpty, "upsertAuto needs at least one key column")
-    // The batch feeds the cardinality estimate AND the chosen writer's
-    // 1-2 consumptions — cache unless the caller already has (their cache
-    // is not ours to drop; BucketedUpsertWriter sees ours and skips its
-    // own).
-    val weCache = updates.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    val batch = if (weCache)
-      updates.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else updates
-    try {
-      val route = existingRoute(tableDir)
-        .orElse(layoutHint)
-        .getOrElse {
-          val k = batch.agg(approx_count_distinct(struct(keys.map(col): _*)))
-            .head().getLong(0)
-          decideByKeys(k, numBuckets)
-        }
-      route match {
-        case Bucketed =>
-          BucketedUpsertWriter.upsert(spark, batch, tableDir, keys,
-            numBuckets, retainMillis)
-        case FullRewrite =>
-          UpsertWriter.upsert(spark, batch, tableDir, keys, retainMillis)
-      }
-      route
-    } finally if (weCache) batch.unpersist(blocking = false)
-  }
-
-  /** Reads the current snapshot whichever layout the table has. */
   def read(spark: SparkSession, tableDir: String): Option[DataFrame] =
-    existingRoute(tableDir) match {
-      case Some(Bucketed) => BucketedUpsertWriter.read(spark, tableDir)
-      case Some(FullRewrite) => UpsertWriter.read(spark, tableDir)
-      case None => None
-    }
+    UpsertWriter.read(spark, tableDir)
 }

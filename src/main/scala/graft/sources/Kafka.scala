@@ -3,7 +3,6 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.streaming.Bars
 
 /** Kafka ingestion source (the streaming sibling of [[Rest]] — the
   * reference's collector loop `src/collectors/trades_collector.py:24-48`
@@ -107,13 +106,4 @@ object Kafka {
         timestamp_millis(col("t.time")).as("trade_time"),
         col("t.isBuyerMaker").as("is_buyer_maker"),
         col("t.isBestMatch").as("is_best_match"))
-
-  /** The full feed: kafka records → parsed trades → watermarked 1-minute
-    * OHLCV bars, ready for `Bars.upsertingWriter`. */
-  def barsStream(spark: SparkSession, cfg: Config,
-                 watermark: String = "2 minutes"): DataFrame =
-    Bars.oneMinuteBars(
-      parseTrades(readStream(spark, cfg))
-        .select("symbol", "trade_time", "price", "qty"),
-      watermark)
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 import org.apache.spark.sql.Row
-import graft.operators.{BucketedUpsertWriter, UpsertWriter}
+import graft.operators.UpsertWriter
 
 /** Structured Streaming layer (§2.9): supersedes the reference's polling
   * loops with a real micro-batch pipeline — trades stream → watermarked
@@ -37,76 +37,35 @@ object Bars {
         col("volume"), col("num_trades"))
 
   /** Streaming writer: each micro-batch upserts its bars by primary key —
-    * the K4 `ON CONFLICT DO UPDATE` contract in foreachBatch form.
-    * `trigger` defaults to the production 5 s cadence; tests and soak runs
-    * pass `Trigger.AvailableNow`/zero-interval to drive batches back to
-    * back. */
-  def upsertingWriter(bars: DataFrame, tableDir: String,
-                      checkpointDir: String,
-                      trigger: Trigger = Trigger.ProcessingTime("5 seconds")): DataStreamWriter[Row] =
-    bars.writeStream
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // Per-trigger upserts write one table generation each: a short
-        // retention (one trigger interval) still covers in-flight readers
-        // while keeping at most ~2 superseded copies on disk, where the
-        // 60 s default would accumulate ~12 at this cadence.
-        UpsertWriter.upsert(batch.sparkSession, batch, tableDir,
-          Seq("symbol", "tf", "open_time"), retainMillis = 5000L)
-      }
-
-  /** The scale variant of [[upsertingWriter]]: each micro-batch rewrites
-    * only the key-hash buckets its bars fall into, so the per-trigger sink
-    * cost tracks the batch's key spread instead of the table's size (the
-    * full-rewrite sink degrades linearly as the bar table grows). Same
-    * idempotent last-write-wins contract. */
-  def bucketedUpsertingWriter(bars: DataFrame, tableDir: String,
-                              checkpointDir: String,
-                              numBuckets: Int = 32,
-                              trigger: Trigger = Trigger.ProcessingTime("5 seconds")): DataStreamWriter[Row] =
-    bars.writeStream
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        BucketedUpsertWriter.upsert(batch.sparkSession, batch, tableDir,
-          Seq("symbol", "tf", "open_time"), numBuckets, retainMillis = 5000L)
-      }
-
-  /** Regime-routed variant: each micro-batch goes through
-    * [[graft.operators.UpsertRouter.upsertAuto]]; the table layout is
-    * decided once and every later trigger follows the table — the
-    * sink-selection decision the r12 upsert drill left to the caller.
+    * the K4 `ON CONFLICT DO UPDATE` contract in foreachBatch form — into a
+    * table of `numBuckets` key-hash buckets ([[UpsertWriter]]).
     *
-    * For STREAMING the layout defaults to a pinned `Bucketed` hint rather
-    * than first-batch cardinality sniffing (ADVICE-r13): a streaming sink
-    * is by definition a long-lived, growing table fed by bounded
-    * micro-batches — the regime where pruning's O(table) per-trigger win
-    * only grows — while the first trigger is the LEAST representative
-    * batch a stream ever produces (a restart against an accumulated
-    * file-source backlog replays the whole backlog as one bulk-shaped
-    * batch, which would pin FullRewrite on a steady-state trickle stream
-    * forever; and near the regime knee the estimator's ~2 % rsd would
-    * make the permanent layout a coin flip). A bucketed table absorbs an
-    * occasional bulk batch correctly — it just forgoes pruning for that
-    * batch. Pass `layoutHint = Some(FullRewrite)` for a table that stays
-    * small forever, or `None` to opt back into first-batch sniffing. */
+    * `numBuckets` defaults to 32 (ADVICE-r13): a streaming sink is by
+    * definition a long-lived, growing table fed by bounded micro-batches —
+    * the regime where pruning's O(table) per-trigger win only grows — and
+    * the bucket count is fixed when the table is created, while the first
+    * trigger is the LEAST representative batch a stream ever produces (a
+    * restart against an accumulated backlog replays it as one bulk-shaped
+    * batch). A bucketed table absorbs an occasional bulk batch correctly —
+    * it just forgoes pruning for that batch. Pass `numBuckets = 1` for a
+    * table that stays small forever. `trigger` defaults to the production
+    * 5 s cadence; tests and soak runs pass `Trigger.AvailableNow`/zero-
+    * interval to drive batches back to back. The name predates the one
+    * writer and stays because the benchmark harness calls it. */
   def autoUpsertingWriter(bars: DataFrame, tableDir: String,
                           checkpointDir: String,
                           numBuckets: Int = 32,
-                          layoutHint: Option[graft.operators.UpsertRouter.Route] =
-                            Some(graft.operators.UpsertRouter.Bucketed),
                           trigger: Trigger = Trigger.ProcessingTime("5 seconds")): DataStreamWriter[Row] =
     bars.writeStream
       .outputMode(OutputMode.Update)
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.UpsertRouter.upsertAuto(batch.sparkSession, batch,
-          tableDir, Seq("symbol", "tf", "open_time"), numBuckets,
-          retainMillis = 5000L, layoutHint = layoutHint)
-        () // DataStreamWriter's foreachBatch wants Unit, not the Route
+        // Per-trigger upserts write one generation per touched bucket: a
+        // short retention (one trigger interval) still covers in-flight
+        // readers while keeping at most ~2 superseded copies on disk, where
+        // the 60 s default would accumulate ~12 at this cadence.
+        UpsertWriter.upsert(batch.sparkSession, batch, tableDir,
+          Seq("symbol", "tf", "open_time"), numBuckets, retainMillis = 5000L)
       }
 }

@@ -48,6 +48,26 @@ class GraftSessionSpec extends AnyFunSuite {
     }
   }
 
+  test("a context without the static confs fails the post-create check") {
+    // A SparkConf built without Kryo stands in for a pre-existing session
+    // (a shell, a test-order leak) that getOrCreate would hand back as is.
+    val withoutKryo = new org.apache.spark.SparkConf(false)
+      .set("spark.shuffle.sort.bypassMergeThreshold", "0")
+    val ex = intercept[IllegalStateException] {
+      GraftSession.checkStaticConfs(withoutKryo)
+    }
+    assert(ex.getMessage.contains("spark.serializer=<unset>"))
+    assert(!ex.getMessage.contains("bypassMergeThreshold"))
+    val bypass = withoutKryo.clone()
+      .set("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
+      .set("spark.shuffle.sort.bypassMergeThreshold", "200")
+    assert(intercept[IllegalStateException] {
+      GraftSession.checkStaticConfs(bypass)
+    }.getMessage.contains("bypassMergeThreshold=200"))
+    // The shared test session carries them, so the check passes on it.
+    GraftSession.checkStaticConfs(SparkTestSession.spark.sparkContext.getConf)
+  }
+
   test("SPARK_GRAFT_CONF_ env passthrough translates underscores to dots") {
     // applyEnvConfs reads the real environment (can't be injected without
     // widening the API for tests only); assert the translation contract on

@@ -105,6 +105,14 @@ class OperatorSpecs extends AnyFunSuite {
     UpsertWriter.upsert(spark, Seq((2, 99.0), (3, 30.0)).toDF("k", "v"), dir, Seq("k"))
     val again = UpsertWriter.read(spark, dir).get.orderBy("k").as[(Int, Double)].collect().toSeq
     assert(again == got)
+    // One bucket is the flat layout: CURRENT names one generation dir at
+    // the table root; no META, no b=<n> bucket dirs.
+    val root = java.nio.file.Paths.get(dir)
+    val current = java.nio.file.Files.readString(root.resolve("CURRENT")).trim
+    assert(current.matches("gen-\\d+-\\d+"), s"CURRENT is not one generation: $current")
+    assert(java.nio.file.Files.isDirectory(root.resolve(current)))
+    assert(!java.nio.file.Files.exists(root.resolve("META")))
+    assert(!root.toFile.list().exists(_.startsWith("b=")))
   }
 
   test("concurrent upserts to one table cannot lose a generation") {

@@ -112,7 +112,8 @@ class BarsSpec extends AnyFunSuite {
     val stream = spark.readStream.schema(trades.schema)
       .parquet(src.toString + "/*")
       .select("symbol", "trade_time", "price", "qty")
-    val q = Bars.upsertingWriter(Bars.oneMinuteBars(stream), table, ckpt).start()
+    val q = Bars.autoUpsertingWriter(Bars.oneMinuteBars(stream), table, ckpt,
+      numBuckets = 1).start()
     try { q.processAllAvailable() } finally { q.stop() }
 
     val got = UpsertWriter.read(spark, table).get
@@ -128,51 +129,47 @@ class BarsSpec extends AnyFunSuite {
 
   test("bucketed streaming sink matches the full-rewrite sink's table state") {
     val src = Files.createTempDirectory("bstream-src")
-    val table = Files.createTempDirectory("bbar-table").toString
-    val ckpt = Files.createTempDirectory("bckpt").toString
     val trades = Synthetic.syntheticTrades(spark, "AAA", 300, 1704067200L)
     trades.write.mode("overwrite").parquet(src.toString + "/batch1")
 
     val stream = spark.readStream.schema(trades.schema)
       .parquet(src.toString + "/*")
       .select("symbol", "trade_time", "price", "qty")
-    val q = Bars.bucketedUpsertingWriter(
-      Bars.oneMinuteBars(stream), table, ckpt, numBuckets = 8).start()
-    try { q.processAllAvailable() } finally { q.stop() }
-
-    val got = graft.operators.BucketedUpsertWriter.read(spark, table).get
+    // The same stream into an 8-bucket and a 1-bucket table.
+    val tables = Seq(8, 1).map { n =>
+      val table = Files.createTempDirectory(s"bbar-table-$n").toString
+      val ckpt = Files.createTempDirectory(s"bckpt-$n").toString
+      val q = Bars.autoUpsertingWriter(
+        Bars.oneMinuteBars(stream), table, ckpt, numBuckets = n).start()
+      try { q.processAllAvailable() } finally { q.stop() }
+      UpsertWriter.read(spark, table).get.collect().map(_.toString).sorted.toSeq
+    }
+    assert(tables(0) == tables(1), "8-bucket table diverged from the 1-bucket table")
     val expected = Bars.oneMinuteBars(trades.select("symbol", "trade_time", "price", "qty"))
-    assert(got.count() == expected.count())
-    val g1 = got.orderBy("open_time").select("open", "high", "low", "close", "volume")
-      .as[(Double, Double, Double, Double, Double)].head()
-    val e1 = expected.orderBy("open_time").select("open", "high", "low", "close", "volume")
-      .as[(Double, Double, Double, Double, Double)].head()
-    assert(g1 == e1)
+      .collect().map(_.toString).sorted.toSeq
+    assert(tables(0) == expected)
   }
 
-  test("auto-routed streaming sink: default hint pins bucketed even for a bulk-shaped first batch") {
+  test("default streaming sink is 32-bucketed even for a bulk-shaped first batch") {
     val src = Files.createTempDirectory("astream-src")
     val table = Files.createTempDirectory("abar-table").toString
     val ckpt = Files.createTempDirectory("ackpt").toString
     // A full hour of trades in ONE file = the restart-against-accumulated-
     // backlog shape: the first trigger replays ~60 bar keys as one bulk
-    // batch, which first-batch SNIFFING would route FullRewrite — pinning
-    // a steady-state trickle stream to the wrong layout forever
-    // (ADVICE-r13). The streaming writer's default Bucketed hint must win.
+    // batch. The bucket count is the writer's, not the batch's: the table
+    // is created with the streaming default of 32 (ADVICE-r13).
     val trades = Synthetic.syntheticTrades(spark, "AAA", 3600, 1704067200L)
     trades.write.mode("overwrite").parquet(src.toString + "/batch1")
 
     val stream = spark.readStream.schema(trades.schema)
       .parquet(src.toString + "/*")
       .select("symbol", "trade_time", "price", "qty")
-    val q = Bars.autoUpsertingWriter(
-      Bars.oneMinuteBars(stream), table, ckpt, numBuckets = 32).start()
+    val q = Bars.autoUpsertingWriter(Bars.oneMinuteBars(stream), table, ckpt).start()
     try { q.processAllAvailable() } finally { q.stop() }
 
-    assert(graft.operators.UpsertRouter.existingRoute(table)
-      .contains(graft.operators.UpsertRouter.Bucketed),
-      "bulk first batch must not override the streaming default Bucketed hint")
-    val got = graft.operators.UpsertRouter.read(spark, table).get
+    assert(Files.readString(java.nio.file.Paths.get(table, "META"))
+      .contains("numBuckets=32"), "bulk first batch must not change the bucket count")
+    val got = UpsertWriter.read(spark, table).get
     val expected = Bars.oneMinuteBars(trades.select("symbol", "trade_time", "price", "qty"))
     assert(got.count() == expected.count())
     val g1 = got.orderBy("open_time").select("open", "high", "low", "close", "volume")
@@ -180,25 +177,5 @@ class BarsSpec extends AnyFunSuite {
     val e1 = expected.orderBy("open_time").select("open", "high", "low", "close", "volume")
       .as[(Double, Double, Double, Double, Double)].head()
     assert(g1 == e1)
-  }
-
-  test("auto-routed streaming sink: layoutHint=None opts back into first-batch sniffing") {
-    val src = Files.createTempDirectory("sstream-src")
-    val table = Files.createTempDirectory("sbar-table").toString
-    val ckpt = Files.createTempDirectory("sckpt").toString
-    // 300 s of one symbol = ~5 bar keys: trickle-shaped, the estimator
-    // itself must route bucketed (the bulk→FullRewrite sniffing leg is
-    // covered batch-side in UpsertRouterSpec).
-    val trades = Synthetic.syntheticTrades(spark, "AAA", 300, 1704067200L)
-    trades.write.mode("overwrite").parquet(src.toString + "/batch1")
-    val stream = spark.readStream.schema(trades.schema)
-      .parquet(src.toString + "/*")
-      .select("symbol", "trade_time", "price", "qty")
-    val q = Bars.autoUpsertingWriter(Bars.oneMinuteBars(stream), table, ckpt,
-      numBuckets = 32, layoutHint = None).start()
-    try { q.processAllAvailable() } finally { q.stop() }
-    assert(graft.operators.UpsertRouter.existingRoute(table)
-      .contains(graft.operators.UpsertRouter.Bucketed),
-      "trickle first batch under sniffing should route bucketed")
   }
 }

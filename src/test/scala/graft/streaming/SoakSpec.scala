@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 import graft.{LargeScale, SparkTestSession}
-import graft.operators.BucketedUpsertWriter
+import graft.operators.UpsertWriter
 import graft.sources.Kafka
 
 /** End-to-end streaming SOAK (opt-in, like LargeScaleSpec):
@@ -53,7 +53,7 @@ class SoakSpec extends AnyFunSuite {
     val table = Files.createTempDirectory("soak-bars").toString
     val ckptA = Files.createTempDirectory("soak-ckpt-a").toString
     val ckptB = Files.createTempDirectory("soak-ckpt-b").toString
-    val barsQ = Bars.bucketedUpsertingWriter(
+    val barsQ = Bars.autoUpsertingWriter(
       Bars.oneMinuteBars(parsed(barsFeed)), table, ckptA,
       numBuckets = 8, trigger = Trigger.ProcessingTime(0L)).start()
     val cms = StreamSketch.windowedCms(parsed(cmsFeed), "symbol", "trade_time",
@@ -105,7 +105,7 @@ class SoakSpec extends AnyFunSuite {
         sent.toSeq.toDF("key", "value"))
       val want = Bars.oneMinuteBars(batchTrades)
         .collect().map(_.toString).sorted
-      val got = BucketedUpsertWriter.read(spark, table).get
+      val got = UpsertWriter.read(spark, table).get
         .collect().map(_.toString).sorted
       assert(got.length == want.length && got.sameElements(want),
         s"sink diverged from batch parity: ${got.length} vs ${want.length} bars")
@@ -159,7 +159,7 @@ class SoakSpec extends AnyFunSuite {
       .schema("key binary, value binary")
       .option("maxFilesPerTrigger", 1) // one dump segment = one micro-batch
       .parquet(dumpDir.toString)
-    val q = Bars.bucketedUpsertingWriter(
+    val q = Bars.autoUpsertingWriter(
       Bars.oneMinuteBars(Kafka.parseTrades(stream)), table, ckpt,
       numBuckets = 8, trigger = Trigger.ProcessingTime(0L)).start()
     try {
@@ -167,7 +167,7 @@ class SoakSpec extends AnyFunSuite {
       val want = Bars.oneMinuteBars(
           Kafka.parseTrades(sent.toSeq.toDF("key", "value")))
         .collect().map(_.toString).sorted
-      val got = BucketedUpsertWriter.read(spark, table).get
+      val got = UpsertWriter.read(spark, table).get
         .collect().map(_.toString).sorted
       assert(got.length == want.length && got.sameElements(want),
         s"topic-dump replay diverged from batch parity: ${got.length} vs ${want.length}")
@@ -207,7 +207,7 @@ class SoakSpec extends AnyFunSuite {
 
     val table = Files.createTempDirectory("soak-restart-bars").toString
     val ckpt = Files.createTempDirectory("soak-restart-ckpt").toString
-    def startQuery() = Bars.autoUpsertingWriter( // the routed sink, default Bucketed pin
+    def startQuery() = Bars.autoUpsertingWriter(
       Bars.oneMinuteBars(Kafka.parseTrades(
         spark.readStream.schema("key binary, value binary")
           .option("maxFilesPerTrigger", 1)
@@ -237,7 +237,7 @@ class SoakSpec extends AnyFunSuite {
       val want = Bars.oneMinuteBars(
           Kafka.parseTrades(sent.toSeq.toDF("key", "value")))
         .collect().map(_.toString).sorted
-      val got = graft.operators.UpsertRouter.read(spark, table).get
+      val got = UpsertWriter.read(spark, table).get
         .collect().map(_.toString).sorted
       assert(got.length == want.length && got.sameElements(want),
         s"restart diverged from batch parity: ${got.length} vs ${want.length} bars")
