@@ -47,16 +47,13 @@ object GraftSession {
     // Kryo for RDD shuffle/broadcast payloads (SQL exchanges use the
     // UnsafeRow serializer regardless — this reaches RDD shuffles,
     // persist spills, checkpoints and broadcasts app-wide, e.g. the CC
-    // round loops, dedup's BloomFilter broadcast, ScanOps' persisted
-    // Option[Double] rows; validated on the CC family + the full test
-    // suite). Measured on the CC contraction at 1M edges (r18): the
-    // RDD rounds' (Long, Long) shuffles under the default JavaSerializer
-    // ran ~25% SLOWER than the old Catalyst rounds; under Kryo they run
-    // ~30% FASTER (warm A/B 22.7 s vs 32.8 s). Kryo therefore moves the
-    // RDD/Catalyst round crossover UP (1.1M edges favors the RDD engine
-    // with it) — it does NOT make RDD rounds win everywhere: Graph.scala's
-    // measured 4.4M-edge point still runs ~1.7× faster on the Catalyst
-    // engine, which is why the catalystRoundsMinEdges dispatcher exists.
+    // rounds' primitive-block shuffles, dedup's BloomFilter broadcast,
+    // ScanOps' persisted Option[Double] rows; validated on the CC family
+    // + the full test suite). Measured on the CC contraction at 1M edges
+    // (r18, when its RDD rounds still shuffled one boxed (Long, Long) per
+    // edge): under the default JavaSerializer those rounds ran ~25% SLOWER
+    // than the Catalyst rounds of the time, under Kryo ~30% FASTER (warm
+    // A/B 22.7 s vs 32.8 s).
     // Takes effect at SparkContext creation, so it must ride the builder,
     // not a post-hoc conf.set.
     "spark.serializer" -> "org.apache.spark.serializer.KryoSerializer",

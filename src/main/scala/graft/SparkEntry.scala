@@ -514,7 +514,7 @@ object SparkEntry {
     // Document fingerprinting via custom rolling-hash expression
     // (oracled via HUGEINT polynomial-mod arithmetic in DuckDB).
     "q49_rolling_hash" -> ((s, d) => {
-      Expressions.register(s)
+      Expressions.ensureRegistered(s)
       t(s, d, "documents").select(col("doc_id"),
           Expressions.rollingHash(col("text")).as("rhash"))
         .orderBy(col("doc_id"))

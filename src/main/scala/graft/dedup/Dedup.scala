@@ -1064,7 +1064,7 @@ object Dedup {
   /** SimHash per doc (custom Catalyst expression — single projection pass,
     * no shuffle) plus the band columns used for Hamming-bucket joins. */
   def withSimhash(df: DataFrame, textCol: String, out: String = "simhash"): DataFrame = {
-    Expressions.register(df.sparkSession)
+    Expressions.ensureRegistered(df.sparkSession)
     graft.operators.Spread(df)
       .withColumn(out, Expressions.simhash64(TextOps.tokens(col(textCol))))
   }

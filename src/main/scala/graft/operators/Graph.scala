@@ -1,12 +1,13 @@
 package graft.operators
 
-import org.apache.spark.HashPartitioner
+import org.apache.spark.Partitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.XxHash64Function
+import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
+
+import scala.collection.mutable
 
 /** Distributed connected components — the dedup-cluster resolver: near-dup
   * candidate PAIRS (MinHash/SimHash/Jaccard output) become duplicate GROUPS,
@@ -23,242 +24,358 @@ import org.apache.spark.storage.StorageLevel
   *
   * The fixpoint is a forest of stars rooted at each component's min id.
   *
-  * TWO round engines run the identical contraction algebra, dispatched on
-  * the MEASURED initial edge count (r18 optimization):
+  * One round engine: RDD rounds over PRIMITIVE pair blocks — no Catalyst
+  * re-planning per iteration (0.25-0.45 s a round at any size) and no
+  * `Tuple2` per edge. Each star is ONE shuffle: map tasks write
+  * `(key, other)` rows as interleaved `Array[Long]` runs, one per reducer;
+  * a reducer sorts its rows by (key, other) and drops adjacent duplicates,
+  * so every node's neighbors form one ascending run whose first element is
+  * the neighborhood minimum, and the star emits in that same scan. The
+  * loop state is the large-star side of that shuffle — each node's sorted,
+  * duplicate-free symmetric adjacency — which a round persists and the
+  * stats, the next large star and the final labels read. Small-star rows
+  * are keyed by their larger endpoint, so a group there is exactly Γ≤(u).
   *
-  *  - **RDD rounds** (edge count < `spark.graft.cc.catalystRoundsMinEdges`,
-  *    default 2e6): raw (Long, Long) transforms, zero Catalyst work per
-  *    iteration. A Catalyst round re-enters planning every iteration —
-  *    measured 0.25-0.45 s per round plan at ANY data size (`df.rdd`'s
-  *    RDD-DAG construction is dominated by ClosureCleaner serializing each
-  *    operator closure's captured plan state, plus a second
-  *    `rddQueryExecution` pass and a Row-deserialization stage) — ~1-1.5 s
-  *    of pure driver time per CC query, which DOMINATES small-graph calls:
-  *    A/B on the q65 graph (9k candidate edges) read 4.9-6.2 s (Catalyst
-  *    rounds) vs 1.2-2.4 s (RDD rounds) for bit-identical labels.
-  *  - **Catalyst rounds** (edge count ≥ the threshold): the pre-r18 loop,
-  *    unchanged — whole-stage-codegen'd stars over compact UnsafeRows. At
-  *    large edge counts the per-round shuffle/processing efficiency beats
-  *    the planning overhead: measured at 4.4M chain+star edges the
-  *    Catalyst rounds run ~1.7× FASTER than the RDD rounds (72.8 s vs
-  *    122.1 s warm) even with Kryo shuffle serialization, while at 1.1M
-  *    edges the two cross (22.7 s vs 32.8 s in the RDD rounds' favor).
-  *    The threshold conf is deliberately below the measured crossover
-  *    band's upper end so the big-data regime always gets the engine
-  *    whose cost grows slower in bytes.
-  *
-  * Both engines share ONE seed materialization (typed tuple decode of the
-  * cleaned edges — no Row boxing) whose single job also computes the
-  * convergence stats, and one final label derivation; the convergence
-  * checksum is the same bit_xor(xxhash64(src, dst)) in both (the RDD
-  * rounds call Spark's own XxHash64 kernel), so the stats are
-  * interchangeable across the dispatch.
-  *
-  * Scale design, per round (same shapes in both engines):
-  *  - The per-node neighborhood minimum is a map-side-combined
-  *    (min, degree) aggregate JOINED back to the edges — never a
-  *    whole-partition window min. A window partition is one unsplittable
-  *    task, and the root of a giant duplicate cluster (the common dedup
-  *    degeneracy) has degree ≈ cluster size, so a window would serialize
-  *    one cluster-sized task per round. The aggregate reduces each map
-  *    partition to one row per node before its shuffle, so the agg itself
-  *    never concentrates a hot key.
-  *  - The join back is HOT/COLD split (AQE's skew-join rule cannot match
-  *    this join shape — verified empirically): the degree of every node
-  *    comes out of the SAME aggregate for free; nodes above `hotDegree`
-  *    resolve map-side via a broadcast of the (few) hot mins — their edge
-  *    rows never shuffle, so a 10⁸-degree cluster root costs zero
-  *    reducer-side concentration. At most 2·|E|/hotDegree hot nodes can
-  *    exist, so the broadcast is small by construction; cold srcs take the
-  *    ordinary shuffle join, whose per-key row count is ≤ hotDegree by
-  *    construction.
-  *  - ONE blocking action per fused round pair for the convergence signal:
-  *    both halves' edge sets materialize inside the same job that computes
-  *    it (edge count + checksum) — no separate checkpoint-then-count pair.
-  *    Caveat (mirrors the old broadcast-job note): in the RDD engine's hot
-  *    regime (round edge count > hotDegree) each minJoin(Some(t)) runs an
-  *    eager collectAsMap() driver job at DAG-construction time to build
-  *    the hot-min broadcast — 4 extra blocking jobs per fused pair, each
-  *    bounded by the 2·|E|/hotDegree map. The Catalyst engine builds the
-  *    same map via a BroadcastExchange inside the round plan instead.
-  *  - The superseded round's RDD is unpersisted DETERMINISTICALLY as soon as
-  *    its successor is materialized — memory use is 2 edge sets, not
-  *    O(rounds). If `sparkContext.setCheckpointDir` is configured, each
-  *    round additionally checkpoints RELIABLY (one extra cache-fed job per
-  *    round), so executor loss recovers from storage instead of replaying
-  *    the contraction from scratch.
-  *  - Shuffle partition counts are re-sized each round from the previous
-  *    round's exact edge count (contraction shrinks the set every round),
-  *    capped at the caller's `spark.sql.shuffle.partitions` — cluster-scale
-  *    inputs keep full parallelism, tail rounds stop paying empty-task
-  *    overhead. The caller's session confs are never touched (the Catalyst
-  *    rounds plan on a child session; the RDD rounds plan nothing).
+  * Scale design, per round:
+  *  - HOT keys are SALTED: a node with more than `hotDegree` rows in a star
+  *    (a giant duplicate cluster's root has degree ≈ cluster size) routes
+  *    its rows by (key, other), so its edges spread over every reducer while
+  *    duplicates still meet, and its minimum is folded from the slice minima
+  *    into a small map the next step's tasks carry. The salted set is a
+  *    shuffle-free superset of the hot nodes: a node with more than
+  *    hotDegree rows over P partitions has more than hotDegree/P in one of
+  *    them, so each partition reports its locally heavy keys (at most
+  *    2·|E|·P/hotDegree). A salted cold key is merely spread, never wrong.
+  *  - Hot rounds cost narrow driver jobs: the seed job reports the first
+  *    star's heavy keys, then each star's grouped output is persisted and
+  *    scanned once for its slice minima and the next star's heavy keys — 3
+  *    jobs per fused pair (4 in the first). None run when the round's TOTAL
+  *    edge count is ≤ hotDegree, which proves no node can be hot
+  *    (contraction never grows the edge set).
+  *  - ONE blocking action per fused round pair: two large/small-star
+  *    alternations run inside the job that collects both halves' (edge
+  *    count, checksum), the intermediate state read back from cache, so the
+  *    fixpoint is detected at the exact round it happens.
+  *  - Superseded rounds are unpersisted DETERMINISTICALLY once their
+  *    successor is materialized (memory: 2 edge sets, not O(rounds)). With
+  *    `sparkContext.setCheckpointDir` set, each round also checkpoints
+  *    RELIABLY (one extra cache-fed job), so executor loss recovers from
+  *    storage instead of replaying the contraction.
+  *  - Reducer counts are re-sized each round from the previous round's
+  *    exact edge count, capped at the caller's `spark.sql.shuffle.partitions`.
+  *    The caller's session confs are never touched.
   *
   * Non-convergence is an ERROR: if `maxIters` rounds don't reach the
   * fixpoint the call throws instead of silently returning labels that are
-  * not connected components. (log₂-style contraction makes the default
-  * bound generous: 30 rounds cover any graph a 64-bit id space can hold.)
+  * not connected components (30 rounds cover any 64-bit id space).
   *
-  * Convergence detection is PROBABILISTIC in both engines: rounds are
-  * declared equal on (count, bit_xor(xxhash64(src, dst))) — a 64-bit
-  * checksum collision between two DIFFERENT equal-count edge sets would
-  * terminate a pair early and return non-component labels. Accepted risk
-  * (~2⁻⁶⁴ per round pair); an exact comparison would cost a join per
+  * Convergence detection is PROBABILISTIC: rounds are declared equal on
+  * (count, bit_xor(xxhash64(src, dst))) over each round's edges oriented
+  * (larger, smaller), the value Spark SQL's `xxhash64` computes. A 64-bit
+  * collision between two different equal-count edge sets would end a pair
+  * early (~2⁻⁶⁴ per pair); an exact comparison would cost a join per
   * round, and the oracle gate re-verifies every CC consumer's labels.
   */
 object Graph {
 
-  private type Edge = (Long, Long)
-
-  private val edgeSchema = StructType(Seq(
-    StructField("src", LongType, nullable = false),
-    StructField("dst", LongType, nullable = false)))
+  /** Rows as interleaved longs: (k0, o0, k1, o1, …). */
+  private type Pairs = Array[Long]
+  /** Primitive-keyed node sets (value unused) and node → minimum maps. */
+  private type Nodes = mutable.LongMap[Long]
 
   private val tupleEnc =
     Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
 
-  /** One partition's convergence contribution: (row count, bit_xor of
-    * xxhash64(src, dst)) — the SAME function the Catalyst rounds compute
-    * in SQL (XxHash64 folds fields left-to-right from seed 42), so stats
-    * from either engine are directly comparable. */
-  private def statPart(it: Iterator[Edge]): (Long, Long) = {
-    var n = 0L; var x = 0L
-    while (it.hasNext) {
-      val p = it.next(); n += 1
-      x ^= XxHash64Function.hash(p._2, LongType,
-        XxHash64Function.hash(p._1, LongType, 42L))
+  private val confKeys =
+    Set("spark.sql.shuffle.partitions", "spark.graft.cc.rowsPerPartition")
+
+  /** Murmur3's 64-bit finalizer: spreads sequential ids over reducers. */
+  private def mix(k: Long): Long = {
+    var h = (k ^ (k >>> 33)) * 0xff51afd7ed558ccdL
+    h = (h ^ (h >>> 33)) * 0xc4ceb9fe1a85ec53L
+    h ^ (h >>> 33)
+  }
+
+  private def home(k: Long, parts: Int): Int = ((mix(k) >>> 1) % parts).toInt
+
+  /** xxhash64(src, dst) exactly as Spark SQL folds it (seed 42). */
+  private def edgeHash(src: Long, dst: Long): Long =
+    XXH64.hashLong(dst, XXH64.hashLong(src, 42L))
+
+  /** Identity partitioner: map tasks key each run by its reducer index. */
+  private final class RunPartitioner(val numPartitions: Int) extends Partitioner {
+    def getPartition(key: Any): Int = key.asInstanceOf[Int]
+  }
+
+  /** In-place lexicographic sort of pairs [lo, hi) (pair indices): 3-way
+    * quicksort, so long runs of one key and duplicate rows stay linear. */
+  private def sortPairs(a: Pairs, lo0: Int, hi0: Int): Unit = {
+    def swap(i: Int, j: Int): Unit = {
+      val k = a(2 * i); val o = a(2 * i + 1)
+      a(2 * i) = a(2 * j); a(2 * i + 1) = a(2 * j + 1)
+      a(2 * j) = k; a(2 * j + 1) = o
     }
-    (n, x)
+    def cmp(i: Int, k: Long, o: Long): Int = {
+      val c = java.lang.Long.compare(a(2 * i), k)
+      if (c != 0) c else java.lang.Long.compare(a(2 * i + 1), o)
+    }
+    var lo = lo0; var hi = hi0
+    while (hi - lo > 24) {
+      // median of three as pivot
+      val m = (lo + hi) >>> 1
+      if (cmp(m, a(2 * lo), a(2 * lo + 1)) < 0) swap(m, lo)
+      if (cmp(hi - 1, a(2 * lo), a(2 * lo + 1)) < 0) swap(hi - 1, lo)
+      if (cmp(hi - 1, a(2 * m), a(2 * m + 1)) < 0) swap(hi - 1, m)
+      val pk = a(2 * m); val po = a(2 * m + 1)
+      var lt = lo; var i = lo; var gt = hi - 1
+      while (i <= gt) {
+        val c = cmp(i, pk, po)
+        if (c < 0) { swap(lt, i); lt += 1; i += 1 }
+        else if (c > 0) { swap(i, gt); gt -= 1 }
+        else i += 1
+      }
+      if (lt - lo < hi - gt - 1) { sortPairs(a, lo, lt); lo = gt + 1 }
+      else { sortPairs(a, gt + 1, hi); hi = lt }
+    }
+    var i = lo + 1
+    while (i < hi) {
+      var j = i
+      while (j > lo && cmp(j, a(2 * j - 2), a(2 * j - 1)) < 0) { swap(j, j - 1); j -= 1 }
+      i += 1
+    }
   }
 
-  // ------------------------------------------------------------------
-  // RDD round engine (small regime): zero Catalyst work per iteration.
-  // ------------------------------------------------------------------
-
-  /** Per-src (min(dst), degree) — one map-side-combined pass. */
-  private def srcMinDeg(edges: RDD[Edge], p: HashPartitioner)
-      : RDD[(Long, (Long, Long))] =
-    edges.aggregateByKey((Long.MaxValue, 0L), p)(
-      (acc, v) => (math.min(acc._1, v), acc._2 + 1L),
-      (a, b) => (math.min(a._1, b._1), a._2 + b._2))
-
-  /** Attach each row's per-src neighborhood min, hot/cold split on
-    * `hotDegree` (see the object scaladoc). Returns (src, (dst, nmin)).
-    *
-    * `hotDegree = None` selects the plain single shuffle join — the loop
-    * passes it whenever the round's TOTAL edge count is ≤ hotDegree, which
-    * PROVES no node can be hot: the hot branch would then cost one extra
-    * driver job per star per round for a knowably-empty map. */
-  private def minJoin(rows: RDD[Edge], mins: RDD[(Long, (Long, Long))],
-                      hotDegree: Option[Long], p: HashPartitioner)
-      : RDD[(Long, (Long, Long))] = hotDegree match {
-    case None =>
-      rows.join(mins.mapValues(_._1), p)
-    case Some(t) =>
-      // collectAsMap is bounded by 2·|E|/hotDegree entries (see scaladoc);
-      // the job it runs also materializes the aggregate's shuffle output,
-      // which the cold join below then reuses as a skipped stage.
-      val hotMap = mins.filter(_._2._2 > t).mapValues(_._1)
-        .collectAsMap()
-      val bc = rows.sparkContext.broadcast(
-        scala.collection.immutable.Map(hotMap.toSeq: _*))
-      val viaHot = rows.mapPartitions({ it =>
-        val m = bc.value
-        it.flatMap { case (s, d) => m.get(s).map(nm => (s, (d, nm))) }
-      }, preservesPartitioning = true)
-      val coldRows = rows.mapPartitions({ it =>
-        val m = bc.value
-        it.filter { case (s, _) => !m.contains(s) }
-      }, preservesPartitioning = true)
-      viaHot.union(coldRows.join(
-        mins.filter(_._2._2 <= t).mapValues(_._1), p))
+  /** ONE shuffle of keyed rows into `parts` reducers; each reducer returns
+    * its rows sorted by (key, other), duplicates dropped, as one block. A
+    * `salted` key routes by (key, other) instead of by key. */
+  private def exchange(rows: RDD[Pairs], parts: Int, salted: Nodes): RDD[Pairs] = {
+    val runs = rows.mapPartitions { it =>
+      val bufs = Array.fill(parts)(new mutable.ArrayBuilder.ofLong)
+      it.foreach { b =>
+        var i = 0
+        while (i < b.length) {
+          val k = b(i); val o = b(i + 1)
+          val p = if (salted.contains(k)) home(k ^ mix(o), parts) else home(k, parts)
+          bufs(p).addOne(k).addOne(o)
+          i += 2
+        }
+      }
+      bufs.indices.iterator.filter(bufs(_).length > 0).map(p => (p, bufs(p).result()))
+    }
+    runs.partitionBy(new RunPartitioner(parts)).mapPartitions { it =>
+      val blocks = it.map(_._2).toArray
+      val a = new Array[Long](blocks.iterator.map(_.length).sum)
+      var n = 0
+      blocks.foreach { b => System.arraycopy(b, 0, a, n, b.length); n += b.length }
+      sortPairs(a, 0, n / 2)
+      var w = 0; var i = 0
+      while (i < n) {
+        if (w == 0 || a(i) != a(w - 2) || a(i + 1) != a(w - 1)) {
+          a(w) = a(i); a(w + 1) = a(i + 1); w += 2
+        }
+        i += 2
+      }
+      Iterator.single(if (w == n) a else java.util.Arrays.copyOf(a, w))
+    }
   }
 
-  /** large-star(E): for each node u over symmetric neighbors Γ(u), with
-    * m = min(Γ(u) ∪ {u}): emit (v, m) for every v ∈ Γ(u), v > u.
-    *
-    * No distinct here: each undirected edge contributes exactly one output
-    * row (from its smaller endpoint's perspective), so row count stays |E|
-    * and the small-star that always follows dedups once for both phases.
-    * The min aggregates over the FULL symmetric neighborhood; only the
-    * dst > src rows (the emitted side) need the value joined on. */
-  private def largeStar(e: RDD[Edge], hotDegree: Option[Long],
-                        p: HashPartitioner): RDD[Edge] = {
-    val sym = e.flatMap { case (s, d) => Iterator((s, d), (d, s)) }
-    minJoin(sym.filter { case (s, d) => d > s }, srcMinDeg(sym, p),
-        hotDegree, p)
-      .map { case (u, (v, m)) => (v, math.min(m, u)) }
+  /** Calls `f(start, end)` for each key's run [start, end) (pair indices). */
+  private def groups(a: Pairs)(f: (Int, Int) => Unit): Unit = {
+    val n = a.length / 2
+    var i = 0
+    while (i < n) {
+      var j = i + 1
+      while (j < n && a(2 * j) == a(2 * i)) j += 1
+      f(i, j)
+      i = j
+    }
   }
 
-  /** small-star(E): orient edges so src > dst; for each node u with
-    * m = min(Γ≤(u)): emit (v, m) for every v ∈ Γ≤(u) ∪ {u}, minus
-    * self-loops. The (u, m) self rows come straight from the aggregate —
-    * one row per node, not one per edge. */
-  private def smallStar(e: RDD[Edge], hotDegree: Option[Long],
-                        p: HashPartitioner): RDD[Edge] = {
-    val or = e.map { case (s, d) => if (s >= d) (s, d) else (d, s) }
-    val mins = srcMinDeg(or, p)
-    minJoin(or, mins, hotDegree, p)
-      .map { case (_, (v, m)) => (v, m) }
-      .union(mins.map { case (u, (m, _)) => (u, m) })
-      .filter { case (s, d) => s != d }
-      .distinct(p.numPartitions)
+  /** large-star over an adjacency: node u, m = min(Γ(u) ∪ {u}), emits
+    * (v, m) for every v ∈ Γ(u), v > u — keyed by v, the larger endpoint,
+    * i.e. already the small star's orientation. `hubMin` holds the salted
+    * keys' global minima. */
+  private def largeStar(adj: RDD[Pairs], hubMin: Nodes): RDD[Pairs] =
+    adj.map { a =>
+      val out = new mutable.ArrayBuilder.ofLong
+      groups(a) { (s, e) =>
+        val u = a(2 * s)
+        val m = if (hubMin.contains(u)) hubMin(u) else math.min(u, a(2 * s + 1))
+        var x = s
+        while (x < e) { val v = a(2 * x + 1); if (v > u) out.addOne(v).addOne(m); x += 1 }
+      }
+      out.result()
+    }
+
+  /** small-star over rows grouped by their larger endpoint u: m = min(Γ≤(u)),
+    * emits (v, m) for every v ∈ Γ≤(u) ∪ {u}, minus self-loops — in BOTH
+    * orientations, ready for the large-star grouping. A salted hub's (u, m)
+    * row is emitted once, by the partition u would route to. */
+  private def smallStar(grouped: RDD[Pairs], hubMin: Nodes, parts: Int): RDD[Pairs] =
+    grouped.mapPartitionsWithIndex { (pid, it) =>
+      val out = new mutable.ArrayBuilder.ofLong
+      def edge(v: Long, m: Long): Unit = out.addOne(v).addOne(m).addOne(m).addOne(v)
+      it.foreach { a =>
+        groups(a) { (s, e) =>
+          val u = a(2 * s)
+          val hub = hubMin.contains(u)
+          val m = if (hub) hubMin(u) else a(2 * s + 1)
+          var x = s
+          while (x < e) { val v = a(2 * x + 1); if (v != m) edge(v, m); x += 1 }
+          if (!hub) edge(u, m)
+        }
+      }
+      hubMin.foreachEntry((u, m) => if (home(u, parts) == pid) edge(u, m))
+      Iterator.single(out.result())
+    }
+
+  /** What the driver needs from one partition: edge stats, each salted
+    * key's slice minimum as (key, first neighbor) pairs, and the keys the
+    * NEXT step sees more than its threshold times here. */
+  private final case class Part(n: Long, x: Long, firsts: Array[Long], heavy: Array[Long])
+
+  /** Keys occurring more than `thr` times in `keys` (sorted in place). */
+  private def heavyKeys(keys: Array[Long], thr: Long): Array[Long] = {
+    java.util.Arrays.sort(keys)
+    val out = new mutable.ArrayBuilder.ofLong
+    var i = 0
+    while (i < keys.length) {
+      var j = i + 1
+      while (j < keys.length && keys(j) == keys(i)) j += 1
+      if (j - i > thr) out.addOne(keys(i))
+      i = j
+    }
+    out.result()
   }
 
-  /** RDD rounds from a persisted seed until the fixpoint. Returns the
-    * final persisted edge set wrapped as a caller-session DataFrame plus
-    * the round count. The seed is unpersisted when its first successor
-    * materializes (it enters as `cur`). */
-  private def rddRounds(spark: SparkSession, seed: RDD[Edge],
-                        seedStats: (Long, Long), basePartsN: Int,
-                        rowsPerPart: Long, maxIters: Int, hotDegree: Long)
-      : (DataFrame, Int) = {
-    val sc = spark.sparkContext
-    var cur = seed
+  /** One adjacency partition: stats over the (larger, smaller) orientation,
+    * salted slices' first neighbors and — when `thr` ≥ 0 — the heavy
+    * large-star output keys (the larger endpoints v > u). */
+  private def adjPart(a: Pairs, salted: Nodes, thr: Long): Part = {
+    var n = 0L; var x = 0L
+    val firsts = new mutable.ArrayBuilder.ofLong
+    val keys = new mutable.ArrayBuilder.ofLong
+    val count = thr >= 0 && a.length / 2 > thr
+    groups(a) { (s, e) =>
+      val u = a(2 * s)
+      if (salted.contains(u)) firsts.addOne(u).addOne(a(2 * s + 1))
+      var i = s
+      while (i < e) {
+        val v = a(2 * i + 1)
+        if (v < u) { n += 1; x ^= edgeHash(u, v) } else if (count) keys.addOne(v)
+        i += 1
+      }
+    }
+    Part(n, x, firsts.result(), heavyKeys(keys.result(), thr))
+  }
+
+  /** One small-star partition: salted slices' first neighbors and the heavy
+    * keys of its symmetric output — except the salted hubs' minima, which
+    * the driver adds once they are known. */
+  private def starPart(a: Pairs, salted: Nodes, thr: Long, pid: Int, parts: Int): Part = {
+    val firsts = new mutable.ArrayBuilder.ofLong
+    val keys = new mutable.ArrayBuilder.ofLong
+    groups(a) { (s, e) =>
+      val u = a(2 * s)
+      val hub = salted.contains(u)
+      if (hub) firsts.addOne(u).addOne(a(2 * s + 1))
+      else { keys.addOne(u); for (_ <- s until e) keys.addOne(a(2 * s + 1)) }
+      for (i <- (if (hub) s else s + 1) until e) keys.addOne(a(2 * i + 1))
+    }
+    salted.foreachKey(u => if (home(u, parts) == pid) keys.addOne(u))
+    Part(0L, 0L, firsts.result(), heavyKeys(keys.result(), thr))
+  }
+
+  /** Salted-key minima from slice firsts; `self` folds in the key itself
+    * (large star's min(Γ(u) ∪ {u})). */
+  private def hubMins(ps: Array[Part], self: Boolean): Nodes = {
+    val m = new Nodes
+    for (p <- ps; i <- p.firsts.indices by 2) {
+      val u = p.firsts(i)
+      val v = if (self) math.min(u, p.firsts(i + 1)) else p.firsts(i + 1)
+      if (!m.contains(u) || v < m(u)) m(u) = v
+    }
+    m
+  }
+
+  private def keySet(ps: Array[Part]): Nodes = {
+    val s = new Nodes
+    for (p <- ps; k <- p.heavy) s(k) = 0L
+    s
+  }
+
+  /** An adjacency's salted minima and heavy large-star output keys. */
+  private def adjMaps(ps: Array[Part]): (Nodes, Nodes) =
+    (hubMins(ps, self = true), keySet(ps))
+
+  /** Alternating contraction from the persisted symmetric seed until the
+    * fixpoint. Returns the final adjacency (persisted; reclaimed by the
+    * ContextCleaner once the caller's plan is unreachable) and the round
+    * count. */
+  private def contract(seed: RDD[Pairs], seedStats: (Long, Long),
+                       seedHeavy: Nodes, basePartsN: Int, rowsPerPart: Long,
+                       maxIters: Int, hotDegree: Long): (RDD[Pairs], Int) = {
+    val sc = seed.sparkContext
+    val held = mutable.ArrayBuffer[RDD[_]](seed)
+    def keep(r: RDD[Pairs]): RDD[Pairs] = {
+      held += r.persist(StorageLevel.MEMORY_AND_DISK); r
+    }
+    def parts(edges: Long): Int =
+      math.max(1L, math.min(basePartsN.toLong, edges / rowsPerPart + 1L)).toInt
+    val none = new Nodes
     var curStats = seedStats
-    var midKeep: RDD[Edge] = null
+    val hot0 = curStats._1 > hotDegree
+    var cur = exchange(seed, parts(curStats._1), if (hot0) seedHeavy else none)
+    var (curMin, curHeavy) =
+      if (!hot0) (none, none)
+      else adjMaps(keep(cur).map(adjPart(_, seedHeavy, hotDegree / cur.getNumPartitions)).collect())
     var converged = curStats._1 == 0L
     var it = 0
     try {
       while (!converged && it < maxIters) {
         // Manual adaptive coalescing: size the round's shuffles from the
-        // PREVIOUS action's exact edge count — contraction shrinks the set
-        // every round, and a tiny round on the caller's full partition
-        // count is pure task overhead. Never exceeds the caller's setting,
-        // so cluster-scale inputs keep full parallelism.
-        val parts = math.max(1L,
-          math.min(basePartsN.toLong, curStats._1 / rowsPerPart + 1L)).toInt
-        val p = new HashPartitioner(parts)
-        // Engage the hot/cold join only when this round COULD contain a
-        // hot node (total edges > hotDegree); otherwise the plain join is
-        // provably skew-safe and saves the hot-map collect jobs. Decided
-        // from the fused pair's INPUT edge count — conservative, since
-        // contraction never mints a hot node the input's total-edge bound
-        // didn't already cover.
-        val hd = if (curStats._1 > hotDegree) Some(hotDegree) else None
+        // PREVIOUS action's exact edge count.
+        val p = parts(curStats._1)
+        // Salt only when this round COULD contain a hot node (total edges
+        // > hotDegree); otherwise no key can be heavy and no narrow job runs.
+        val hot = curStats._1 > hotDegree
+        val thr = if (hot) hotDegree / p else -1L
+
+        // One round from an adjacency: large star, the grouping by larger
+        // endpoint, small star, the next large-star grouping. Returns the
+        // new adjacency and its salted keys.
+        def round(adj: RDD[Pairs], adjMin: Nodes, adjHeavy: Nodes): (RDD[Pairs], Nodes) =
+          if (!hot) {
+            val byLarger = exchange(largeStar(adj, adjMin), p, none)
+            (exchange(smallStar(byLarger, none, p), p, none), none)
+          } else {
+            val byLarger = keep(exchange(largeStar(adj, adjMin), p, adjHeavy))
+            val ps = byLarger.mapPartitionsWithIndex((pid, it0) =>
+              it0.map(starPart(_, adjHeavy, thr, pid, p))).collect()
+            val ssMin = hubMins(ps, self = false)
+            val salted = keySet(ps)
+            ssMin.foreachValue(m => salted(m) = 0L)
+            (exchange(smallStar(byLarger, ssMin, p), p, salted), salted)
+          }
+
         // TWO large/small-star alternations per driver action: the action
         // (scheduling + the convergence stats) is the per-round fixed
         // bill, and contraction needs O(log n) rounds either way, so
-        // fusing halves the job count. The intermediate round persists and
-        // is read back by the second pair from cache (the one job's stages
-        // run in dependency order, so the first stage to touch it
-        // computes-and-caches and the union's re-read hits cache); the
-        // convergence stats read BOTH halves in the same action (a tagged
-        // union), so the fixpoint is detected at the exact round it
-        // happens.
-        val mid = smallStar(largeStar(cur, hd, p), hd, p)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        midKeep = mid
-        val next = smallStar(largeStar(mid, hd, p), hd, p)
-          .persist(StorageLevel.MEMORY_AND_DISK)
+        // fusing halves the job count. The intermediate state persists and
+        // is read back from cache by both the second pair and the stats.
+        val (mid, midSalted) = round(cur, curMin, curHeavy)
+        keep(mid)
+        val (midMin, midHeavy) =
+          if (!hot) (none, none) else adjMaps(mid.map(adjPart(_, midSalted, thr)).collect())
+        val (next, nextSalted) = round(mid, midMin, midHeavy)
+        keep(next)
         if (sc.getCheckpointDir.isDefined) next.checkpoint()
-        val statRows = next
-          .mapPartitions(it0 => Iterator.single((1, statPart(it0))))
-          .union(mid.mapPartitions(it0 => Iterator.single((0, statPart(it0)))))
+        val statRows = next.map(a => (1, adjPart(a, nextSalted, thr)))
+          .union(mid.map(a => (0, adjPart(a, none, -1L))))
           .collect()
         def statsOf(h: Int): (Long, Long) =
           statRows.iterator.filter(_._1 == h).map(_._2)
-            .foldLeft((0L, 0L)) { case ((a, b), (c, d)) => (a + c, b ^ d) }
+            .foldLeft((0L, 0L)) { case ((a, b), q) => (a + q.n, b ^ q.x) }
         val midStats = statsOf(0)
         val nextStats = statsOf(1)
         // midStats == curStats ⇒ cur was already the fixpoint (the pair
@@ -268,168 +385,26 @@ object Graph {
         // fixpoint, so content equality across one or two rounds can
         // never be a cycle.
         converged = nextStats == midStats || midStats == curStats
-        cur.unpersist(blocking = false)
-        mid.unpersist(blocking = false)
-        midKeep = null
+        val (nextMin, nextHeavy) = adjMaps(statRows.filter(_._1 == 1).map(_._2))
+        curMin = nextMin; curHeavy = nextHeavy
+        held.filter(_ ne next).foreach(_.unpersist(blocking = false))
+        held.clear(); held += next
         cur = next; curStats = nextStats
         it += 2
       }
-      if (!converged) {
-        val n = curStats._1
-        cur.unpersist(blocking = false)
+      if (!converged)
         throw new IllegalStateException(
           s"connectedComponents did not converge in $maxIters rounds " +
-            s"($n edges at round $it) — labels would NOT be " +
+            s"(${curStats._1} edges at round $it) — labels would NOT be " +
             "connected components; raise maxIters")
-      }
     } catch {
-      // On any failure, release this round's caches — nothing downstream
+      // On any failure, release this call's caches — nothing downstream
       // can use them.
       case e: Throwable =>
-        if (cur != null) cur.unpersist(blocking = false)
-        if (midKeep != null) midKeep.unpersist(blocking = false)
+        held.foreach(_.unpersist(blocking = false))
         throw e
     }
-    (spark.createDataset(cur)(tupleEnc).toDF("src", "dst"), it)
-  }
-
-  // ------------------------------------------------------------------
-  // Catalyst round engine (large regime): the pre-r18 loop, unchanged.
-  // ------------------------------------------------------------------
-
-  /** Per-src (min(dst), degree) — one map-side-combined pass. */
-  private def srcMinsSql(edges: DataFrame): DataFrame =
-    edges.groupBy(col("src"))
-      .agg(min(col("dst")).as("__nmin"), count(lit(1)).as("__deg"))
-
-  /** [[minJoin]]'s Catalyst twin: hot srcs via broadcast join, cold srcs
-    * via the ordinary shuffle join whose per-key row count is ≤ hotDegree.
-    * `__nmin` is never null for a matched src, so the null test identifies
-    * broadcast misses exactly. */
-  private def minJoinSql(rows: DataFrame, mins: DataFrame,
-                         hotDegree: Option[Long]): DataFrame = hotDegree match {
-    case None =>
-      rows.join(mins.drop("__deg"), Seq("src"))
-    case Some(t) =>
-      val hot = broadcast(mins.where(col("__deg") > t).drop("__deg"))
-      val cold = mins.where(col("__deg") <= t).drop("__deg")
-      val viaHot = rows.join(hot, Seq("src"), "left")
-      viaHot.where(col("__nmin").isNotNull)
-        .union(viaHot.where(col("__nmin").isNull).drop("__nmin")
-          .join(cold, Seq("src")))
-  }
-
-  private def largeStarSql(e: DataFrame, hotDegree: Option[Long]): DataFrame = {
-    val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-    minJoinSql(sym.where(col("dst") > col("src")), srcMinsSql(sym), hotDegree)
-      .select(col("dst").as("src"),
-        least(col("__nmin"), col("src")).as("dst"))
-  }
-
-  private def smallStarSql(e: DataFrame, hotDegree: Option[Long]): DataFrame = {
-    val or = e.select(greatest(col("src"), col("dst")).as("src"),
-      least(col("src"), col("dst")).as("dst"))
-    val mins = srcMinsSql(or)
-    minJoinSql(or, mins, hotDegree)
-      .select(col("dst").as("src"), col("__nmin").as("dst"))
-      .union(mins.select(col("src"), col("__nmin").as("dst")))
-      .where(col("src") =!= col("dst"))
-      .distinct()
-  }
-
-  /** Catalyst rounds from a persisted seed until the fixpoint — the
-    * pre-r18 loop: a CHILD session (same SparkContext/cache, fresh
-    * SQL-conf state) with AQE off (one driver job per round, not one per
-    * shuffle stage — measured ~4× the job count per round otherwise) and
-    * per-round shuffle-partition re-sizing; the caller's session is never
-    * mutated. Same return/unpersist contract as [[rddRounds]]. */
-  private def sqlRounds(spark: SparkSession, seed: RDD[Edge],
-                        seedStats: (Long, Long),
-                        loopConfs: Map[String, String], maxIters: Int,
-                        hotDegree: Long): (DataFrame, Int) = {
-    val loop = spark.newSession()
-    loop.conf.set("spark.sql.shuffle.partitions",
-      spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    loop.conf.set("spark.sql.adaptive.enabled", "false")
-    loopConfs.foreach { case (k, v) => loop.conf.set(k, v) }
-    val basePartsN = loop.conf.get("spark.sql.shuffle.partitions").toInt
-    val rowsPerPart = loop.conf
-      .get("spark.graft.cc.rowsPerPartition", "100000").toLong
-    // One eager narrow pass converts the tuple seed to the cached Row form
-    // the round plans read (ExistingRDD) — without it, every round-1
-    // traversal of the fused star plan pays the typed serialize-from-object
-    // decode over the full edge set (measured ~1.3× the whole contraction
-    // at 4.4M edges). The tuple cache is released as soon as the Row copy
-    // is materialized.
-    val seedRows = seed.map(t => Row(t._1, t._2))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    if (loop.sparkContext.getCheckpointDir.isDefined) seedRows.checkpoint()
-    seedRows.count()
-    seed.unpersist(blocking = false)
-    var cur: DataFrame = loop.createDataFrame(seedRows, edgeSchema)
-    var curRdd: RDD[_] = seedRows
-    var curStats = seedStats
-    var midKeep: RDD[Row] = null
-    var converged = curStats._1 == 0L
-    var it = 0
-    try {
-      while (!converged && it < maxIters) {
-        val parts = math.max(1L,
-          math.min(basePartsN.toLong, curStats._1 / rowsPerPart + 1L))
-        loop.conf.set("spark.sql.shuffle.partitions", parts.toString)
-        val hd = if (curStats._1 > hotDegree) Some(hotDegree) else None
-        // Fused pair + lazily-persisted intermediate + tagged-union
-        // convergence aggregate — rationale in [[rddRounds]] (the shapes
-        // are the same; these are their Catalyst spellings).
-        val mid = smallStarSql(largeStarSql(cur, hd), hd)
-        val midRdd = mid.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-        midKeep = midRdd
-        val midDf = loop.createDataFrame(midRdd, edgeSchema)
-        val nextRdd = smallStarSql(largeStarSql(midDf, hd), hd).rdd
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        if (loop.sparkContext.getCheckpointDir.isDefined) nextRdd.checkpoint()
-        val next = loop.createDataFrame(nextRdd, edgeSchema)
-        // bit_xor, not sum: order-independent, and cannot overflow under
-        // ANSI. One collect materializes next (and therefore mid) and
-        // returns both halves' (count, checksum).
-        val statRows = next.select(lit(1).as("__half"), col("src"), col("dst"))
-          .union(midDf.select(lit(0).as("__half"), col("src"), col("dst")))
-          .groupBy(col("__half"))
-          .agg(count(lit(1)).as("__n"),
-            coalesce(expr("bit_xor(xxhash64(src, dst))"), lit(0L)).as("__x"))
-          .collect()
-        def statsOf(h: Int): (Long, Long) = statRows.find(_.getInt(0) == h)
-          .map(r => (r.getLong(1), r.getLong(2))).getOrElse((0L, 0L))
-        val midStats = statsOf(0)
-        val nextStats = statsOf(1)
-        converged = nextStats == midStats || midStats == curStats
-        curRdd.unpersist(blocking = false)
-        midRdd.unpersist(blocking = false)
-        midKeep = null
-        cur = next; curRdd = nextRdd; curStats = nextStats
-        it += 2
-      }
-      if (!converged) {
-        val n = curStats._1
-        curRdd.unpersist(blocking = false)
-        throw new IllegalStateException(
-          s"connectedComponents did not converge in $maxIters rounds " +
-            s"($n edges at round $it) — labels would NOT be " +
-            "connected components; raise maxIters")
-      }
-    } catch {
-      case e: Throwable =>
-        if (curRdd != null) curRdd.unpersist(blocking = false)
-        if (midKeep != null) midKeep.unpersist(blocking = false)
-        throw e
-    }
-    // The one return covers every round count: curRdd is the last round's
-    // persisted output or, when no round ran (it == 0: empty seed under a
-    // forced-low dispatch threshold), seedRows — the persisted Row copy.
-    // Rebuilding from `seed` instead, already unpersisted after
-    // seedRows.count(), would force a full lineage recompute while leaking
-    // the persisted seedRows (ADVICE r18).
-    (spark.createDataFrame(curRdd.asInstanceOf[RDD[Row]], edgeSchema), it)
+    (cur, it)
   }
 
   /** @param nodes  one column `idCol`; isolated nodes keep their own label
@@ -451,20 +426,17 @@ object Graph {
     *
     * @param loopConfs loop overrides, read first, then the caller's session
     *                  conf: `spark.sql.shuffle.partitions` (parallelism
-    *                  cap), `spark.graft.cc.rowsPerPartition` (per-partition
-    *                  row budget for the manual round re-sizing), and
-    *                  `spark.graft.cc.catalystRoundsMinEdges` (the measured
-    *                  initial edge count at which the Catalyst round engine
-    *                  takes over — see the object scaladoc for the measured
-    *                  crossover). In the Catalyst regime all keys also
-    *                  reach the loop's child session. The caller's session
-    *                  is never mutated.
-    * @param hotDegree nodes with more than this many incident edge rows in
-    *                  a round resolve their neighborhood min via broadcast
-    *                  instead of the shuffle join (see [[minJoin]]); at most
-    *                  2·|E|/hotDegree such nodes can exist, so the default
-    *                  bounds the broadcast at a few MB even for trillion-edge
-    *                  inputs while capping any one join key at ~10⁶ rows.
+    *                  cap) and `spark.graft.cc.rowsPerPartition`
+    *                  (per-partition edge budget for the manual round
+    *                  re-sizing). Any other key throws
+    *                  IllegalArgumentException. The caller's session is
+    *                  never mutated.
+    * @param hotDegree nodes with more than this many rows in a star are
+    *                  salted over all reducers, their neighborhood minimum
+    *                  resolved from the slice minima (see the object
+    *                  scaladoc); the default caps any one reducer's share
+    *                  of a node at ~10⁶ rows while keeping the salted-key
+    *                  maps at a few MB even for trillion-edge inputs.
     */
   def connectedComponentsWithRounds(nodes: DataFrame, idCol: String,
                                     edges: DataFrame, srcCol: String,
@@ -472,6 +444,9 @@ object Graph {
                                     loopConfs: Map[String, String] = Map.empty,
                                     hotDegree: Long = 1000000L)
       : (DataFrame, Int) = {
+    val unknown = loopConfs.keySet -- confKeys
+    require(unknown.isEmpty, s"unknown connectedComponents loopConfs " +
+      s"${unknown.mkString(", ")}; supported: ${confKeys.mkString(", ")}")
     val spark = nodes.sparkSession
     val sc = spark.sparkContext
     val cleaned = edges
@@ -482,37 +457,41 @@ object Graph {
       loopConfs.getOrElse(key, spark.conf.get(key, dflt))
     val basePartsN = conf("spark.sql.shuffle.partitions", "200").toInt
     val rowsPerPart = conf("spark.graft.cc.rowsPerPartition", "100000").toLong
-    val catalystMin =
-      conf("spark.graft.cc.catalystRoundsMinEdges", "2000000").toLong
-    // ONE Catalyst plan derives the cleaned edges, decoded straight to
-    // primitive tuples by the typed deserializer (no Row boxing); its one
-    // seed job both populates the persist and computes the convergence
-    // stats — whose edge count then picks the round engine.
-    val seed: RDD[Edge] = cleaned.as[Edge](tupleEnc).rdd
+    // ONE Catalyst plan derives the cleaned edges, decoded once into
+    // primitive blocks in both orientations; its one seed job populates the
+    // persist, computes the convergence stats (over the edges as given) and
+    // reports the first star's locally heavy keys.
+    val seed: RDD[Pairs] = cleaned.as[(Long, Long)](tupleEnc).rdd
+      .mapPartitions { it =>
+        val b = new mutable.ArrayBuilder.ofLong
+        it.foreach(e => b.addOne(e._1).addOne(e._2).addOne(e._2).addOne(e._1))
+        Iterator.single(b.result())
+      }
       .persist(StorageLevel.MEMORY_AND_DISK)
     if (sc.getCheckpointDir.isDefined) seed.checkpoint()
-    val seedStats = seed.mapPartitions(it0 => Iterator.single(statPart(it0)))
-      .fold((0L, 0L)) { case ((a, b), (c, d)) => (a + c, b ^ d) }
-    val (fin, it) =
-      if (seedStats._1 >= catalystMin)
-        sqlRounds(spark, seed, seedStats, loopConfs, maxIters, hotDegree)
-      else
-        rddRounds(spark, seed, seedStats, basePartsN, rowsPerPart,
-          maxIters, hotDegree)
+    val thr0 = hotDegree / math.max(1, seed.getNumPartitions)
+    val seedParts = seed.map { a =>
+      var n = 0L; var x = 0L
+      for (i <- a.indices by 4) { n += 1; x ^= edgeHash(a(i), a(i + 1)) }
+      val keys = if (n > thr0) Array.tabulate(a.length / 2)(j => a(2 * j)) else Array.emptyLongArray
+      Part(n, x, Array.emptyLongArray, heavyKeys(keys, thr0))
+    }.collect()
+    val seedStats = seedParts.foldLeft((0L, 0L)) { case ((a, b), q) => (a + q.n, b ^ q.x) }
+    val (fin, it) = contract(seed, seedStats, keySet(seedParts), basePartsN,
+      rowsPerPart, maxIters, hotDegree)
     // At the star fixpoint each node's symmetric neighborhood contains its
     // component root (the root's neighbors are all larger), so
-    // comp = min(neighbors ∪ self). `least` skips the null an unmatched
-    // left join leaves for isolated nodes. Built as ONE Catalyst plan on
-    // the caller session over the final persisted RDD (reclaimed by the
-    // ContextCleaner once the returned plan is unreachable).
-    val symF = fin.union(fin.select(col("dst").as("src"), col("src").as("dst")))
-    val nbrMin = symF.groupBy(col("src")).agg(min(col("dst")).as("nmin"))
-      .select(col("src").as("id"), col("nmin"))
-    val allNodes = nodes.select(col(idCol).cast("long").as("id"))
-      .union(symF.select(col("src").as("id")))
-      .distinct()
-    (allNodes.join(nbrMin, Seq("id"), "left")
-      .select(col("id"), least(col("nmin"), col("id")).as("comp")), it)
+    // comp = min(neighbors ∪ self) — the first entry of each sorted run (a
+    // salted root's slices each yield the root itself). Nodes with no edge
+    // keep their own id. One Catalyst aggregate on the caller session.
+    val nbrMin = spark.createDataset(fin.flatMap { a =>
+      val out = Array.newBuilder[(Long, Long)]
+      groups(a)((s, _) => out += ((a(2 * s), math.min(a(2 * s), a(2 * s + 1)))))
+      out.result().iterator
+    })(tupleEnc).toDF("id", "comp")
+    val own = nodes.select(col(idCol).cast("long").as("id"))
+    (own.select(col("id"), col("id").as("comp")).union(nbrMin)
+      .groupBy(col("id")).agg(min(col("comp")).as("comp")), it)
   }
 
   /** Fixed-iteration PageRank over an undirected graph, in exact integer

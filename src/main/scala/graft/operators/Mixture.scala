@@ -157,18 +157,4 @@ object Mixture {
     df.join(broadcast(thresholds), Seq(stratumCol))
       .where(graft.functions.Draws.md5Draw(idExpr, 1000000L) < col("keep_ppm"))
   }
-
-  /** The naive single-window formulation — one unsplittable task per
-    * stratum; kept as the semantic reference the bucketed path is
-    * property-tested against, and as the right tool for SMALL strata. */
-  def tokenBudgetSampleNaive(df: DataFrame, stratumCol: String, weight: Column,
-                             idExpr: Column, budgets: DataFrame): DataFrame = {
-    val w = Window.partitionBy(stratumCol).orderBy(md5(idExpr.cast("string")))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    df.join(broadcast(budgets.select(col(stratumCol), col("budget").as("__budget"))),
-        Seq(stratumCol))
-      .withColumn("__run", sum(weight).over(w))
-      .where(col("__run") <= col("__budget"))
-      .drop("__run", "__budget")
-  }
 }

@@ -73,17 +73,4 @@ object Packing {
       .withColumn(offsetCol, pmod(col("__run"), lit(binBudget)))
       .drop("__k", "__b", "__start", "__run")
   }
-
-  /** The naive single-global-window formulation — one unsplittable task
-    * holding the entire corpus; kept as the semantic reference the
-    * bucketed path is property-tested against. */
-  def packBinsNaive(df: DataFrame, weight: Column, idExpr: Column, binBudget: Long,
-                    binCol: String = "bin", offsetCol: String = "bin_offset"): DataFrame = {
-    val w = Window.orderBy(md5(idExpr.cast("string")))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    df.withColumn("__run", sum(weight).over(w) - weight)
-      .withColumn(binCol, expr(s"__run div $binBudget"))
-      .withColumn(offsetCol, pmod(col("__run"), lit(binBudget)))
-      .drop("__run")
-  }
 }

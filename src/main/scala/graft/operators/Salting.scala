@@ -3,18 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Skew-safe two-phase aggregation (salting).
-  *
-  * A hot grouping key funnels its entire row volume through one reducer
-  * task; salting spreads it: phase 1 aggregates on (key, salt) — map-side
-  * partial aggregation plus `buckets`-way fan-out of each hot key — and
-  * phase 2 merges the ≤buckets partials per key. Results are identical to
-  * a direct groupBy for any algebraic aggregate (sum/count/min/max).
-  *
-  * AQE's skew-join handling covers JOIN skew at runtime; aggregation skew
-  * on a pathological key distribution is still the pipeline author's call —
-  * this operator is that dial. Salt derives from a hash of the whole row
-  * (not RNG), so the operator stays deterministic task-retry-safe.
+/** Key-skew measurement for salting decisions: a hot grouping key funnels
+  * its entire row volume through one task, so a per-group sort/rank decides
+  * how many salt sub-partitions the hottest group needs from a cheap
+  * profile of the group sizes ([[WindowOps]] is the caller).
   */
 object Salting {
 
@@ -53,35 +45,5 @@ object Salting {
       val spans = (p.maxGroup * parallelism + p.nRows - 1) / p.nRows
       math.min(math.max(spans, 1L), parallelism.toLong).toInt
     }
-  }
-
-  case class AlgebraicAgg(partial: Column => Column, merge: Column => Column,
-                          valueCol: String, out: String)
-
-  def sumOf(valueCol: String, out: String): AlgebraicAgg =
-    AlgebraicAgg(sum, sum, valueCol, out)
-  def countRows(out: String): AlgebraicAgg =
-    AlgebraicAgg(_ => count(lit(1)), sum, "*", out)
-  def minOf(valueCol: String, out: String): AlgebraicAgg =
-    AlgebraicAgg(min, min, valueCol, out)
-  def maxOf(valueCol: String, out: String): AlgebraicAgg =
-    AlgebraicAgg(max, max, valueCol, out)
-
-  /** Aggregate `aggs` grouped by `keys`, spreading each key across
-    * `buckets` salt partitions first. */
-  def saltedAgg(df: DataFrame, keys: Seq[String], buckets: Int,
-                aggs: Seq[AlgebraicAgg]): DataFrame = {
-    val salt = pmod(xxhash64(df.columns.map(col): _*), lit(buckets)).as("__salt")
-    val phase1 = df.withColumn("__salt", salt)
-      .groupBy((keys :+ "__salt").map(col): _*)
-      .agg(aggs.head.partial(col(aggs.head.valueCol)).as(s"__p0"),
-        aggs.tail.zipWithIndex.map { case (a, i) =>
-          a.partial(col(a.valueCol)).as(s"__p${i + 1}")
-        }: _*)
-    phase1.groupBy(keys.map(col): _*)
-      .agg(aggs.head.merge(col("__p0")).as(aggs.head.out),
-        aggs.tail.zipWithIndex.map { case (a, i) =>
-          a.merge(col(s"__p${i + 1}")).as(a.out)
-        }: _*)
   }
 }

@@ -1,301 +1,54 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
 
-/** Throwaway scale A/B: OLD SQL-round CC (copied verbatim from the
-  * pre-r18 Graph.scala) vs the production RDD-round CC, on large
-  * synthetic graphs. Not part of any suite. */
+/** Connected-components scale probe: times
+  * `Graph.connectedComponentsWithRounds` on a chain+star graph (the chain
+  * forces several contraction rounds, the star's hub the hot path at
+  * `hotDegree = 100000`) and prints, per size, the median wall seconds over
+  * `reps` runs, the round count and the `(sum(comp), count)` label checksum.
+  * Uses only the public CC entry point, so the same file times any commit.
+  * Not part of any suite.
+  *
+  * Usage: `sbt "Test/runMain graft.CcScaleProbe [sizes] [reps]"` with
+  * `sizes` a comma-separated list of node counts (default
+  * 8192,1000000,4000000) and `reps` the runs per size (default 5). One
+  * untimed run on the smallest size warms the JVM first.
+  */
 object CcScaleProbe {
-  private val edgeSchema = StructType(Seq(
-    StructField("src", LongType, nullable = false),
-    StructField("dst", LongType, nullable = false)))
-
-  /** Per-src (min(dst), degree) — one map-side-combined pass. */
-  private def srcMins(edges: DataFrame): DataFrame =
-    edges.groupBy(col("src"))
-      .agg(min(col("dst")).as("__nmin"), count(lit(1)).as("__deg"))
-
-  /** Attach `__nmin` to every row of `rows` (a subset of the frame `mins`
-    * was aggregated over), hot/cold split on `hotDegree`:
-    *  - hot srcs (degree > hotDegree) resolve via a BROADCAST join — their
-    *    edge rows never shuffle, so a 10⁸-degree cluster root costs zero
-    *    reducer-side concentration. At most 2·|E|/hotDegree hot rows exist,
-    *    so the broadcast is small by construction.
-    *  - cold srcs take the ordinary shuffle join; every key carries ≤
-    *    hotDegree rows, so no partition can be pinned by one key.
-    * The two branches re-read `rows` from the round's persisted RDD (cache
-    * hit, not a recompute). `__nmin` is never null for a matched src (dst
-    * is non-null), so the null test identifies broadcast misses exactly.
-    *
-    * `hotDegree = None` selects the plain single shuffle join — the loop
-    * passes it whenever the round's TOTAL edge count is ≤ hotDegree, which
-    * PROVES no node can be hot: the broadcast branch would then cost two
-    * extra driver jobs per star per round for a knowably-empty frame
-    * (measured ~25% of q65/q70 wall at sf0.1). */
-  private def minJoin(rows: DataFrame, mins: DataFrame,
-                      hotDegree: Option[Long]): DataFrame = hotDegree match {
-    case None =>
-      rows.join(mins.drop("__deg"), Seq("src"))
-    case Some(t) =>
-      val hot = broadcast(mins.where(col("__deg") > t).drop("__deg"))
-      val cold = mins.where(col("__deg") <= t).drop("__deg")
-      val viaHot = rows.join(hot, Seq("src"), "left")
-      viaHot.where(col("__nmin").isNotNull)
-        .union(viaHot.where(col("__nmin").isNull).drop("__nmin")
-          .join(cold, Seq("src")))
-  }
-
-  /** large-star(E): for each node u over symmetric neighbors Γ(u), with
-    * m = min(Γ(u) ∪ {u}): emit (v, m) for every v ∈ Γ(u), v > u.
-    *
-    * No distinct here: each undirected edge contributes exactly one output
-    * row (from its smaller endpoint's perspective), so row count stays |E|
-    * and the small-star that always follows dedups once for both phases.
-    * The min aggregates over the FULL symmetric neighborhood; only the
-    * dst > src rows (the emitted side) need the value joined on. */
-  private def largeStar(e: DataFrame, hotDegree: Option[Long]): DataFrame = {
-    val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-    minJoin(sym.where(col("dst") > col("src")), srcMins(sym), hotDegree)
-      .select(col("dst").as("src"),
-        least(col("__nmin"), col("src")).as("dst"))
-  }
-
-  /** small-star(E): orient edges so src > dst; for each node u with
-    * m = min(Γ≤(u)): emit (v, m) for every v ∈ Γ≤(u) ∪ {u}, minus
-    * self-loops. The (u, m) self rows come straight from the aggregate —
-    * one row per node, not one per edge. */
-  private def smallStar(e: DataFrame, hotDegree: Option[Long]): DataFrame = {
-    val or = e.select(greatest(col("src"), col("dst")).as("src"),
-      least(col("src"), col("dst")).as("dst"))
-    val mins = srcMins(or)
-    minJoin(or, mins, hotDegree)
-      .select(col("dst").as("src"), col("__nmin").as("dst"))
-      .union(mins.select(col("src"), col("__nmin").as("dst")))
-      .where(col("src") =!= col("dst"))
-      .distinct()
-  }
-
-  /** Materialize `df` with truncated lineage and return it together with its
-    * convergence stats — (row count, xxhash64 checksum) — computed in the
-    * SAME job that populates the persisted RDD. `session` decides whose SQL
-    * confs the re-wrapped frame plans under.
-    *
-    * When the SparkContext has a checkpoint dir configured, each round also
-    * RELIABLY checkpoints: executor loss then recovers a round from storage
-    * instead of replaying the whole contraction lineage. The checkpoint
-    * write is one extra job per round, but recompute-free — it reads the
-    * copy the persist below just cached. Local runs without a checkpoint
-    * dir keep the persist-only path. Enable
-    * `spark.cleaner.referenceTracking.cleanCheckpoints` to reclaim
-    * superseded rounds' checkpoint files automatically. */
-  private def materialize(session: SparkSession, df: DataFrame)
-      : (DataFrame, org.apache.spark.rdd.RDD[Row], (Long, Long)) = {
-    val rdd = df.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    if (session.sparkContext.getCheckpointDir.isDefined) rdd.checkpoint()
-    val out = session.createDataFrame(rdd, edgeSchema)
-    // bit_xor, not sum: order-independent, and cannot overflow under ANSI.
-    val r = out.agg(count(lit(1)),
-      coalesce(expr("bit_xor(xxhash64(src, dst))"), lit(0L))).first()
-    (out, rdd, (r.getLong(0), r.getLong(1)))
-  }
-
-  /** @param nodes  one column `idCol`; isolated nodes keep their own label
-    * @param edges  undirected pairs (`srcCol`, `dstCol`); direction ignored
-    * @return (id, comp) — comp = min node id reachable from id
-    * @throws IllegalStateException if `maxIters` rounds don't converge
-    */
-  def connectedComponentsOldUnused(nodes: DataFrame, idCol: String, edges: DataFrame,
-                          srcCol: String, dstCol: String,
-                          maxIters: Int = 30,
-                          loopConfs: Map[String, String] = Map.empty,
-                          hotDegree: Long = 1000000L): DataFrame =
-    null
-
-  /** [[connectedComponents]] plus the number of contraction rounds actually
-    * run — the scale-relevant diagnostic (rounds ≈ log₂ of the largest
-    * component's star depth; Spark job counts per round are an AQE
-    * implementation detail and NOT stable across versions).
-    *
-    * @param loopConfs extra SQL confs applied to the loop's isolated child
-    *                  session only (e.g. AQE coalescing floors); the
-    *                  caller's session is never mutated.
-    * @param hotDegree nodes with more than this many incident edge rows in
-    *                  a round resolve their neighborhood min via broadcast
-    *                  instead of the shuffle join (see [[minJoin]]); at most
-    *                  2·|E|/hotDegree such nodes can exist, so the default
-    *                  bounds the broadcast at a few MB even for trillion-edge
-    *                  inputs while capping any one join key at ~10⁶ rows.
-    */
-  def connectedComponentsWithRounds(nodes: DataFrame, idCol: String,
-                                    edges: DataFrame, srcCol: String,
-                                    dstCol: String, maxIters: Int = 30,
-                                    loopConfs: Map[String, String] = Map.empty,
-                                    hotDegree: Long = 1000000L)
-      : (DataFrame, Int) = {
-    val spark = nodes.sparkSession
-    val cleaned = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .where(col("src") =!= col("dst"))
-      .distinct()
-    // Child session: same SparkContext/cache, fresh conf state. The round
-    // frames are re-planned from persisted RDDs each iteration, so only the
-    // loop's own joins/aggregates see these settings; the input derivation
-    // (`cleaned`, evaluated once below) and the RETURNED label plan stay on
-    // the caller's session with the caller's confs.
-    val loop = spark.newSession()
-    val baseParts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    loop.conf.set("spark.sql.shuffle.partitions", baseParts)
-    // AQE OFF for the loop: on an adaptive plan every shuffle stage runs as
-    // its own driver job (measured ~4× the job count per round), which
-    // amplifies any scheduler degradation O(rounds)-fold — and AQE buys
-    // nothing here: skew is handled structurally by the hot/cold min join
-    // (AQE's skew rule cannot even match this join shape — see the
-    // scaladoc), and tail-round coalescing is done manually below from the
-    // previous round's exact edge count. All on the child session — the
-    // caller never sees these settings.
-    loop.conf.set("spark.sql.adaptive.enabled", "false")
-    loopConfs.foreach { case (k, v) => loop.conf.set(k, v) }
-    // Parallelism cap and per-partition row budget for the manual sizing
-    // below. Read AFTER loopConfs so a caller-supplied partition count (or
-    // a test's smaller row budget, via the graft-specific key) is honored.
-    val basePartsN = loop.conf.get("spark.sql.shuffle.partitions").toInt
-    val rowsPerPart = loop.conf
-      .get("spark.graft.cc.rowsPerPartition", "100000").toLong
-    var (cur, curRdd, curStats) = (null: DataFrame, null: org.apache.spark.rdd.RDD[Row], (0L, 0L))
-    var midKeep: org.apache.spark.rdd.RDD[Row] = null
-    var converged = false
-    var it = 0
-    try {
-      val m0 = materialize(loop, cleaned)
-      cur = m0._1; curRdd = m0._2; curStats = m0._3
-      converged = curStats._1 == 0L // no edges: already a (trivial) fixpoint
-      while (!converged && it < maxIters) {
-        // Manual adaptive coalescing: size the action's shuffles from the
-        // PREVIOUS action's exact edge count — contraction shrinks the set
-        // every round, and a tiny round on the caller's full partition
-        // count is pure task overhead. Never exceeds the caller's setting,
-        // so cluster-scale inputs keep full parallelism.
-        val parts = math.max(1L,
-          math.min(basePartsN.toLong, curStats._1 / rowsPerPart + 1L))
-        loop.conf.set("spark.sql.shuffle.partitions", parts.toString)
-        // Engage the hot/cold join only when this action COULD contain a
-        // hot node (total edges > hotDegree); otherwise the plain join is
-        // provably skew-safe and saves the broadcast jobs. Decided from
-        // the fused pair's INPUT edge count — conservative, since
-        // contraction never mints a hot node the input's total-edge bound
-        // didn't already cover.
-        val hd = if (curStats._1 > hotDegree) Some(hotDegree) else None
-        // TWO large/small-star alternations per driver action: the action
-        // (scheduling + the convergence aggregate) is the per-round fixed
-        // bill, and contraction needs O(log n) rounds either way, so
-        // fusing halves the job count. Two details make it not-slower:
-        //  - the intermediate round persists LAZILY (no action of its
-        //    own): the second pair's joins/unions reference it from
-        //    several branches, and the one job's stages run sequentially,
-        //    so the first stage to touch it computes-and-caches and the
-        //    rest hit cache (without this the fused plan re-evaluated the
-        //    first round ~4×: measured 2.5× q65 wall);
-        //  - the convergence aggregate reads BOTH halves in the same
-        //    action (a tagged union), so the fixpoint is detected at the
-        //    exact round it happens — a pair-boundary-only check ran two
-        //    provably-no-op extra rounds per query (measured: rounds 4→6
-        //    on the q65 graph).
-        val mid = smallStar(largeStar(cur, hd), hd)
-        val midRdd = mid.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-        midKeep = midRdd
-        val midDf = loop.createDataFrame(midRdd, edgeSchema)
-        val nextRdd = smallStar(largeStar(midDf, hd), hd).rdd
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        if (loop.sparkContext.getCheckpointDir.isDefined) nextRdd.checkpoint()
-        val next = loop.createDataFrame(nextRdd, edgeSchema)
-        // bit_xor, not sum: order-independent, and cannot overflow under
-        // ANSI. One collect materializes next (and therefore mid) and
-        // returns both halves' (count, checksum).
-        val statRows = next.select(lit(1).as("__half"), col("src"), col("dst"))
-          .union(midDf.select(lit(0).as("__half"), col("src"), col("dst")))
-          .groupBy(col("__half"))
-          .agg(count(lit(1)).as("__n"),
-            coalesce(expr("bit_xor(xxhash64(src, dst))"), lit(0L)).as("__x"))
-          .collect()
-        def statsOf(h: Int): (Long, Long) = statRows.find(_.getInt(0) == h)
-          .map(r => (r.getLong(1), r.getLong(2))).getOrElse((0L, 0L))
-        val midStats = statsOf(0)
-        val nextStats = statsOf(1)
-        // midStats == curStats ⇒ cur was already the fixpoint (the pair
-        // was the detection overshoot); nextStats == midStats ⇒ the
-        // fixpoint landed mid-pair. Either way next carries the fixpoint
-        // content — contraction's potential strictly decreases until the
-        // fixpoint, so content equality across one or two rounds can
-        // never be a cycle.
-        converged = nextStats == midStats || midStats == curStats
-        curRdd.unpersist(blocking = false)
-        midRdd.unpersist(blocking = false)
-        midKeep = null
-        cur = next; curRdd = nextRdd; curStats = nextStats
-        it += 2
-      }
-    } catch {
-      // On any failure, release this round's caches — nothing downstream
-      // can use them.
-      case e: Throwable =>
-        if (curRdd != null) curRdd.unpersist(blocking = false)
-        if (midKeep != null) midKeep.unpersist(blocking = false)
-        throw e
-    }
-    if (!converged) {
-      // Same contract as the catch block: nothing downstream can use the
-      // final round's cache once we throw — release it.
-      if (curRdd != null) curRdd.unpersist(blocking = false)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIters rounds " +
-          s"(${curStats._1} edges at round $it) — labels would NOT be " +
-          "connected components; raise maxIters")
-    }
-    // At the star fixpoint each node's symmetric neighborhood contains its
-    // component root (the root's neighbors are all larger), so
-    // comp = min(neighbors ∪ self). `least` skips the null an unmatched
-    // left join leaves for isolated nodes. Built on the CALLER session from
-    // the final persisted RDD (the last round's cache is reclaimed by the
-    // ContextCleaner once the returned plan is unreachable).
-    val fin = spark.createDataFrame(curRdd, edgeSchema)
-    val symF = fin.union(fin.select(col("dst").as("src"), col("src").as("dst")))
-    val nbrMin = symF.groupBy(col("src")).agg(min(col("dst")).as("nmin"))
-      .select(col("src").as("id"), col("nmin"))
-    val allNodes = nodes.select(col(idCol).cast("long").as("id"))
-      .union(symF.select(col("src").as("id")))
-      .distinct()
-    (allNodes.join(nbrMin, Seq("id"), "left")
-      .select(col("id"), least(col("nmin"), col("id")).as("comp")), it)
-  }
-
-
   def main(args: Array[String]): Unit = {
+    val sizes = args.headOption.getOrElse("8192,1000000,4000000")
+      .split(",").map(_.trim.toLong).toSeq
+    val reps = args.lift(1).map(_.toInt).getOrElse(5)
     val spark = GraftSession.create(defaultCpus = "32", logLevel = "ERROR")
-    val n = args.headOption.map(_.toLong).getOrElse(1000000L)
-    // chain + star: diameter forces several rounds; hub forces hot path
-    val nodes = spark.range(n).select(col("id"))
-    val star = spark.range(n).where(col("id") % 10 === 1)
-      .select(lit(0L).as("src"), col("id").as("dst"))
-    val chain = spark.range(n - 1)
-      .select(col("id").as("src"), (col("id") + 1).as("dst"))
-    val edges = star.union(chain).localCheckpoint()
-    nodes.localCheckpoint()
-    println(s"n=$n edges=${edges.count()}")
-    for (pass <- 1 to 2) {
-      var t0 = System.nanoTime()
-      val (lNew, rNew) = operators.Graph.connectedComponentsWithRounds(
+
+    def run(n: Long): (Double, Int, Long, Long, Long) = {
+      val nodes = spark.range(n).select(col("id")).localCheckpoint()
+      val star = spark.range(n).where(col("id") % 10 === 1)
+        .select(lit(0L).as("src"), col("id").as("dst"))
+      val chain = spark.range(n - 1)
+        .select(col("id").as("src"), (col("id") + 1).as("dst"))
+      val edges = star.union(chain).localCheckpoint()
+      val t0 = System.nanoTime()
+      val (labels, rounds) = operators.Graph.connectedComponentsWithRounds(
         nodes, "id", edges, "src", "dst", hotDegree = 100000L)
-      val aNew = lNew.agg(sum(col("comp")), count(lit(1))).collect()(0)
-      val sNew = (System.nanoTime() - t0) / 1e9
-      t0 = System.nanoTime()
-      val (lOld, rOld) = connectedComponentsWithRounds(
-        nodes, "id", edges, "src", "dst", hotDegree = 100000L)
-      val aOld = lOld.agg(sum(col("comp")), count(lit(1))).collect()(0)
-      val sOld = (System.nanoTime() - t0) / 1e9
-      println(f"pass=$pass NEW(rdd) rounds=$rNew sec=$sNew%.2f sum=$aNew | OLD(sql) rounds=$rOld sec=$sOld%.2f sum=$aOld")
+      val r = labels.agg(sum(col("comp")), count(lit(1))).collect()(0)
+      val secs = (System.nanoTime() - t0) / 1e9
+      (secs, rounds, r.getLong(0), r.getLong(1), edges.count())
+    }
+
+    run(sizes.min)
+    for (n <- sizes) {
+      val runs = (1 to reps).map(_ => run(n))
+      val secs = runs.map(_._1).sorted
+      val median = if (reps % 2 == 1) secs(reps / 2)
+        else (secs(reps / 2 - 1) + secs(reps / 2)) / 2
+      val (_, rounds, sumComp, cnt, nEdges) = runs.head
+      val stable = runs.forall(r => (r._2, r._3, r._4) == (rounds, sumComp, cnt))
+      println(f"n=$n edges=$nEdges reps=$reps median_s=$median%.2f " +
+        f"min_s=${secs.head}%.2f max_s=${secs.last}%.2f rounds=$rounds " +
+        s"sum_comp=$sumComp count=$cnt stable=$stable " +
+        s"runs_s=${runs.map(r => f"${r._1}%.2f").mkString(",")}")
     }
     spark.stop()
   }

@@ -138,7 +138,7 @@ class LargeScaleSpec extends AnyFunSuite {
     val docs = spark.range(small).select(col("id"),
       lit("web").as("stratum"), (col("id") % 97).as("w"))
     val budgets = Seq(("web", 24L * small)).toDF("stratum", "budget")
-    val naive = operators.Mixture.tokenBudgetSampleNaive(docs, "stratum",
+    val naive = operators.NaiveRefs.tokenBudgetSampleNaive(docs, "stratum",
       col("w"), col("id"), budgets).count()
     val ((kSmall, kLarge), _) = timed {
       (mixturePipeline(small), mixturePipeline(large))
@@ -346,7 +346,7 @@ class LargeScaleSpec extends AnyFunSuite {
     def checksum(df: DataFrame): Long =
       df.agg(sum(col("bin") * 8192 + col("bin_offset"))).as[Long].head()
     val fast = checksum(operators.Packing.packBins(docs, col("w"), col("id"), 4096L))
-    val slow = checksum(operators.Packing.packBinsNaive(docs, col("w"), col("id"), 4096L))
+    val slow = checksum(operators.NaiveRefs.packBinsNaive(docs, col("w"), col("id"), 4096L))
     assert(fast == slow, s"bucketed checksum $fast != naive $slow")
     val (binsSmall, tSmall) = timed(packingPipeline(small))
     val (binsLarge, tLarge) = timed(packingPipeline(large))

@@ -608,6 +608,34 @@ class DedupSpec extends AnyFunSuite {
     assert(got(1L) == Seq("x"))
   }
 
+  test("withSimhash on an already-registered session logs no re-registration WARN") {
+    // Re-creating the session's temp functions on every call made Spark log
+    // "replaced a previously registered function" once per function.
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("capture-warn", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.WARN) warns.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val root = LogManager.getRootLogger.asInstanceOf[CoreLogger]
+    root.addAppender(capture)
+    try {
+      for (_ <- 1 to 2)
+        assert(Dedup.withSimhash(docs, "text").count() == docs.count())
+    } finally {
+      root.removeAppender(capture)
+      capture.stop()
+    }
+    import scala.jdk.CollectionConverters._
+    val replaced = warns.asScala.filter(_.contains("previously registered function"))
+    assert(replaced.isEmpty, replaced.mkString("\n"))
+  }
+
   test("rolling hash expression matches the scala reference implementation") {
     Expressions.register(spark)
     val df = docs.select(col("doc_id"), Expressions.rollingHash(col("text")).as("h"),

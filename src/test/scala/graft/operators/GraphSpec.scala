@@ -33,6 +33,8 @@ class GraphSpec extends AnyFunSuite {
   test("disjoint components and isolated nodes keep separate labels") {
     val m = comps(Seq(1L, 2L, 3L, 4L, 5L, 9L), Seq((2L, 1L), (4L, 5L)))
     assert(m == Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 4L, 5L -> 4L, 9L -> 9L))
+    // No edge at all (after self-loop removal): every node is its own label.
+    assert(comps(Seq(1L, 2L), Seq((2L, 2L))) == Map(1L -> 1L, 2L -> 2L))
   }
 
   test("edge direction is ignored and edge-only endpoints join the node set") {
@@ -51,6 +53,16 @@ class GraphSpec extends AnyFunSuite {
         val a = (i * 7L + seed) % n; val b = (i * 13L + 5L * seed) % n; (a, b)
       }.filter { case (a, b) => a != b } ++ Seq((3L, 3L), (1L, 2L), (2L, 1L))
       assert(comps(nodes, edges) == unionFind(nodes, edges), s"seed=$seed")
+    }
+    // The same shapes without the self-loop — each reversed duplicate pair
+    // reaches the rounds as two distinct seed rows.
+    for (seed <- 1 to 3) {
+      val n = 20 + seed * 7
+      val nodes = (0L until n.toLong).toSeq
+      val edges = (0 until n + seed * 9).map { i =>
+        val a = (i * 7L + seed) % n; val b = (i * 13L + 5L * seed) % n; (a, b)
+      }.filter { case (a, b) => a != b } ++ Seq((1L, 2L), (2L, 1L))
+      assert(comps(nodes, edges) == unionFind(nodes, edges), s"loop-free seed=$seed")
     }
   }
 
@@ -119,7 +131,8 @@ class GraphSpec extends AnyFunSuite {
     val (labels, rounds) = Graph.connectedComponentsWithRounds(
       nodes, "id", edges, "src", "dst")
     assert(labels.as[(Long, Long)].collect().toMap.values.toSet == Set(0L))
-    assert(rounds <= 10,
+    // ...and more than one fused pair: multi-pair convergence is exercised.
+    assert(rounds > 2 && rounds <= 10,
       s"expected O(log n) contraction rounds for a 64-chain, ran $rounds")
   }
 
@@ -192,10 +205,82 @@ class GraphSpec extends AnyFunSuite {
     }
   }
 
+  test("giant-degree node: its shuffled bytes spread over the reducers") {
+    // The loop shuffles blocks of edges, so per-task RECORD counts cannot
+    // show a hub pinned to one reducer; shuffle BYTES can. With the hub
+    // salted, no reducer task of any sizeable stage fetches most of that
+    // stage's bytes (unsalted, the hub's reducer would fetch ~all of them).
+    val hub = 40000
+    val nodes = (0L until (hub + 100).toLong).toDF("id")
+    val star = (1 to hub).map(i => (0L, i.toLong))
+    val tail = (0 until 99).map(i => (hub + 1 + i.toLong, hub + 2 + i.toLong))
+    val edges = (star ++ tail).toDF("src", "dst")
+    val perStage = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+        val b = Option(t.taskMetrics).map(_.shuffleReadMetrics.totalBytesRead).getOrElse(0L)
+        perStage.merge(t.stageId, (b, b),
+          (x: (Long, Long), y: (Long, Long)) => (x._1 + y._1, math.max(x._2, y._2)))
+        ()
+      }
+    }
+    val callerConfs = Seq(
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "16KB",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16KB")
+    val prev = callerConfs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    callerConfs.foreach { case (k, v) => spark.conf.set(k, v) }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val m = Graph.connectedComponents(nodes, "id", edges, "src", "dst",
+          loopConfs = Map("spark.sql.shuffle.partitions" -> "16",
+            "spark.graft.cc.rowsPerPartition" -> "4000"),
+          hotDegree = 1000L)
+        .as[(Long, Long)].collect().toMap
+      assert((0 to hub).forall(i => m(i.toLong) == 0L))
+      import scala.jdk.CollectionConverters._
+      val sizeable = perStage.asScala.toSeq.filter(_._2._1 > (256L << 10))
+      assert(sizeable.nonEmpty)
+      sizeable.foreach { case (sid, (total, max)) =>
+        assert(max * 2 < total,
+          s"stage $sid: one task fetched $max of $total shuffle bytes")
+      }
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+  }
+
+  test("salted hot-node rounds match the unsalted rounds and union-find") {
+    // A tiny hotDegree salts many keys in every star; the per-round edge
+    // sets must not change, so labels AND round counts equal the plain run.
+    val n = 400
+    val mixed = (0L until 120L).map(i => (i, i + 1)) ++
+      (200L until 260L).map(i => (150L, i)) ++
+      (0 until 300).map(i => ((i * 97L + 13L) % n, (i * 31L + 7L) % n))
+        .filter { case (a, b) => a != b } ++
+      (1L to 30L).map(i => (399L, 300L + i)) // a hub that is a LARGE id
+    val nodes = (0L until n.toLong).toSeq
+    val small = Map("spark.graft.cc.rowsPerPartition" -> "40")
+    val (plain, r0) = Graph.connectedComponentsWithRounds(nodes.toDF("id"), "id",
+      mixed.toDF("src", "dst"), "src", "dst", loopConfs = small)
+    for (hd <- Seq(2L, 8L)) {
+      val (salted, r1) = Graph.connectedComponentsWithRounds(nodes.toDF("id"), "id",
+        mixed.toDF("src", "dst"), "src", "dst", loopConfs = small, hotDegree = hd)
+      val got = salted.as[(Long, Long)].collect().toMap
+      assert(got == unionFind(nodes, mixed), s"hotDegree=$hd")
+      assert(got == plain.as[(Long, Long)].collect().toMap, s"hotDegree=$hd")
+      assert(r1 == r0, s"hotDegree=$hd: $r1 rounds vs $r0 unsalted")
+    }
+  }
+
   test("contraction never mutates the caller session's SQL confs") {
-    // The loop plans on an isolated child session; a concurrent query on
-    // the CALLER's session must see unchanged confs and keep planning
-    // adaptively while the loop iterates.
+    // The loop reads the caller's confs but never writes them; a
+    // concurrent query on the CALLER's session must see unchanged confs
+    // and keep planning adaptively while the loop iterates.
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -248,35 +333,6 @@ class GraphSpec extends AnyFunSuite {
     }
   }
 
-  test("catalyst-round engine (forced via threshold 0) matches union-find") {
-    // The dispatcher picks the Catalyst rounds above
-    // spark.graft.cc.catalystRoundsMinEdges (measured initial edge count);
-    // forcing the threshold to 0 runs the large-regime engine on the spec
-    // fixtures so both engines stay pinned to the same algebra.
-    val force = Map("spark.graft.cc.catalystRoundsMinEdges" -> "0")
-    for (seed <- 1 to 3) {
-      val n = 20 + seed * 7
-      val nodes = (0L until n.toLong).toSeq
-      val edges = (0 until n + seed * 9).map { i =>
-        val a = (i * 7L + seed) % n; val b = (i * 13L + 5L * seed) % n; (a, b)
-      }.filter { case (a, b) => a != b } ++ Seq((1L, 2L), (2L, 1L))
-      val got = Graph.connectedComponentsWithRounds(
-          nodes.toDF("id"), "id", edges.toDF("src", "dst"), "src", "dst",
-          loopConfs = force)._1
-        .as[(Long, Long)].collect().toMap
-      assert(got == unionFind(nodes, edges), s"seed=$seed")
-    }
-    // A long chain exercises multi-pair convergence through the Catalyst
-    // engine specifically (rounds > 2).
-    val nodes = (0L until 64L).toSeq
-    val edges = (0L until 63L).map(i => (i, i + 1))
-    val (labels, rounds) = Graph.connectedComponentsWithRounds(
-      nodes.toDF("id"), "id", edges.toDF("src", "dst"), "src", "dst",
-      loopConfs = force)
-    assert(labels.as[(Long, Long)].collect().toMap.values.toSet == Set(0L))
-    assert(rounds > 2 && rounds <= 10)
-  }
-
   test("iteration exhaustion throws instead of returning wrong labels") {
     // A 40-node path cannot converge in 1 round; the old implementation
     // silently returned non-component labels here.
@@ -286,6 +342,13 @@ class GraphSpec extends AnyFunSuite {
       comps(nodes, edges, maxIters = 1)
     }
     assert(ex.getMessage.contains("did not converge"))
+    // A loop option the engine does not read fails loudly too, rather than
+    // being silently ignored.
+    val bad = intercept[IllegalArgumentException] {
+      Graph.connectedComponents(nodes.toDF("id"), "id", edges.toDF("src", "dst"),
+        "src", "dst", loopConfs = Map("spark.graft.cc.catalystRoundsMinEdges" -> "0"))
+    }
+    assert(bad.getMessage.contains("spark.graft.cc.catalystRoundsMinEdges"))
   }
 
   test("already-star input converges immediately") {

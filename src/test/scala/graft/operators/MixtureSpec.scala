@@ -24,7 +24,7 @@ class MixtureSpec extends AnyFunSuite {
         .toDF("stratum", "budget")
       val fast = keptIds(Mixture.tokenBudgetSample(df, "stratum", col("w"),
         col("id"), budgets))
-      val slow = keptIds(Mixture.tokenBudgetSampleNaive(df, "stratum", col("w"),
+      val slow = keptIds(NaiveRefs.tokenBudgetSampleNaive(df, "stratum", col("w"),
         col("id"), budgets))
       assert(fast == slow, s"budget=$budget: bucketed=${fast.size} naive=${slow.size}")
     }

@@ -19,7 +19,7 @@ class PackingSpec extends AnyFunSuite {
       .toDF("id", "w")
     for (budget <- Seq(1L, 97L, 2048L, 10000000L)) {
       val fast = packed(Packing.packBins(df, col("w"), col("id"), budget))
-      val slow = packed(Packing.packBinsNaive(df, col("w"), col("id"), budget))
+      val slow = packed(NaiveRefs.packBinsNaive(df, col("w"), col("id"), budget))
       assert(fast == slow, s"budget=$budget")
     }
   }

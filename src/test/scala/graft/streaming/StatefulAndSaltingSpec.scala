@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
-import graft.operators.Salting
 import StatefulOps.TradeEvent
 
 class StatefulAndSaltingSpec extends AnyFunSuite {
@@ -90,21 +89,5 @@ class StatefulAndSaltingSpec extends AnyFunSuite {
         GridRow("A", 6L, 60.0, isGap = false),
         GridRow("B", 7L, 7.0, isGap = false)))
     } finally q.stop()
-  }
-
-  test("salted aggregation matches direct groupBy on skewed keys") {
-    // 90% of rows share one hot key.
-    val df = spark.range(10000)
-      .withColumn("k", when(col("id") % 10 < 9, lit("hot")).otherwise(lit("cold")))
-      .withColumn("v", col("id").cast("double"))
-    val direct = df.groupBy("k")
-      .agg(sum("v").as("s"), count(lit(1)).as("n"), min("v").as("mn"), max("v").as("mx"))
-      .orderBy("k").collect().toSeq
-    val salted = Salting.saltedAgg(df.select("k", "v"), Seq("k"), buckets = 8,
-      Seq(Salting.sumOf("v", "s"), Salting.countRows("n"),
-          Salting.minOf("v", "mn"), Salting.maxOf("v", "mx")))
-      .orderBy("k").collect().toSeq
-    assert(salted.map(r => (r.getString(0), r.getDouble(1), r.getLong(2), r.getDouble(3), r.getDouble(4)))
-      == direct.map(r => (r.getString(0), r.getDouble(1), r.getLong(2), r.getDouble(3), r.getDouble(4))))
   }
 }
