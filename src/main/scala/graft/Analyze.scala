@@ -26,10 +26,9 @@ object Analyze {
           book: Option[DataFrame] = None): Unit = {
     val feats = Crypto.addFeatures(candles).cache()
     try {
-      val focus = focusSymbol.orElse(
-        feats.select(col("symbol")).distinct().orderBy(col("symbol"))
-          .limit(1).collect().headOption.map(_.getString(0)))
-        .getOrElse(return)
+      val symbols = feats.select(col("symbol")).distinct()
+        .orderBy(col("symbol")).collect().map(_.getString(0)).toSeq
+      val focus = focusSymbol.orElse(symbols.headOption).getOrElse(return)
       val f = feats.where(col("symbol") === focus)
 
       // A1 metrics over all symbols
@@ -53,8 +52,6 @@ object Analyze {
           Seq(col("anomaly_score").desc, col("open_time")), 200),
         s"$outDir/anomalies_top")
       // J2/A7 cross-symbol correlation of log returns (fillna(0) quirk kept)
-      val symbols = feats.select(col("symbol")).distinct()
-        .orderBy(col("symbol")).collect().map(_.getString(0)).toSeq
       if (symbols.size >= 2) {
         val aligned = JoinOps.pivotAlign(feats, col("open_time"), "symbol",
           symbols, col("log_ret"))

@@ -20,8 +20,8 @@ object RegistryDoc {
     ("""(?:Dedup|Ann|TextOps|TimeOps|RobustZ|Sketches|TfIdf|Collocations|""" +
       """LmScore|AggOps|WindowOps|JoinOps|SetOps|RangeJoin|Mixture|Packing|""" +
       """Splits|Calibrate|Sessionize|ScanOps|Graph|Coverage|Salting|""" +
-      """Expressions|Multimodal|MediaHeaders|Crypto|Readers|UpsertWriter|""" +
-      """JdbcUpsert|StatefulOps|StreamJoin|Bars)\.\w+""").r
+      """Expressions|Multimodal|MediaHeaders|Crypto|UpsertWriter|StreamJoin|""" +
+      """Bars)\.\w+""").r
 
   /** (capability first sentence, entry points) per query, parsed from the
     * `queries` map region of SparkEntry.scala: the capability is the run

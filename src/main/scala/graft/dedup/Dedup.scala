@@ -1026,8 +1026,7 @@ object Dedup {
     * signature (the q70 default: 2×32-bit minima per band), so chance
     * band collisions stay negligible far past trillion-doc corpora —
     * unlike 16-bit simhash bands, which need Hamming verification
-    * ([[simhashVerifiedEdgesFromHashes]]). Same construction as
-    * [[simhashStarEdges]]. */
+    * ([[simhashVerifiedEdgesFromHashes]]). */
   def minhashStarEdges(df: DataFrame, idCol: String, textCol: String, n: Int,
                        numHashes: Int, bands: Int): DataFrame =
     starEdgesFromBuckets(
@@ -1110,23 +1109,6 @@ object Dedup {
       .distinct()
   }
 
-  /** Exploded (id, simhash, band index, band value) postings over
-    * pre-computed [[simhashHashes]]. */
-  private def simhashBandedFromHashes(sim: DataFrame, bands: Int): DataFrame = {
-    val bits = 64 / bands
-    val chunks = array((0 until bands).map { b =>
-      struct(lit(b).as("band_idx"),
-        (shiftrightunsigned(col("simhash"), b * bits) bitwiseAND lit((1L << bits) - 1))
-          .as("band_val"))
-    }: _*)
-    sim.select(col("id"), col("simhash"), explode(chunks).as("c"))
-      .select(col("id"), col("simhash"), col("c.band_idx").as("bi"), col("c.band_val").as("bv"))
-  }
-
-  private def simhashBanded(df: DataFrame, idCol: String, textCol: String,
-                            bands: Int): DataFrame =
-    simhashBandedFromHashes(simhashHashes(df, idCol, textCol), bands)
-
   /** SimHash near-dup candidate PAIRS at Hamming radius `maxHamming`, via
     * the [[simhashComboPostings]] combination bucketing: maxHamming flipped
     * bits touch ≤ maxHamming of the `blocks` bit blocks, so every true pair
@@ -1173,8 +1155,8 @@ object Dedup {
     * within-bucket pair join from going quadratic on templated corpora,
     * where millions of DISTINCT hashes crowd a 16-bit band value. */
   /** The array-of-(ci, ck) combo keys for a `simhash` column — exposed
-    * within the package so the streaming near-dup detector shares the
-    * exact batch bucketing. */
+    * within the package so DedupSpec can check the pigeonhole recall
+    * contract on the exact bucketing. */
   private[graft] def simhashComboKeys(blocks: Int, maxHamming: Int): Column = {
     val widths = Array.tabulate(blocks)(b => 64 / blocks + (if (b < 64 % blocks) 1 else 0))
     val offs = widths.scanLeft(0)(_ + _)
@@ -1200,9 +1182,10 @@ object Dedup {
     * [[simhashHashes]] — the duplicate-GROUP construction that stays
     * correct at corpus scale.
     *
-    * Raw band-bucket components ([[simhashStarEdges]]) merge on CHANCE
-    * band collisions: a 16-bit band value collides between unrelated docs
-    * past n ≈ 16k, silently chaining unrelated docs into mega-components.
+    * Raw band-bucket components (star edges over 16-bit simhash bands)
+    * merge on CHANCE band collisions: a 16-bit band value collides
+    * between unrelated docs past n ≈ 16k, silently chaining unrelated docs
+    * into mega-components.
     * Here every edge is Hamming-verified instead:
     *
     *  1. identical hashes collapse first — [[starEdgesFromBuckets]] on the
@@ -1237,29 +1220,6 @@ object Dedup {
       .distinct()
     ident.union(verified)
   }
-
-  /** [[simhashVerifiedEdgesFromHashes]] over raw text. */
-  def simhashVerifiedEdges(df: DataFrame, idCol: String, textCol: String,
-                           maxHamming: Int = 3, blocks: Int = 6): DataFrame =
-    simhashVerifiedEdgesFromHashes(simhashHashes(df, idCol, textCol),
-      maxHamming, blocks)
-
-  /** SimHash STAR edges per raw band bucket — linear, but UNVERIFIED: the
-    * components of these edges are the "shares ≥1 simhash band" graph,
-    * which past n ≈ 2^(64/bands)/bands docs (≈16k at the 4-band default)
-    * accretes chance-collision edges and silently merges unrelated docs.
-    * Prefer [[simhashVerifiedEdgesFromHashes]] for dedup-group resolution;
-    * this shape remains for candidate-graph diagnostics at bounded n. */
-  def simhashStarEdges(df: DataFrame, idCol: String, textCol: String,
-                       bands: Int = 4): DataFrame =
-    starEdgesFromBuckets(simhashBandPostings(df, idCol, textCol, bands),
-      Seq("bi", "bv"))
-
-  /** The (id, bi, bv) band postings behind [[simhashStarEdges]], exposed so
-    * composed pipelines can materialize them once. */
-  def simhashBandPostings(df: DataFrame, idCol: String, textCol: String,
-                          bands: Int = 4): DataFrame =
-    simhashBanded(df, idCol, textCol, bands).select(col("id"), col("bi"), col("bv"))
 
   /** Embedding near-dup pairs WITHOUT a blocking column: the corpus is
     * bucketed by a deterministic random-hyperplane sign signature (the same

@@ -16,8 +16,8 @@ import graft.functions.TimeOps
   * gaps are AT MOST `gapSec`; only a gap STRICTLY greater starts a new
   * session. This is empirically Spark's native `session_window` merge rule
   * (an event at exactly `prev + gap` — the nominal window end — still
-  * merges; verified in SessionsSpec's batch-parity test), so the batch
-  * ordinal view here and the streaming `streaming.Sessions` view agree
+  * merges; verified in SessionsSpec's batch-parity test), so this
+  * ordinal view and a native `session_window` aggregation agree
   * row-for-row on session membership. We use the lag→flag→running-sum
   * spelling instead of `groupBy(session_window(...))` because the
   * downstream contract needs a deterministic per-user session ORDINAL and

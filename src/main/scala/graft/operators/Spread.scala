@@ -19,11 +19,6 @@ import org.apache.spark.sql.DataFrame
   * distributing), and every consumer of these operators aggregates
   * order-insensitively, so results are unchanged in all regimes. */
 object Spread {
-  /** Session off-switch (`graft.spreadSmallScans=false`): the spread is a
-    * small-input trade — an exchange of the compact rows buys N-way
-    * parallel per-row work — and a pipeline author who knows their corpus
-    * arrives well-split (or benches micro-inputs where the exchange
-    * overhead exceeds the win) can disable it globally. */
   def apply(df: DataFrame): DataFrame =
     spreadWith(df, want => df.repartition(want))
 
@@ -42,19 +37,12 @@ object Spread {
 
   private def spreadWith(df: DataFrame,
                          re: Int => DataFrame): DataFrame = {
-    val spark = df.sparkSession
     // Streaming frames have no static partition count to inspect (.rdd on
     // one throws the batch-execution analysis error) and their micro-batch
     // parallelism is the source's to decide — pass them through untouched.
-    // Tolerant off-switch parse: any of false/off/0 (case-insensitive)
-    // disables; everything else (including absence) keeps the guard on. A
-    // strict toBoolean would turn a user's "off" into an
-    // IllegalArgumentException surfacing deep inside a shingle operator.
-    val disabled = spark.conf.getOption("graft.spreadSmallScans")
-      .exists(v => Set("false", "off", "0")(v.trim.toLowerCase))
-    if (df.isStreaming || disabled) df
+    if (df.isStreaming) df
     else {
-      val want = spark.sparkContext.defaultParallelism
+      val want = df.sparkSession.sparkContext.defaultParallelism
       if (df.rdd.getNumPartitions < want) re(want) else df
     }
   }

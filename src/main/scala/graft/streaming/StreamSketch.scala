@@ -19,8 +19,8 @@ import graft.functions.Sketches
   * Shape: one watermarked tumbling-window aggregation over the ×depth
   * bucket explode — partial-merged map-side, state O(open windows × depth ×
   * width), append-mode finalize-once. Estimation is a SECOND aggregation
-  * keyed on the same event-time window (the chained-window shape
-  * [[StreamDrift]] uses) over a broadcast watchlist join: min over the
+  * keyed on the same event-time window (chained window aggregations)
+  * over a broadcast watchlist join: min over the
   * depth counters each watched key hashes into. Bucket hashing is the
   * portable md5 idiom, so live counters are bit-comparable with a batch
   * [[Sketches.cmsTable]] over the same rows (parity spec-tested).

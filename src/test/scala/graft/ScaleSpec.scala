@@ -128,20 +128,6 @@ class ScaleSpec extends AnyFunSuite {
     }
   }
 
-  test("compaction collapses a many-small-files table without losing rows") {
-    val ev = Tables.load(spark, SparkTestSession.sf, "events")
-    val frag = Files.createTempDirectory("frag").toString + "/t"
-    ev.repartition(64).write.parquet(frag) // simulate micro-batch litter
-    val dst = Files.createTempDirectory("compact").toString + "/t"
-    val n = operators.Compaction.compact(spark, frag, dst,
-      targetBytes = operators.Compaction.dirBytes(spark, frag) / 2)
-    assert(n <= 3) // ~2 target-size files (+ rounding)
-    val files = new java.io.File(dst).listFiles()
-      .count(f => f.getName.endsWith(".parquet"))
-    assert(files == n)
-    assert(spark.read.parquet(dst).count() == ev.count())
-  }
-
   test("salted top-k per group matches the plain rank window exactly") {
     val li = Tables.load(spark, SparkTestSession.sf, "lineitem")
     val part = Seq(col("l_returnflag"))

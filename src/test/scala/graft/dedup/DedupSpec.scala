@@ -268,33 +268,6 @@ class DedupSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("pigeonhole"))
   }
 
-  test("simhash star edges give the same components as all-pairs bucket edges") {
-    val corpus = (0L until 30L).map { i =>
-      (i, if (i % 2 == 0) "the quick brown fox jumps over the lazy dog"
-          else s"unrelated text number${i % 9} content${i % 4} word${i % 11}")
-    }.toDF("doc_id", "text")
-    def components(edges: org.apache.spark.sql.DataFrame): Map[Long, Long] =
-      graft.operators.Graph.connectedComponents(
-          corpus.select(col("doc_id")), "doc_id", edges, "id_a", "id_b")
-        .as[(Long, Long)].collect().toMap
-    // All-pairs candidate graph at the SAME relation (shares ≥1 band):
-    // simhashCandidates with the loosest honest filter (hamming ≤ bands-1)
-    // is a SUBset; the unfiltered bucket graph is what star edges mirror.
-    val banded = Dedup.simhashStarEdges(corpus, "doc_id", "text", bands = 4)
-    val allPairs = {
-      val sim = Dedup.withSimhash(corpus, "text").select(col("doc_id").as("id"), col("simhash"))
-      val chunks = array((0 until 4).map { b =>
-        (shiftrightunsigned(col("simhash"), b * 16) bitwiseAND lit(0xFFFFL)).as(s"b$b")
-      }: _*)
-      val e = sim.select(col("id"), posexplode(chunks).as(Seq("bi", "bv")))
-      e.as("a").join(e.as("b"),
-          col("a.bi") === col("b.bi") && col("a.bv") === col("b.bv") &&
-          col("a.id") < col("b.id"))
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct()
-    }
-    assert(components(banded) == components(allPairs))
-  }
-
   test("minhash star edges give the same components as all-pairs candidates") {
     val corpus = (0L until 30L).map { i =>
       (i, if (i % 2 == 0) "the quick brown fox jumps over the lazy dog"
@@ -312,8 +285,7 @@ class DedupSpec extends AnyFunSuite {
   test("combo-bucket pigeonhole: any pair within Hamming 3 shares a key (300 random pairs)") {
     // Deterministic pseudo-random 64-bit hashes with 0-3 flipped bits; the
     // pair MUST land in ≥1 common (ci, ck) bucket — the recall contract the
-    // verified-edge and streaming paths rely on. One Spark job for all
-    // pairs.
+    // verified-edge path relies on. One Spark job for all pairs.
     val rnd = new scala.util.Random(42)
     val pairs = (0 until 300).map { i =>
       val h = rnd.nextLong()
@@ -371,8 +343,8 @@ class DedupSpec extends AnyFunSuite {
       graft.operators.Graph.connectedComponents(
           corpus.select(col("doc_id")), "doc_id", edges, "id_a", "id_b")
         .as[(Long, Long)].collect().toMap
-    val verified = Dedup.simhashVerifiedEdges(corpus, "doc_id", "text",
-      maxHamming = 3)
+    val verified = Dedup.simhashVerifiedEdgesFromHashes(
+      Dedup.simhashHashes(corpus, "doc_id", "text"), maxHamming = 3)
     // Brute force: the full pair listing at the same radius (q44's shape).
     val brute = Dedup.simhashCandidates(corpus, "doc_id", "text",
       maxHamming = 3).select(col("id_a"), col("id_b"))

@@ -136,80 +136,14 @@ class GraphSpec extends AnyFunSuite {
       s"expected O(log n) contraction rounds for a 64-chain, ran $rounds")
   }
 
-  test("giant-degree node: no single task streams the whole hot neighborhood") {
-    // The dedup degeneracy: one root adjacent to half the edge set (a star
-    // of identical documents). A window-based neighborhood min would pull
-    // every hot-node edge into ONE unsplittable task; the hot/cold min join
-    // must instead resolve the hub via broadcast so its edges never
-    // concentrate on a reducer. hotDegree is lowered to make the 40k-degree
-    // hub "hot" at test scale.
-    val hub = 40000
-    val nodes = (0L until (hub + 100).toLong).toDF("id")
-    val star = (1 to hub).map(i => (0L, i.toLong))
-    val tail = (0 until 99).map(i => (hub + 1 + i.toLong, hub + 2 + i.toLong))
-    val edges = (star ++ tail).toDF("src", "dst")
-    val maxTask = new java.util.concurrent.atomic.AtomicLong
-    val perStage = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-    val stageNames = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val rec = Option(t.taskMetrics).map(_.shuffleReadMetrics.recordsRead).getOrElse(0L)
-        perStage.merge(t.stageId, rec, (a: Long, b: Long) => math.max(a, b))
-        maxTask.getAndUpdate(m => math.max(m, rec)); ()
-      }
-      override def onStageCompleted(s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        stageNames.put(s.stageInfo.stageId, s.stageInfo.name); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    // The input distinct and the final label derivation run on the CALLER
-    // session; lower its coalescing floors too, for the same test-scale
-    // reason (their keys — (src,dst) pairs and node ids — are hash-spread,
-    // so any big task there would be a coalescing artifact, not skew).
-    val callerConfs = Seq(
-      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
-      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "16KB",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16KB")
-    val prev = callerConfs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    callerConfs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
-      val (labels, _) = Graph.connectedComponentsWithRounds(
-        nodes, "id", edges, "src", "dst", maxIters = 30,
-        loopConfs = Map(
-          "spark.sql.shuffle.partitions" -> "16",
-          // Keep the loop's manual round-sizing from folding the tiny
-          // fixture into one partition (which would read as a giant task
-          // without any hot key being at fault).
-          "spark.graft.cc.rowsPerPartition" -> "4000"),
-        hotDegree = 1000L)
-      val m = labels.as[(Long, Long)].collect().toMap
-      assert((0 to hub).forall(i => m(i.toLong) == 0L))
-      assert((hub + 1 to hub + 100).forall(i => m(i.toLong) == hub + 1L))
-      // Hot neighborhood is ~2×hub rows once symmetrized; a window-min (or
-      // unsplit shuffle-join) implementation reads all of them in one task.
-      // With the hub resolved by broadcast, no reducer task should come
-      // close to hub-sized reads.
-      import scala.jdk.CollectionConverters._
-      val breakdown = perStage.asScala.toSeq.sortBy(-_._2).take(8)
-        .map { case (sid, rec) => s"stage $sid (${stageNames.getOrDefault(sid, "?")}): $rec" }
-        .mkString("\n  ")
-      assert(maxTask.get < hub,
-        s"one task shuffle-read ${maxTask.get} rows — hot neighborhood " +
-          s"(~${2 * hub} rows symmetrized) was not split; top stages:\n  $breakdown")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-    }
-  }
-
   test("giant-degree node: its shuffled bytes spread over the reducers") {
-    // The loop shuffles blocks of edges, so per-task RECORD counts cannot
-    // show a hub pinned to one reducer; shuffle BYTES can. With the hub
-    // salted, no reducer task of any sizeable stage fetches most of that
-    // stage's bytes (unsalted, the hub's reducer would fetch ~all of them).
+    // The dedup degeneracy: one root adjacent to half the edge set (a star
+    // of identical documents), plus a separate 100-node chain. The loop
+    // shuffles blocks of edges, so per-task RECORD counts cannot show a hub
+    // pinned to one reducer; shuffle BYTES can. With the hub salted
+    // (hotDegree lowered to make the 40k-degree hub "hot" at test scale),
+    // no reducer task of any sizeable stage fetches most of that stage's
+    // bytes (unsalted, the hub's reducer would fetch ~all of them).
     val hub = 40000
     val nodes = (0L until (hub + 100).toLong).toDF("id")
     val star = (1 to hub).map(i => (0L, i.toLong))
@@ -224,6 +158,9 @@ class GraphSpec extends AnyFunSuite {
         ()
       }
     }
+    // The node list and the label aggregate run on the CALLER session; lower
+    // its coalescing floors too, so a big task there cannot be a coalescing
+    // artifact of the tiny fixture.
     val callerConfs = Seq(
       "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
       "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "16KB",
@@ -238,6 +175,7 @@ class GraphSpec extends AnyFunSuite {
           hotDegree = 1000L)
         .as[(Long, Long)].collect().toMap
       assert((0 to hub).forall(i => m(i.toLong) == 0L))
+      assert((hub + 1 to hub + 100).forall(i => m(i.toLong) == hub + 1L))
       import scala.jdk.CollectionConverters._
       val sizeable = perStage.asScala.toSeq.filter(_._2._1 > (256L << 10))
       assert(sizeable.nonEmpty)

@@ -8,8 +8,8 @@ import graft.SparkTestSession
   * operators. Load-bearing properties: (1) an input with fewer partitions
   * than the default parallelism gains exactly that many partitions,
   * row-identically; (2) an input already at/above parallelism is returned
-  * UNTOUCHED (same plan, no exchange — the at-scale identity); (3) the
-  * session off-switch works; (4) streaming frames pass through. */
+  * UNTOUCHED (same plan, no exchange — the at-scale identity); (3)
+  * streaming frames pass through. */
 class SpreadSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -29,14 +29,6 @@ class SpreadSpec extends AnyFunSuite {
     assert(out.rdd.getNumPartitions == par)
     assert(!out.queryExecution.executedPlan.toString.contains("Exchange"),
       "Spread must not add an exchange to a well-split input")
-  }
-
-  test("graft.spreadSmallScans=false disables the spread") {
-    spark.conf.set("graft.spreadSmallScans", "false")
-    try {
-      val one = spark.range(0, 100, 1, 1).toDF()
-      assert(Spread(one).rdd.getNumPartitions == 1)
-    } finally spark.conf.unset("graft.spreadSmallScans")
   }
 
   test("streaming frames pass through untouched") {

@@ -37,6 +37,17 @@ class RestSpec extends AnyFunSuite {
     assert(ks.head == Rest.Kline(1704067200000L, 42000.1, 42100.2, 41900.3, 42050.4, 10.5, 37))
   }
 
+  test("parseDepth emits bids before asks, each level carrying lastUpdateId") {
+    val body =
+      """{"lastUpdateId":1027024,
+         "bids":[["42000.10","1.50000000"],["41999.5","0.25"]],
+         "asks":[["42000.20","2.00000000"]]}"""
+    assert(Rest.parseDepth(body) == Seq(
+      Rest.DepthLevel(42000.10, 1.5, "bid", 1027024L),
+      Rest.DepthLevel(41999.5, 0.25, "bid", 1027024L),
+      Rest.DepthLevel(42000.20, 2.0, "ask", 1027024L)))
+  }
+
   test("pagination walks past the page limit (fixing reference truncation)") {
     // Source has 2500 one-minute bars; pages capped at 1000.
     val start = 1704067200000L

@@ -1,16 +1,36 @@
 package graft.streaming
 
 import java.sql.Timestamp
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 import graft.operators.Sessionize
 
+/** Pins q101's `Sessionize` to Spark's native `session_window` merge rule:
+  * consecutive events merge when separated by AT MOST the gap (exactly the
+  * gap still merges; only strictly greater splits). */
 class SessionsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   private def ts(sec: Long): Timestamp = new Timestamp(sec * 1000L)
+
+  /** Reference: watermarked native `session_window` aggregation, emitting
+    * each session's bounds (the member events' min/max) and size. */
+  private def sessionAggregate(events: DataFrame, keyCol: String, tsCol: String,
+                               gap: String, watermark: String): DataFrame =
+    events
+      .withWatermark(tsCol, watermark)
+      .groupBy(col(keyCol), session_window(col(tsCol), gap))
+      .agg(count(lit(1)).as("n_events"),
+        min(col(tsCol)).as("session_start"),
+        max(col(tsCol)).as("session_end"))
+      .select(col(keyCol), col("session_start"), col("session_end"),
+        col("n_events"),
+        (graft.functions.TimeOps.epochSeconds(col("session_end")) -
+          graft.functions.TimeOps.epochSeconds(col("session_start")))
+          .as("duration_sec"))
 
   test("batch parity: native session_window sessions == Sessionize.sessionStats") {
     // Mixed shapes: multi-event session, exact-gap split, singleton user.
@@ -19,7 +39,7 @@ class SessionsSpec extends AnyFunSuite {
       (1L, 13L, ts(3699)), (1L, 14L, ts(6000)),
       (2L, 20L, ts(50))
     ).toDF("user_id", "event_id", "ts")
-    val streamShape = Sessions.sessionAggregate(events, "user_id", "ts",
+    val streamShape = sessionAggregate(events, "user_id", "ts",
         "1800 seconds", "0 seconds")
       .select("user_id", "session_start", "session_end", "n_events", "duration_sec")
       .as[(Long, Timestamp, Timestamp, Long, Long)].collect().toSet
@@ -27,58 +47,5 @@ class SessionsSpec extends AnyFunSuite {
       .select("user_id", "session_start", "session_end", "n_events", "duration_sec")
       .as[(Long, Timestamp, Timestamp, Long, Long)].collect().toSet
     assert(streamShape == batch)
-  }
-
-  test("streaming: sessions finalize exactly once when the watermark passes") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, String)]
-    val stream = mem.toDF().toDF("user_id", "t")
-      .withColumn("ts", to_timestamp(col("t"))).drop("t")
-    val sessions = Sessions.sessionAggregate(stream, "user_id", "ts",
-      "30 minutes", "10 minutes")
-    val q = sessions.writeStream.format("memory").queryName("sessions_out")
-      .outputMode("append").start()
-    try {
-      // Two events 10 min apart: one open session for user 1.
-      mem.addData((1L, "2024-01-01 00:00:00"), (1L, "2024-01-01 00:10:00"))
-      q.processAllAvailable()
-      assert(spark.table("sessions_out").count() == 0,
-        "session emitted before the watermark passed its close")
-      // An event far ahead advances the watermark beyond 00:40 + lateness,
-      // closing user 1's session; user 9's own session stays open.
-      mem.addData((9L, "2024-01-01 02:00:00"))
-      q.processAllAvailable()
-      val got = spark.table("sessions_out")
-        .select("user_id", "n_events", "duration_sec")
-        .as[(Long, Long, Long)].collect().toSeq
-      assert(got == Seq((1L, 2L, 600L)))
-    } finally q.stop()
-  }
-
-  test("streaming: late event within the watermark merges into its session") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, String)]
-    val stream = mem.toDF().toDF("user_id", "t")
-      .withColumn("ts", to_timestamp(col("t"))).drop("t")
-    val sessions = Sessions.sessionAggregate(stream, "user_id", "ts",
-      "30 minutes", "10 minutes")
-    val q = sessions.writeStream.format("memory").queryName("sessions_late")
-      .outputMode("append").start()
-    try {
-      mem.addData((1L, "2024-01-01 00:00:00"))
-      q.processAllAvailable()
-      // Late arrival (event-time before max seen) but within lateness:
-      // must merge, extending the session instead of starting a new row.
-      mem.addData((1L, "2024-01-01 00:08:00"), (1L, "2024-01-01 00:04:00"))
-      q.processAllAvailable()
-      mem.addData((9L, "2024-01-01 03:00:00")) // close everything of user 1
-      q.processAllAvailable()
-      val got = spark.table("sessions_late")
-        .select("user_id", "n_events", "duration_sec")
-        .as[(Long, Long, Long)].collect().toSeq
-      assert(got == Seq((1L, 3L, 480L)))
-    } finally q.stop()
   }
 }

@@ -246,86 +246,4 @@ class SoakSpec extends AnyFunSuite {
       spark.catalog.clearCache()
     }
   }
-
-  test("near-dup alert stream soaks: bounded state, flagged-set parity vs batch replay",
-      LargeScale) {
-    // StreamNearDedup's per-operator spec proves the bucket transition at
-    // toy scale; this soaks it over 300 micro-batches with a planted
-    // near-dup burst and holds it to the BATCH simhash truth on the
-    // replayed corpus: a doc is flagged iff some earlier doc within the
-    // event-time horizon is within Hamming 3 — computed independently via
-    // Dedup.simhashVerifiedEdgesFromHashes + a pairwise horizon filter.
-    implicit val sqlCtx = spark.sqlContext
-    val feed = MemoryStream[(Long, java.sql.Timestamp, String)]
-    val horizonMs = 120000L // 6 batches of event time
-    val alerts = StreamNearDedup.nearDupAlerts(
-      feed.toDF().toDF("doc_id", "event_time", "text"),
-      "doc_id", "text", "event_time", horizonMs,
-      maxHamming = 3, blocks = 6, maxPerBucket = 512)
-    val q = alerts.writeStream.format("memory").queryName("soak_neardup")
-      .outputMode("append").trigger(Trigger.ProcessingTime(0L)).start()
-
-    val t0 = java.time.Instant.parse("2024-06-01T00:00:00Z").toEpochMilli
-    // Unique docs carry fully disjoint token sets (hashes ~32 bits apart);
-    // burst batches 150-160 plant an EXACT copy of the previous batch's
-    // first doc (in horizon — must alert); batch 250 plants a copy of
-    // batch 200's first doc (1000 s back, beyond the 120 s horizon — must
-    // NOT alert).
-    def uniqueText(b: Int, i: Int): String =
-      (0 until 20).map(j => s"t${b}_${i}_$j").mkString(" ")
-    val sent = scala.collection.mutable.ArrayBuffer[(Long, java.sql.Timestamp, String)]()
-    def stateRows(): Long =
-      Option(q.lastProgress).toSeq.flatMap(_.stateOperators.map(_.numRowsTotal)).sum
-    var stateAt100 = -1L
-    val nBatches = 300
-    try {
-      (1 to nBatches).foreach { b =>
-        val ts = new java.sql.Timestamp(t0 + b * 20000L)
-        val base = (0 until 3).map(i => (b * 10L + i, ts, uniqueText(b, i)))
-        val plant =
-          if (b >= 150 && b <= 160) Seq((b * 10L + 3, ts, uniqueText(b - 1, 0)))
-          else if (b == 250) Seq((b * 10L + 3, ts, uniqueText(200, 0)))
-          else Seq.empty
-        val recs = base ++ plant
-        sent ++= recs
-        feed.addData(recs)
-        q.processAllAvailable()
-        if (b == 100) stateAt100 = stateRows()
-      }
-      val stateAt300 = stateRows()
-      // ~4 docs/batch × C(6,3)=20 combo buckets, ≤ ~2×horizon of batches
-      // live (eviction + timeout lag). The REAL assertion is no growth
-      // 100 → 300 — a leak grows linearly in batch count.
-      assert(stateAt100 > 0 && stateAt100 <= 4000, s"state@100=$stateAt100")
-      assert(stateAt300 <= math.max(stateAt100 * 2, 4000L),
-        s"state grew $stateAt100 -> $stateAt300 over 200 more batches: leak")
-
-      // Batch truth on the replayed corpus. Ids ascend with event time, so
-      // the flagged doc of a pair is always id_b (the later arrival — the
-      // same doc the stream alerts on).
-      val docsDf = sent.toSeq.toDF("doc_id", "event_time", "text")
-      val hashes = graft.dedup.Dedup.simhashHashes(docsDf, "doc_id", "text")
-        .localCheckpoint()
-      val times = docsDf.select(col("doc_id"), col("event_time").cast("long").as("t"))
-      val truth = graft.dedup.Dedup.simhashVerifiedEdgesFromHashes(hashes, maxHamming = 3)
-        .join(times.toDF("id_a", "ta"), "id_a")
-        .join(times.toDF("id_b", "tb"), "id_b")
-        .where(abs(col("tb") - col("ta")) <= horizonMs / 1000)
-        .select(col("id_b")).as[Long].collect().toSet
-      val flagged = spark.table("soak_neardup").select(col("id"))
-        .distinct().as[Long].collect().toSet
-      assert(flagged == truth,
-        s"flagged-set parity broke: stream-only=${(flagged -- truth).take(5)} " +
-          s"batch-only=${(truth -- flagged).take(5)}")
-      // Non-vacuous: every in-horizon plant alerted; the beyond-horizon
-      // plant did not.
-      val plants = (150 to 160).map(b => b * 10L + 3).toSet
-      assert(plants.subsetOf(flagged), s"missing plants: ${plants -- flagged}")
-      assert(!flagged.contains(2503L), "beyond-horizon plant must not alert")
-    } finally {
-      q.stop()
-      spark.catalog.clearCache()
-      try spark.sql("DROP TABLE IF EXISTS soak_neardup") catch { case _: Exception => () }
-    }
-  }
 }
