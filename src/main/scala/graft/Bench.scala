@@ -62,10 +62,10 @@ object Bench {
     def gcMillis: Long =
       ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
 
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
+    val ordered = SparkEntry.all.map(r => r.name -> r.run).sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
     only.foreach { o =>
-      val unknown = o -- SparkEntry.queries.keySet
+      val unknown = o -- SparkEntry.all.map(_.name)
       if (ordered.isEmpty || unknown.nonEmpty) {
         System.err.println(
           s"SPARK_GRAFT_BENCH_ONLY entries not matching any query: " +

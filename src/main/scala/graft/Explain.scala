@@ -23,7 +23,7 @@ object Explain {
     // at construction time nor collapses its subtree to an ExistingRDD
     // scan. With --run the queries execute with their production shape.
     if (!run && !profile) spark.conf.set("graft.materialize", "false")
-    val targets = if (names.nonEmpty) names.toSeq else SparkEntry.queries.keys.toSeq.sorted
+    val targets = if (names.nonEmpty) names.toSeq else SparkEntry.all.map(_.name).sorted
     targets.foreach { name =>
       println(s"\n========== $name ==========")
       if (!profile) {

@@ -116,7 +116,12 @@ object GraftSession {
     * test-order leak) as is, and its builder confs are then silently
     * dropped: such a session would run the JavaSerializer and the
     * bypass-merge shuffle writer while every measurement assumed
-    * otherwise. */
+    * otherwise.
+    *
+    * Values compare as verbatim strings: an override must spell a static
+    * conf exactly as the running context stores it. A second spelling of
+    * the same value (`TRUE` for `true`, `064` for `64`) fails here loudly
+    * rather than being normalized. */
   private[graft] def checkStaticConfs(conf: org.apache.spark.SparkConf): Unit = {
     val want = (sharedConfs ++ envConfs).toMap
     val wrong = staticKeys.filterNot(k => conf.getOption(k) == want.get(k))
@@ -124,7 +129,9 @@ object GraftSession {
       "the running SparkContext was created without graft's static confs: " +
         wrong.map(k => s"$k=${conf.getOption(k).getOrElse("<unset>")} " +
           s"(want ${want(k)})").mkString(", ") +
-        "; stop the existing session before GraftSession.create")
+        "; stop the existing session before GraftSession.create (values " +
+        "compare as verbatim strings, so spell each override exactly as " +
+        "the running context reports it)")
   }
 
   /** `SPARK_GRAFT_CONF_*` env overrides as (dotted key, value) pairs. */
@@ -138,7 +145,10 @@ object GraftSession {
     * A static conf the builder already carries (same value) is tolerated —
     * the runtime set would throw CANNOT_MODIFY_CONFIG even for a no-op
     * re-set; a static conf the running context does NOT carry still throws
-    * loudly (a silent skip would fake a measured A/B). */
+    * loudly (a silent skip would fake a measured A/B). "Same value" means
+    * the same verbatim string: `TRUE` against a running `true`, or `64k`
+    * against `65536`, rethrows Spark's CANNOT_MODIFY_CONFIG error rather
+    * than being normalized. */
   def applyEnvConfs(spark: SparkSession): Unit =
     envConfs.foreach { case (k, v) =>
       try spark.conf.set(k, v)

@@ -3,18 +3,23 @@ package graft
 import java.nio.file.{Files, Paths}
 
 /** Generates REGISTRY.md — the USER-FACING index of the query registry
-  * (name → capability → operator entry points → oracle family) — from the
-  * registry itself plus the scaladoc-style comments in SparkEntry.scala.
+  * (name → capability → operator entry points → oracle) — from the
+  * registry itself plus the registration comments in the family files.
   * COVERAGE.md is builder-facing evidence; this answers "which query
   * demonstrates X, and which operators does it exercise?" for a consumer
   * of the library.
   *
   * Usage (from the repo root): tools/run.sh graft.RegistryDoc
   * RegistryDocSpec asserts the committed file stays in sync with
-  * SparkEntry.queries — regenerate after any registry change. */
+  * SparkEntry.all — regenerate after any registry change. */
 object RegistryDoc {
 
-  private val EntryRe = """^\s*"(q\d+\w*)" ->.*$""".r
+  /** The family files that hold the `Query("…"` registrations. */
+  private[graft] val Families: Seq[String] =
+    Seq("RelationalQueries", "CorpusQueries")
+      .map(f => s"src/main/scala/graft/registry/$f.scala")
+
+  private val EntryRe = """^\s*Query\("(q\d+\w*)",.*$""".r
   /** Operator objects a query body references — the entry-point citation. */
   private val OpRe =
     ("""(?:Dedup|Ann|TextOps|TimeOps|RobustZ|Sketches|TfIdf|Collocations|""" +
@@ -23,25 +28,26 @@ object RegistryDoc {
       """Expressions|Multimodal|MediaHeaders|Crypto|UpsertWriter|StreamJoin|""" +
       """Bars)\.\w+""").r
 
-  /** (capability first sentence, entry points) per query, parsed from the
-    * `queries` map region of SparkEntry.scala: the capability is the run
-    * of consecutive `//` lines immediately ABOVE the registration, cut at
-    * the first sentence; the entry points are the operator references in
-    * the lines from the registration to the next one. */
+  /** (capability first sentence, entry points) per query, parsed from one
+    * family file: the capability is the run of consecutive `//` lines
+    * immediately ABOVE the `Query("…"` registration, cut at the first
+    * sentence; the entry points are the operator references in the
+    * program, from the registration to its `oracleSql =` argument. */
   private[graft] def parse(source: String): Map[String, (String, Seq[String])] = {
     val lines = source.linesIterator.toVector
-    val start = lines.indexWhere(_.contains("def queries:"))
-    val end = lines.indexWhere(_.contains("def oracleSql"), start)
-    require(start >= 0 && end > start, "SparkEntry.scala changed shape; fix RegistryDoc.parse")
-    val entryAt = (start until end).flatMap { i =>
+    val entryAt = lines.indices.flatMap { i =>
       lines(i) match { case EntryRe(name) => Some(i -> name); case _ => None }
     }
-    entryAt.zipWithIndex.map { case ((i, name), j) =>
+    entryAt.map { case (i, name) =>
       val commentLines = Iterator.iterate(i - 1)(_ - 1)
-        .takeWhile(x => x > start && lines(x).trim.startsWith("//"))
+        .takeWhile(x => x >= 0 && lines(x).trim.startsWith("//"))
         .toVector.reverse.map(x => lines(x).trim.stripPrefix("//").trim)
-      val bodyEnd = entryAt.lift(j + 1).map(_._1).getOrElse(end)
-      val ops = lines.slice(i, bodyEnd)
+      val oracleAt = lines.indexWhere(l =>
+        !l.trim.startsWith("//") && l.contains("oracleSql ="), i)
+      require(oracleAt >= i, s"$name: no oracleSql argument; fix RegistryDoc.parse")
+      val program = lines.slice(i, oracleAt) :+
+        lines(oracleAt).take(lines(oracleAt).indexOf("oracleSql ="))
+      val ops = program
         .filterNot(_.trim.startsWith("//")) // prose mentions are not calls
         .flatMap(l => OpRe.findAllIn(l)).distinct
       val cap = commentLines.mkString(" ").replaceAll("\\s+", " ").trim match {
@@ -73,24 +79,21 @@ object RegistryDoc {
   }
 
   def render(): String = {
-    val src = Files.readString(Paths.get("src/main/scala/graft/SparkEntry.scala"))
-    val parsed = parse(src)
-    val oracled = SparkEntry.oracleSql.keySet
-    val rows = SparkEntry.queries.keys.toSeq.sorted.map { name =>
+    val parsed = Families.map(f => parse(Files.readString(Paths.get(f)))).reduce(_ ++ _)
+    val rows = SparkEntry.all.map(_.name).sorted.map { name =>
       val (cap, ops) = parsed.getOrElse(name, ("inline Column composition", Seq.empty))
-      val oracle = if (oracled.contains(name)) "DuckDB SQL" else "rows-only"
       val opsTxt = if (ops.isEmpty) "inline Column expressions"
         else ops.take(6).map(o => s"`$o`").mkString(", ")
-      s"| `$name` | $cap | $opsTxt | $oracle |"
+      s"| `$name` | $cap | $opsTxt | DuckDB SQL |"
     }
     // No stripMargin: the markdown table rows START with '|', which
     // stripMargin would eat as its margin character.
     "# REGISTRY — query index (generated)\n\n" +
-      "Generated by `tools/run.sh graft.RegistryDoc` from `SparkEntry.queries`\n" +
-      "and the registration comments in `SparkEntry.scala` — regenerate after\n" +
-      s"any registry change (RegistryDocSpec pins the sync). ${rows.size}\n" +
-      "queries; \"DuckDB SQL\" = cross-engine oracled by the driver's\n" +
-      "correctness gate, \"rows-only\" = smoke-checked.\n\n" +
+      "Generated by `tools/run.sh graft.RegistryDoc` from `SparkEntry.all` and\n" +
+      "the registration comments in `src/main/scala/graft/registry/` — regenerate\n" +
+      s"after any registry change (RegistryDocSpec pins the sync). ${rows.size}\n" +
+      "queries; each record carries the DuckDB SQL that the correctness gate\n" +
+      "compares its program against.\n\n" +
       "| query | capability | operator entry points | oracle |\n" +
       "|---|---|---|---|\n" +
       rows.mkString("\n") + "\n"
@@ -99,6 +102,6 @@ object RegistryDoc {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("REGISTRY.md")
     Files.writeString(Paths.get(out), render())
-    println(s"wrote $out (${SparkEntry.queries.size} queries)")
+    println(s"wrote $out (${SparkEntry.all.size} queries)")
   }
 }

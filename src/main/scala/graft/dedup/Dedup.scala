@@ -300,22 +300,16 @@ object Dedup {
       .select(col(idCol).as("id"), shingles(col(textCol), n).as("sh_arr"))
       .select(col("id"), explode(col("sh_arr")).as("sh"))
 
-  /** All-pairs n-gram Jaccard similarity ≥ minJaccard, via inverted-index
-    * join on shingles (shuffle keyed by shingle, quadratic only within a
-    * shingle's posting list). `maxDocFreq` drops shingles that occur in more
-    * than that many documents — the skew guard that keeps hot shingles from
-    * exploding the join at corpus scale (they contribute almost no
-    * discriminative signal anyway).
-    */
-  def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String, n: Int,
-                        minJaccard: Double, maxDocFreq: Option[Long] = None): DataFrame =
-    ngramJaccardFromPostings(shinglePostings(df, idCol, textCol, n),
-      minJaccard, maxDocFreq)
-
-  /** [[ngramJaccardPairs]] over pre-computed [[shinglePostings]] — pass a
-    * materialized (localCheckpoint'ed) frame to shingle the corpus exactly
-    * once: the lazy plan otherwise re-derives the explode for the per-doc
-    * sizes, the document-frequency filter, and both join sides.
+  /** All-pairs n-gram Jaccard similarity ≥ minJaccard over (id, shh)
+    * [[shinglePostings]], via inverted-index join on shingles (shuffle
+    * keyed by shingle, quadratic only within a shingle's posting list).
+    * `maxDocFreq` drops shingles that occur in more than that many
+    * documents — the skew guard that keeps hot shingles from exploding the
+    * join at corpus scale (they contribute almost no discriminative signal
+    * anyway). Pass a materialized (localCheckpoint'ed) postings frame to
+    * shingle the corpus exactly once: the lazy plan otherwise re-derives
+    * the explode for the per-doc sizes, the document-frequency filter, and
+    * both join sides.
     *
     * Shuffle economy: the posting-list join carries only (id, shingle-HASH)
     * — 16 bytes/row instead of the shingle string and per-doc counts; the
@@ -545,16 +539,11 @@ object Dedup {
     *
     * A run of c n-grams covers c + n − 1 consecutive shared tokens
     * (`run_tokens`). Returns pairs with run_kgrams ≥ minRun.
-    */
-  def alignedRuns(df: DataFrame, idCol: String, textCol: String, n: Int,
-                  minRun: Long, maxDocFreq: Option[Long] = None): DataFrame =
-    alignedRunsFromPostings(positionalShinglePostings(df, idCol, textCol, n),
-      n, minRun, maxDocFreq)
-
-  /** [[alignedRuns]] over pre-computed positional (id, pos, shh) postings.
-    * The postings frame is referenced up to three times (doc-frequency
-    * cap + both join sides) — pass a MATERIALIZED frame at corpus scale so
-    * the n-gram explode runs once (q111 does, via the entry layer's mat). */
+    *
+    * `p` is the positional (id, pos, shh) [[positionalShinglePostings]]
+    * frame, referenced up to three times (doc-frequency cap + both join
+    * sides) — pass a MATERIALIZED frame at corpus scale so the n-gram
+    * explode runs once (q111 does, via the registry's mat). */
   def alignedRunsFromPostings(p: DataFrame, n: Int, minRun: Long,
                               maxDocFreq: Option[Long]): DataFrame = {
     val filtered = maxDocFreq match {
@@ -585,20 +574,6 @@ object Dedup {
       .withColumn("run_tokens", col("run_kgrams") + (n - 1))
   }
 
-  /** Per-document n-gram novelty against everything that came before it in
-    * id order — the "how much of this doc is new text" curation signal
-    * (novelty ≈ 0 flags near-copies and boilerplate even when no single
-    * pair crosses a similarity threshold).
-    *
-    * A distinct shingle is NOVEL for the document with the smallest id
-    * containing it. One groupBy(hash)→min(id) over the postings (map-side
-    * partial min — the reduce side sees one row per distinct shingle), one
-    * hash-join back, one per-doc count: every shuffle is keyed by the
-    * shingle hash or the doc id, nothing is quadratic. The fraction is
-    * reported in exact integer milli (novel·1000 div total) — no float
-    * thresholds to desynchronize engines. Documents with fewer than n
-    * tokens have no shingles and report novelty 1000 (vacuously novel).
-    */
   /** Longest INTERNAL aligned n-gram repeat per document — verbatim
     * template spam detection: a doc that repeats a span verbatim (mail
     * footers, scraped nav blocks, generation loops) shows a long aligned
@@ -612,17 +587,14 @@ object Dedup {
     * n-grams repeated more than that many times WITHIN one doc before the
     * join: a degenerate "word word word …" doc would otherwise square its
     * own length (such docs are exactly what the q67 fraction flags, so the
-    * cap loses no signal). Returns every input id with its max repeat run
-    * (0 when the doc never repeats an n-gram at any displacement).
-    */
-  def selfAlignedRuns(df: DataFrame, idCol: String, textCol: String, n: Int,
-                      maxOccurrences: Long = 50L): DataFrame =
-    selfAlignedRunsFromPostings(df.select(col(idCol).as("id")),
-      positionalShinglePostings(df, idCol, textCol, n), n, maxOccurrences)
-
-  /** [[selfAlignedRuns]] over pre-computed positional postings — referenced
+    * cap loses no signal). Returns every id of `ids` (one `id` column)
+    * with its max repeat run (0 when the doc never repeats an n-gram at any
+    * displacement).
+    *
+    * `p` is the positional [[positionalShinglePostings]] frame, referenced
     * four times (occurrence cap + anti-join + both pair sides), so pass a
-    * MATERIALIZED frame at corpus scale (q114 does, via the entry's mat). */
+    * MATERIALIZED frame at corpus scale (q114 does, via the registry's
+    * mat). */
   def selfAlignedRunsFromPostings(ids: DataFrame, p: DataFrame, n: Int,
                                   maxOccurrences: Long): DataFrame = {
     val hot = p.groupBy(col("id"), col("shh"))
@@ -648,15 +620,24 @@ object Dedup {
           .otherwise(lit(0L)))
   }
 
-  def ngramNovelty(df: DataFrame, idCol: String, textCol: String,
-                   n: Int): DataFrame =
-    ngramNoveltyFromPostings(df.select(col(idCol).as("id")),
-      shinglePostings(df, idCol, textCol, n))
-
-  /** [[ngramNovelty]] over pre-computed (id, shh) postings. The postings
-    * frame is referenced twice (first-seen aggregate + join-back side) —
-    * pass a MATERIALIZED frame so the shingle explode runs once, the way
-    * q69 shares its postings (the entry layer does this via mat()). */
+  /** Per-document n-gram novelty against everything that came before it in
+    * id order — the "how much of this doc is new text" curation signal
+    * (novelty ≈ 0 flags near-copies and boilerplate even when no single
+    * pair crosses a similarity threshold).
+    *
+    * A distinct shingle is NOVEL for the document with the smallest id
+    * containing it. One groupBy(hash)→min(id) over the postings (map-side
+    * partial min — the reduce side sees one row per distinct shingle), one
+    * hash-join back, one per-doc count: every shuffle is keyed by the
+    * shingle hash or the doc id, nothing is quadratic. The fraction is
+    * reported in exact integer milli (novel·1000 div total) — no float
+    * thresholds to desynchronize engines. Documents of `ids` with no
+    * postings (fewer than n tokens) report novelty 1000 (vacuously novel).
+    *
+    * The (id, shh) [[shinglePostings]] frame is referenced twice
+    * (first-seen aggregate + join-back side) — pass a MATERIALIZED frame so
+    * the shingle explode runs once, the way q69 shares its postings (the
+    * registry does this via mat()). */
   def ngramNoveltyFromPostings(ids: DataFrame, postings: DataFrame): DataFrame = {
     val first = postings.groupBy(col("shh")).agg(min(col("id")).as("first_id"))
     val perDoc = postings.join(first, Seq("shh"))
@@ -759,8 +740,9 @@ object Dedup {
     * training pipeline — boilerplate headers/footers/navigation repeat
     * across millions of pages that are NOT document-level duplicates.
     *
-    * `segsCol` is the ordered array of segments for the row (use
-    * [[lineDedup]] for plain newline splitting). Output: one row per input
+    * `segsCol` is the ordered array of segments for the row
+    * (`split(col(textCol), "\n")` for the literal C4 "discard any line
+    * occurring more than k times" rule). Output: one row per input
     * doc — (id, text_clean, n_kept, n_removed) — including docs whose
     * every segment was removed (empty text_clean), so the caller decides
     * the drop threshold.
@@ -813,12 +795,6 @@ object Dedup {
       .select(col("id") +: carry :+ col("text_clean") :+ col("n_kept") :+
         col("n_removed"): _*)
   }
-
-  /** [[segmentDedup]] splitting `textCol` on newlines — the literal C4
-    * "discard any line occurring more than k times" rule. */
-  def lineDedup(df: DataFrame, idCol: String, textCol: String,
-                maxCount: Long): DataFrame =
-    segmentDedup(df, idCol, split(col(textCol), "\n"), maxCount)
 
   /** Fixed-size token blocks of `text` — the segmenter for corpora without
     * line structure (transcripts, OCR). Binds the token split through a
@@ -994,9 +970,9 @@ object Dedup {
   /** MinHash + LSH candidate pairs: band the signature, bucket-join on
     * (band index, band value). Docs agreeing on ANY band become candidates —
     * the classic S-curve trade-off; verify candidates with
-    * [[ngramJaccardPairs]] or exact comparison downstream. Quadratic within
+    * [[ngramJaccardFromPostings]] or exact comparison downstream. Quadratic within
     * a bucket — the pair-LISTING shape; for duplicate-GROUP resolution use
-    * [[minhashStarEdges]]. */
+    * [[starEdgesFromBuckets]] over [[minhashBandPostings]]. */
   def minhashLshCandidates(df: DataFrame, idCol: String, textCol: String, n: Int,
                            numHashes: Int, bands: Int): DataFrame =
     candidatePairsFromBandPostings(
@@ -1017,29 +993,13 @@ object Dedup {
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
 
-  /** MinHash STAR edges for component resolution: per (band, value) bucket,
-    * one edge from the bucket's min id to every other member — linear in
-    * postings where the all-pairs bucket self-join is quadratic in bucket
-    * size. Connected components over these edges equal those of the full
-    * "agrees on ≥1 band" candidate graph (every bucket stays connected
-    * through its min). Band values are ~`64/bands × numHashes/bands` bits of
-    * signature (the q70 default: 2×32-bit minima per band), so chance
-    * band collisions stay negligible far past trillion-doc corpora —
-    * unlike 16-bit simhash bands, which need Hamming verification
-    * ([[simhashVerifiedEdgesFromHashes]]). */
-  def minhashStarEdges(df: DataFrame, idCol: String, textCol: String, n: Int,
-                       numHashes: Int, bands: Int): DataFrame =
-    starEdgesFromBuckets(
-      minhashBandPostings(df, idCol, textCol, n, numHashes, bands),
-      Seq("band_idx", "band_val"))
-
   /** Incremental NEAR-dup screening — the MinHash counterpart of
     * [[incrementalExactDedup]]: for each NEW-batch document, how many of
     * its signature bands collide with the persisted corpus index
     * (`indexBandPostings` — a stored [[minhashBandPostings]] frame; only
     * its (band_idx, band_val) columns are read). Rows appear only for
     * suspects (≥1 matching band); the count is the S-curve signal — gate on
-    * it or verify suspects with [[ngramJaccardPairs]] downstream.
+    * it or verify suspects with [[ngramJaccardFromPostings]] downstream.
     *
     * Skew shape: the batch's DISTINCT buckets (map-side-combined — a
     * degenerate all-identical batch collapses before any shuffle)
@@ -1076,7 +1036,15 @@ object Dedup {
 
   /** Star edges (bucket-min id → member id) over arbitrary bucket postings
     * with an `id` column — the linear group-resolution core shared by the
-    * simhash and MinHash paths. Pass a MATERIALIZED (localCheckpoint'ed)
+    * simhash and MinHash paths: linear in postings where the all-pairs
+    * bucket self-join is quadratic in bucket size, and connected components
+    * over these edges equal those of the full "shares a bucket" candidate
+    * graph (every bucket stays connected through its min). MinHash band
+    * values are ~`64/bands × numHashes/bands` bits of signature (the q70
+    * default: 2×32-bit minima per band), so chance band collisions stay
+    * negligible far past trillion-doc corpora — unlike 16-bit simhash
+    * bands, which need Hamming verification
+    * ([[simhashVerifiedEdgesFromHashes]]). Pass a MATERIALIZED (localCheckpoint'ed)
     * postings frame when the banding is expensive: the frame is referenced
     * twice (min aggregate + join probe) and a lazy plan would re-derive it.
     *

@@ -63,17 +63,12 @@ object Crypto {
 
   /** Large-trades analysis (J1/F5/P24, `binance_analysis.py:376-418`):
     * join trades to candles on the minute bucket, attach forward returns,
-    * keep trades above the notional quantile, top-k by notional. */
-  def largeTrades(trades: DataFrame, candles: DataFrame, quantile: Double,
-                  topN: Int): DataFrame =
-    largeTradesReport(trades, candles, quantile, topN)._1
-
-  /** [[largeTrades]] plus the one-row scalar report the reference's JSON
-    * artifact carries alongside the top rows
-    * (`binance_analysis.py:433-440`): total trade rows, the notional
-    * threshold at `quantile`, and the count at-or-above it. Both frames
-    * derive from the same threshold plan; they are separate ACTIONS, so an
-    * artifact job that writes both scans the trades twice — trades tables
+    * keep trades above the notional quantile, top-k by notional — plus the
+    * one-row scalar report the reference's JSON artifact carries alongside
+    * the top rows (`binance_analysis.py:433-440`): total trade rows, the
+    * notional threshold at `quantile`, and the count at-or-above it. Both
+    * frames derive from the same threshold plan; they are separate ACTIONS,
+    * so an artifact job that writes both scans the trades twice — trades tables
     * are minute-bucketed fact slices, not the 100 TB corpus, and the
     * alternative (caching) would pin an arbitrarily large frame for two
     * small reports. */

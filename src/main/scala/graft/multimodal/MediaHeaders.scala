@@ -10,12 +10,10 @@ import org.apache.spark.sql.functions._
   * them at a FIXED offset — PNG (IHDR, big-endian), GIF (logical screen,
   * little-endian), BMP (BITMAPINFOHEADER, little-endian), WAV (RIFF fmt
   * chunk, little-endian). JPEG dims and AIFF rate are variable-position /
-  * non-integer fields and stay with the JvmCodec reader.
+  * non-integer fields, so those report kind only.
   *
-  * This is the codegen-friendly fast path for the header fields; the full
-  * pixel/sample decode lives at [[Multimodal.JvmCodec]]'s partition
-  * boundary (pure-JDK javax.imageio / javax.sound.sampled), and the two
-  * cross-check each other in MultimodalSpec.
+  * MultimodalSpec cross-checks every field against a pure-JDK reader
+  * (javax.imageio / javax.sound.sampled) on real container bytes.
   * Parsing the fixed-offset header fields is exact byte arithmetic, which
   * is precisely what a Column expression does best: it runs inside
   * whole-stage codegen and never leaves the scan's projection.
@@ -78,9 +76,8 @@ object MediaHeaders {
     * ancient fixed-width BITMAPCOREHEADER variant reports null rather than
     * a misread); null for audio/unknown. JPEG dims are NOT a fixed-offset
     * field (they live in a variable-position SOF marker segment), so JPEG
-    * reports kind only and dimension extraction stays with
-    * [[Multimodal.JvmCodec]]'s real reader — same for AIFF's 80-bit
-    * extended-float sample rate. */
+    * reports kind only — same for AIFF's 80-bit extended-float sample
+    * rate. */
   def width(bin: Column): Column =
     when(isPng(bin) && has(bin, 20), beInt(bin, 17))
       .when(isGif(bin) && has(bin, 8), leShort(bin, 7))

@@ -1,141 +1,22 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
-/** Multimodal-column plumbing: opaque `binary` payloads + typed metadata.
-  *
-  * The Spark-side architecture — schema, partition-wise batch decode via
-  * `mapPartitions`, stable UDF signature — is real and tested, and so is
-  * the default codec: [[JvmCodec]] decodes image payloads (PNG/GIF/JPEG/
-  * BMP) through `javax.imageio` and audio payloads (WAV/AIFF/AU) through
-  * `javax.sound.sampled`, both pure-JDK, no native libraries. Payloads no
-  * JDK reader understands (including the synthetic text blobs the test
-  * tables carry) fall back to [[StubCodec]]'s deterministic fake, so the
-  * pipeline degrades rather than fails on alien bytes. A heavier decoder
-  * (JNI/FFI or subprocess, e.g. for video) swaps in at the same boundary
-  * without touching the pipeline shape: decode runs once per partition
-  * iterator, so codec init cost amortizes across the partition exactly
-  * like an Arrow-batched UDF would.
+/** Multimodal-column plumbing: opaque `binary` payloads + typed metadata,
+  * all pure `Column` expressions (codegen'd, no UDF, no decode). The real
+  * container-header fields come from [[MediaHeaders]]; a pixel/sample
+  * decoder (JNI/FFI or subprocess, e.g. for video) would sit at a
+  * `mapPartitions` boundary after [[sampleFrameIndexes]], so codec init
+  * cost amortizes across the partition like an Arrow-batched UDF.
   */
 object Multimodal {
-
-  /** Metadata produced by decoding one payload. */
-  val mediaMetaSchema: StructType = StructType(Seq(
-    StructField("width", IntegerType, nullable = false),
-    StructField("height", IntegerType, nullable = false),
-    StructField("channels", IntegerType, nullable = false),
-    StructField("n_frames", IntegerType, nullable = false)))
 
   /** Wrap a string column as the opaque binary payload + byte length —
     * the ingestion shape for media blobs arriving via parquet. */
   def withPayload(df: DataFrame, srcCol: String): DataFrame =
     df.withColumn("payload", col(srcCol).cast("binary"))
       .withColumn("byte_len", octet_length(col(srcCol)))
-
-  /** Deterministic fake codec — the fallback for payloads no real reader
-    * understands. Derives plausible dimensions from the payload bytes so
-    * pipelines over synthetic blobs stay reproducible. */
-  object StubCodec {
-    def decode(payload: Array[Byte]): Row = {
-      val n = payload.length
-      var h = 1469598103934665603L
-      var i = 0
-      while (i < math.min(n, 64)) { h ^= payload(i); h *= 1099511628211L; i += 1 }
-      val w = 64 + (Math.floorMod(h, 512L)).toInt
-      Row(w, 64 + Math.floorMod(n, 512), 3, 1 + Math.floorMod(n, 16))
-    }
-  }
-
-  /** Real pure-JDK codec: `javax.imageio` for images, `javax.sound.sampled`
-    * for audio. Image metadata comes from the format READER's header parse
-    * (`getWidth/getHeight/getImageTypes` — no pixel decode), so probing a
-    * multi-megabyte JPEG costs header bytes, not a full raster; only
-    * [[frame]] pays for pixels. Audio rows reuse the image-shaped meta
-    * schema as (sample_rate, 0, channels, n_audio_frames). */
-  object JvmCodec {
-    import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
-    import javax.imageio.ImageIO
-    import scala.util.Try
-
-    /** Run `f` over an image reader positioned on the payload, if any JDK
-      * reader claims the format. */
-    private def withImageReader[A](payload: Array[Byte])
-                                  (f: javax.imageio.ImageReader => A): Option[A] = {
-      val iis = ImageIO.createImageInputStream(new ByteArrayInputStream(payload))
-      try {
-        val readers = ImageIO.getImageReaders(iis)
-        if (!readers.hasNext) None
-        else {
-          val r = readers.next()
-          r.setInput(iis)
-          try Some(f(r)) finally r.dispose()
-        }
-      } finally iis.close()
-    }
-
-    private def decodeImage(payload: Array[Byte]): Option[Row] =
-      Try(withImageReader(payload) { r =>
-        val channels = Try {
-          val types = r.getImageTypes(0)
-          if (types.hasNext) types.next().getColorModel.getNumComponents else 3
-        }.getOrElse(3)
-        // allowSearch=true walks the container index — how animated GIFs
-        // report their frame count; single-image formats report 1.
-        val frames = Try(r.getNumImages(true)).getOrElse(1)
-        Row(r.getWidth(0), r.getHeight(0), channels, math.max(frames, 1))
-      }).toOption.flatten
-
-    private def decodeAudio(payload: Array[Byte]): Option[Row] =
-      Try {
-        val aff = javax.sound.sampled.AudioSystem
-          .getAudioFileFormat(new ByteArrayInputStream(payload))
-        val fmt = aff.getFormat
-        val frames = if (aff.getFrameLength > 0) aff.getFrameLength else 1
-        Row(math.round(fmt.getSampleRate), 0, fmt.getChannels.toInt, frames)
-      }.toOption
-
-    /** Metadata row per [[mediaMetaSchema]]; real decode where a JDK
-      * reader exists, [[StubCodec]] fake otherwise, all-zero for
-      * null/empty payloads (degrade, never crash). */
-    def decode(payload: Array[Byte]): Row =
-      if (payload == null || payload.isEmpty) Row(0, 0, 0, 0)
-      else decodeImage(payload).orElse(decodeAudio(payload))
-        .getOrElse(StubCodec.decode(payload))
-
-    /** Real frame extraction for image containers: decode image index
-      * min(idx, n-1) (animated GIF = that animation frame) and re-encode
-      * as PNG bytes. None for non-image payloads. */
-    def frame(payload: Array[Byte], idx: Int): Option[Array[Byte]] =
-      if (payload == null || payload.isEmpty) None
-      else Try(withImageReader(payload) { r =>
-        val n = math.max(Try(r.getNumImages(true)).getOrElse(1), 1)
-        val img = r.read(math.min(math.max(idx, 0), n - 1))
-        val out = new ByteArrayOutputStream()
-        ImageIO.write(img, "png", out)
-        out.toByteArray
-      }).toOption.flatten
-  }
-
-  /** Partition-wise decode: one `mapPartitions` pass, preserving the input
-    * partitioning (no shuffle). Output schema = input ++ mediaMetaSchema.
-    * Stays in the Dataset API (row encoder) rather than dropping to
-    * `df.rdd` — the plan keeps its columnar scan + codegen stages up to the
-    * decode boundary instead of forcing a full RDD conversion. */
-  def decodeMeta(spark: SparkSession, df: DataFrame): DataFrame = {
-    val inSchema = df.schema
-    val outSchema = StructType(inSchema.fields ++ mediaMetaSchema.fields)
-    val payloadIdx = inSchema.fieldIndex("payload")
-    implicit val enc: org.apache.spark.sql.Encoder[Row] =
-      org.apache.spark.sql.Encoders.row(outSchema)
-    df.mapPartitions { it =>
-      it.map { row =>
-        val meta = JvmCodec.decode(row.getAs[Array[Byte]](payloadIdx))
-        Row.fromSeq(row.toSeq ++ meta.toSeq)
-      }
-    }
-  }
 
   /** Pure-Column metadata derivation (oracle-portable variant): dimensions
     * as exact integer arithmetic on the byte length. */
@@ -148,8 +29,7 @@ object Multimodal {
     * 2·stride, …) of each clip. Pure-column `sequence` + `explode` — scan-
     * local, no shuffle; rows expand by ⌈n_frames/stride⌉, which at video
     * scale is exactly the fan-out a frame-level training pipeline wants to
-    * pay, and nothing more (the payload column is NOT duplicated
-    * per-frame until [[extractFrame]] actually slices it). */
+    * pay, and nothing more (the payload column is carried, not sliced). */
   def sampleFrameIndexes(df: DataFrame, nFramesCol: String,
                          stride: Int): DataFrame = {
     require(stride >= 1, s"stride must be >= 1, got $stride")
@@ -165,47 +45,10 @@ object Multimodal {
         .otherwise(array().cast("array<int>"))))
   }
 
-  /** Partition-wise frame extraction over (payload, frame_idx) rows —
-    * the decode boundary of a frame-sampling pipeline, same shape as
-    * [[decodeMeta]]: one `mapPartitions` pass, codec init amortized per
-    * partition, no shuffle. Image containers decode for real through
-    * [[JvmCodec.frame]] (animated-GIF index → PNG bytes); anything else
-    * degrades to a deterministic stub slice of the payload (a real video
-    * codec swaps in at this same boundary). Output schema =
-    * input ++ (frame_bytes BINARY). */
-  def extractFrame(df: DataFrame): DataFrame = {
-    val inSchema = df.schema
-    val outSchema = StructType(inSchema.fields :+
-      StructField("frame_bytes", BinaryType, nullable = true))
-    val payloadIdx = inSchema.fieldIndex("payload")
-    val frameIdx = inSchema.fieldIndex("frame_idx")
-    implicit val enc: org.apache.spark.sql.Encoder[Row] =
-      org.apache.spark.sql.Encoders.row(outSchema)
-    df.mapPartitions { it =>
-      it.map { row =>
-        val payload = row.getAs[Array[Byte]](payloadIdx)
-        val f = row.getInt(frameIdx)
-        // Real image decode first; non-image payloads get the deterministic
-        // 16-byte rotating-window stand-in. Null payload → null frame;
-        // empty payload → empty frame — a corrupt row degrades to a
-        // quarantineable value, never an AIOOBE/NPE that fails the job.
-        val frame =
-          if (payload == null) null
-          else if (payload.isEmpty) Array.empty[Byte]
-          else JvmCodec.frame(payload, f).getOrElse {
-            val n = payload.length
-            val start = Math.floorMod(f * 16, n)
-            Array.tabulate(math.min(16, n))(i => payload((start + i) % n))
-          }
-        Row.fromSeq(row.toSeq :+ frame)
-      }
-    }
-  }
-
   /** Stub batch resize: rewrites the metadata columns to the target box
     * (aspect-preserving fit, integer arithmetic) WITHOUT touching payload
     * bytes — the pure-column half of a resize stage; the byte transform
-    * itself belongs at the [[decodeMeta]]-style partition boundary. The
+    * itself belongs at a `mapPartitions` decode boundary. The
     * scale-down factor is ⌈max(w,h)/target⌉-style exact integer math so an
     * oracle can reproduce it. */
   def resizeMetaTo(df: DataFrame, target: Int): DataFrame = {

@@ -9,111 +9,19 @@ import org.apache.spark.sql.functions._
   * topics, vocabulary), the "most representative subset" a benchmark
   * builder or seed-set curator asks for.
   *
-  * Submodular maximization cannot be expressed as one declarative plan —
-  * each pick CHANGES the objective for the next — so the driver iterates
-  * the k rounds (k is small by contract: a human-sized selection), and the
-  * per-round work stays fully distributed:
-  *
-  *  - remaining postings = one LEFT-ANTI join against the covered-key set
-  *    (broadcast-able while covered is small; shuffle-hash beyond);
-  *  - marginal gains = one map-side-combined `groupBy(id).count`;
-  *  - the winner = `orderBy(gain desc, id).limit(1)` — TakeOrdered(1), ONE
-  *    collected row per round (same driver-scalar class as the IVF
-  *    centroid collects);
-  *  - the covered set re-materializes per round through [[graft.Materialize]]
-  *    so round r+1 plans one flat scan, not r nested unions — and the loop
-  *    manages its OWN round lifetime (the Materialize scaladoc's contract
-  *    for iterative operators): each round's covered frame is forced while
-  *    still current and the superseded round is unpersisted immediately, so
-  *    under `graft.materialize=disk` a large-k run holds at most two round
-  *    frames on executor storage instead of k corpus-scale leftovers.
+  * Strict greedy picks, in each of k rounds, the document with the largest
+  * marginal gain over the keys covered so far. Submodular maximization
+  * cannot be expressed as one declarative plan — each pick CHANGES the
+  * objective for the next — so instead of k driver-iterated rounds (two
+  * jobs each) both paths here run an in-memory lazy greedy inside one
+  * distributed job: [[greedyCoverExactSmall]] reproduces strict greedy
+  * exactly, [[greedyCoverApprox]] trades exactness for machine-scale k.
   *
   * Ties break on the smaller id, so the selection is value-deterministic
   * and an independent engine reproduces it exactly (the oracle unrolls the
   * same k rounds as CTEs).
   */
 object Coverage {
-
-  /** Guardrail on the driver-iterated round count: each selection round is
-    * TWO driver jobs (winner collect + covered_cum count), so cost is
-    * k × fixed job latency regardless of cluster size — fine for the
-    * human-sized selections this operator contracts for, quietly a
-    * multi-hour driver loop at k = 10⁴. Raise via `maxK` explicitly (the
-    * escape hatch for a caller who has read this paragraph and accepts the
-    * 2k-job bill); for machine-sized selections use [[greedyCoverApprox]]
-    * — the distributed two-round greedy with no per-round driver jobs. */
-  val DefaultMaxK = 1000
-
-  /** @param postings (id, key) rows; duplicates are collapsed
-    * @param k        number of documents to select (driver-iterated)
-    * @param maxK     loud-failure ceiling on k (see [[DefaultMaxK]])
-    * @return k rows (round, doc_id, gain, covered_cum): the pick of each
-    *         round, its marginal gain, and the cumulative distinct keys
-    *         covered; fewer than k rows when the corpus is exhausted
-    */
-  def greedyCover(postings: DataFrame, idCol: String, keyCol: String,
-                  k: Int, maxK: Int = DefaultMaxK): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    require(k <= maxK,
-      s"greedyCover: k=$k exceeds maxK=$maxK — each round is two driver " +
-        "jobs, so this loop costs k x fixed job latency at ANY cluster " +
-        "size; pass maxK explicitly if the 2k-job bill is intended")
-    val spark = postings.sparkSession
-    import spark.implicits._
-    def mat(df: DataFrame): DataFrame = graft.Materialize(df)
-    // Null tripwire (the Splits.assignSplit convention): a null key never
-    // matches the covered set through the anti-join, so it would re-count
-    // toward its doc's gain EVERY round — and the oracle's NOT-IN mirror
-    // excludes it from round 2 on, silently desynchronizing the engines.
-    // A null id would NPE at the winner collect. Fail loudly instead.
-    val p = mat(postings
-      .select(
-        when(col(idCol).isNull, raise_error(
-          lit("greedyCover: null id in postings"))).otherwise(col(idCol))
-          .cast("long").as("id"),
-        when(col(keyCol).isNull, raise_error(
-          lit("greedyCover: null key in postings"))).otherwise(col(keyCol))
-          .as("sh"))
-      .distinct())
-    var covered: DataFrame = null
-    val picks = scala.collection.mutable.ArrayBuffer[(Int, Long, Long, Long)]()
-    var r = 1
-    var exhausted = false
-    while (r <= k && !exhausted) {
-      val remaining =
-        if (covered == null) p else p.join(covered, Seq("sh"), "left_anti")
-      val top = remaining.groupBy(col("id")).agg(count(lit(1)).as("gain"))
-        .orderBy(col("gain").desc, col("id")).limit(1).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val id = top(0).getLong(0)
-        val gain = top(0).getLong(1)
-        val newCov = p.where(col("id") === id).select(col("sh"))
-        val prev = covered
-        covered = mat(
-          if (covered == null) newCov
-          else covered.union(newCov).distinct())
-        // covered_cum forces the new round's materialization; only THEN is
-        // the superseded round released. The eager release matters in the
-        // disk/lazy-persist modes (unpersist drops the cache-manager entry;
-        // without it the union chain either recomputes or leaks one cached
-        // corpus-scale frame per round). Under the default localCheckpoint
-        // mode unpersist is a no-op — checkpoint blocks are not
-        // cache-manager entries and are reclaimed by the ContextCleaner
-        // once the superseded frame is unreferenced, which the `prev`
-        // handoff below guarantees.
-        picks += ((r, id, gain, covered.count()))
-        if (prev != null) prev.unpersist(blocking = false)
-        r += 1
-      }
-    }
-    val out = picks.toSeq.toDF("round", "doc_id", "gain", "covered_cum")
-    // The result is a driver-local LocalRelation — nothing downstream reads
-    // p or the final covered frame, so release them before returning.
-    if (covered != null) covered.unpersist(blocking = false)
-    p.unpersist(blocking = false)
-    out
-  }
 
   /** Machine-scale approximate greedy max-coverage — the two-round
     * distributed greedy of Mirzasoleiman et al., "Distributed Submodular
@@ -127,10 +35,10 @@ object Coverage {
     * driver merge, whenever buckets ≤ fanIn). Constant-factor
     * approximation of exact greedy's (1−1/e) guarantee; measured ≥ 0.9×
     * exact coverage on the q170 fixture at k=100 (CoverageSpec), and
-    * EXACTLY equal to [[greedyCover]] whenever no bucket overflows k picks
+    * EXACTLY equal to strict greedy whenever no bucket overflows k picks
     * (then every doc is a candidate and the merge IS strict greedy).
     *
-    * Differences from [[greedyCover]] by design:
+    * Differences from strict greedy over raw keys by design:
     *  - Keys are hashed to 64 bits in-plan (xxhash64) before selection:
     *    bounds executor/driver memory regardless of key width and is
     *    engine-deterministic; a (vanishingly unlikely) collision merely
@@ -143,8 +51,7 @@ object Coverage {
     *    job + ⌈log_fanIn(buckets)⌉ merge levels ending in a driver merge
     *    over ≤ fanIn·k docs. No per-round driver loop, so k is bounded by
     *    memory (each bucket task holds its bucket's hashed postings; any
-    *    merge point holds ≤ fanIn groups' picks), not by k × job-latency —
-    *    the regime [[DefaultMaxK]] guards greedyCover against.
+    *    merge point holds ≤ fanIn groups' picks), not by k × job-latency.
     *
     * @param buckets partition-local greedy groups; 0 ⇒ defaultParallelism
     */
@@ -162,7 +69,7 @@ object Coverage {
   val ExactSmallMaxPostings = 100000000L
 
   /** EXACT greedy max-coverage for the small-corpus regime — the same
-    * selection as [[greedyCover]], computed inside ONE distributed job
+    * selection as strict greedy, computed inside ONE distributed job
     * instead of 2k driver-iterated rounds: with a single bucket every doc
     * lands in one [[lazyGreedy]] group, whose accelerated greedy IS strict
     * greedy (the Minoux bound argument in its scaladoc), and the driver
@@ -171,7 +78,7 @@ object Coverage {
     * exact greedy's, pick i maximizes the marginal over the remaining
     * SELECTED docs because it maximizes it over ALL remaining docs, and
     * the smaller-id tiebreak is shared — CoverageSpec asserts row-for-row
-    * equality against [[greedyCover]]).
+    * equality against a driver-iterated reference).
     *
     * Gains count xxhash64 key HASHES rather than raw keys (identical
     * barring 64-bit collision — the q42-family tolerance, and a no-op for
@@ -228,9 +135,10 @@ object Coverage {
       math.ceil(nPostings.toDouble / maxPostings).toInt)
 
   /** Null-tripwired distinct (id, kh) postings — the shared front of the
-    * bucketed paths. Same tripwire rationale as [[greedyCover]]: a null
-    * key/id would silently desynchronize gains (or NPE mid-heap); fail
-    * loudly in the plan. */
+    * bucketed paths: a null key never matches the covered set, so it would
+    * re-count toward its doc's gain every round (and the oracle's NOT-IN
+    * mirror excludes it), and a null id would NPE mid-heap; fail loudly in
+    * the plan. */
   private def preparedPostings(postings: DataFrame, idCol: String,
                                keyCol: String, tag: String): DataFrame =
     postings.select(
@@ -319,7 +227,7 @@ object Coverage {
   /** In-memory lazy greedy (Minoux's accelerated greedy, 1978): max-heap
     * on stale upper bounds — pop, recompute the true marginal gain against
     * the covered set, accept iff it still beats the next candidate's bound
-    * (ties to the smaller id, matching [[greedyCover]]'s tiebreak; the
+    * (ties to the smaller id, the strict-greedy tiebreak; the
     * heap also orders equal bounds by ascending id, so the tie WINNER pops
     * first). Submodularity makes bounds only ever decrease, so acceptance
     * is exact strict greedy; zero-gain candidates are dropped permanently.

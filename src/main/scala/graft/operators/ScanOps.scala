@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DoubleType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 /** Prefix-scan operators — linear recurrences (EWMA and friends) that no
   * built-in Spark construct expresses per-row: window functions have no
@@ -14,30 +14,15 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, StructType}
   * Recurrence (pandas `ewm(alpha).mean()` with `adjust=False`):
   *   y_0 = x_0;  y_i = (1−a)·y_{i−1} + a·x_i
   *
-  * Two shapes, chosen by series size:
-  *
-  *  - [[ewmaPerKey]] — many independent series, each bounded (per-symbol /
-  *    per-user time series). ONE hash shuffle on the key collects each
-  *    series as a sorted in-row array; the fold then runs sequentially
-  *    inside the row, so per-key work is linear and BIT-EXACT vs a
-  *    single-threaded reference — results are oracle-comparable. The typed
-  *    `map` is the deliberate (d)-tier escape hatch: it breaks codegen for
-  *    exactly one project, because no Catalyst expression can scan.
-  *    State per task is one series array — the same bound any per-key
-  *    window operator carries; a series too big for one row belongs to
-  *    [[ewmaGlobal]].
-  *
-  *  - [[ewmaGlobal]] — ONE series too large for any single row/executor
-  *    (a whole exchange feed as one stream). Classic two-phase segmented
-  *    scan (Blelloch-style over an associative affine monoid):
-  *    range-partition + sort, each partition summarises itself as an affine
-  *    map y_out = A·y_in + B (A = c^n, B = fold seeded from 0), the driver
-  *    composes the #partitions summaries sequentially (tiny), and each
-  *    partition replays with its exact incoming state. Two passes over a
-  *    localCheckpoint, no global single-task sort. The affine composition
-  *    reorders float ops vs a pure sequential fold — agreement is ~1e-12
-  *    relative (spec-asserted), not bitwise, which is why the ORACLE path
-  *    is ewmaPerKey and ewmaGlobal is the documented scale escape.
+  * [[ewmaPerKey]] runs many independent series, each bounded (per-symbol /
+  * per-user time series). ONE hash shuffle on the key collects each
+  * series as a sorted in-row array; the fold then runs sequentially
+  * inside the row, so per-key work is linear and BIT-EXACT vs a
+  * single-threaded reference — results are oracle-comparable. The typed
+  * `map` is the deliberate (d)-tier escape hatch: it breaks codegen for
+  * exactly one project, because no Catalyst expression can scan.
+  * State per task is one series array — the same bound any per-key
+  * window operator carries.
   */
 object ScanOps {
 
@@ -89,80 +74,5 @@ object ScanOps {
         order.map(o => col("__z.__series").getField(o).as(o)) :+
         col("__z.__series.__v").as(valueOut) :+
         col("__z.__ewma").as(out)): _*)
-  }
-
-  /** Whole-frame EWMA over ONE global series: returns (order..., valueOut,
-    * out). Scale shape: `numPartitions`-way range partition + in-partition
-    * sort (no single-task global sort), one summary pass, driver-side
-    * composition over `numPartitions` affine maps, one replay pass.
-    *
-    * The order columns must be a deterministic TOTAL order (unique keys);
-    * ties across a partition boundary would make the scan order, and thus
-    * the result, nondeterministic.
-    */
-  def ewmaGlobal(df: DataFrame, order: Seq[String], value: Column,
-                 alpha: Double, valueOut: String, out: String,
-                 numPartitions: Int = 0): DataFrame = {
-    require(alpha > 0 && alpha <= 1, s"alpha must be in (0,1], got $alpha")
-    require(order.nonEmpty, "order columns are required")
-    val spark = df.sparkSession
-    val c = 1.0 - alpha
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-
-    val slim = df.select((order.map(col) :+ value.cast("double").as(valueOut)): _*)
-    // localCheckpoint: both the summary pass and the replay pass read the
-    // SAME materialized sorted partitions — without it the replay would
-    // re-shuffle and could land rows in different partitions than the ones
-    // the summaries were computed from.
-    val sorted = graft.Materialize(slim
-      .repartitionByRange(parts, order.map(col): _*)
-      .sortWithinPartitions(order.map(col): _*))
-    val vIdx = order.length
-
-    // Pass 1 — per-partition affine summary (n, A = c^n, B = fold from 0,
-    // S = fold seeded by the partition's first element). Driver receives
-    // exactly `parts` summaries.
-    val summaries = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var n = 0L; var a = 1.0; var b = 0.0; var s = 0.0
-      it.foreach { r =>
-        val x = r.getDouble(vIdx)
-        if (n == 0L) s = x else s = c * s + alpha * x
-        a *= c; b = c * b + alpha * x
-        n += 1L
-      }
-      Iterator.single((pid, n, a, b, s))
-    }.collect().sortBy(_._1)
-
-    // Driver-side sequential composition: the incoming state of partition p
-    // is the folded state of everything before it (None = p sees the global
-    // head and seeds itself).
-    val incoming = new Array[Option[Double]](summaries.length)
-    var st: Option[Double] = None
-    summaries.foreach { case (pid, n, a, b, s) =>
-      incoming(pid) = st
-      if (n > 0L) st = Some(st match {
-        case Some(y) => a * y + b
-        case None    => s
-      })
-    }
-    val bc = spark.sparkContext.broadcast(incoming)
-
-    // Pass 2 — replay each partition's fold from its exact incoming state.
-    val outRows = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var y = 0.0
-      var seeded = bc.value(pid) match {
-        case Some(v) => y = v; true
-        case None    => false
-      }
-      it.map { r =>
-        val x = r.getDouble(vIdx)
-        y = if (!seeded) { seeded = true; x } else c * y + alpha * x
-        Row.fromSeq(r.toSeq :+ y)
-      }
-    }
-    val schema = StructType(sorted.schema.fields :+
-      org.apache.spark.sql.types.StructField(out, DoubleType, nullable = false))
-    spark.createDataFrame(outRows, schema)
   }
 }

@@ -1,17 +1,10 @@
 package graft.streaming
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.streaming.DataStreamWriter
-import graft.operators.UpsertWriter
-import graft.sources.Rest
 
 /** S6 — the reference's price-ticks polling loop (`src/main.py:19-28`,
-  * n iterations + sleep) superseded by a streaming micro-poll: a trigger
-  * stream (rate source in production, MemoryStream in tests) drives one
-  * REST fetch per micro-batch via foreachBatch; each tick upserts keyed by
-  * (symbol, poll_id), so checkpoint replay after failure is idempotent —
-  * the same effectively-once composition as the bars pipeline.
+  * n iterations + sleep): `Main.priceTicks` fetches each tick with host
+  * failover and parses the body here.
   */
 object Ticker {
 
@@ -22,45 +15,4 @@ object Ticker {
     val n = mapper.readTree(body)
     (n.get("symbol").asText(), n.get("price").asText().toDouble)
   }
-
-  /** Attach the polling sink to a trigger stream. Each micro-batch performs
-    * ONE driver-side control-plane fetch (ticker payloads are single rows —
-    * the data plane stays in the table being upserted). */
-  def pollingWriter(triggerStream: DataFrame, hosts: Seq[String], symbol: String,
-                    transport: Rest.Transport, tableDir: String,
-                    checkpointDir: String): DataStreamWriter[Row] =
-    triggerStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val body = Rest.fetchWithFailover(hosts,
-          s"/api/v3/ticker/price?symbol=$symbol", transport, pauseMs = 0)
-        val (sym, price) = parseTick(body)
-        import spark.implicits._
-        val tick = Seq((sym, batchId, price, System.currentTimeMillis()))
-          .toDF("symbol", "poll_id", "price", "fetched_at_ms")
-        // Short retention: per-trigger generations are tiny but frequent;
-        // one polling interval of protection bounds disk to a few copies.
-        UpsertWriter.upsert(spark, tick, tableDir, Seq("symbol", "poll_id"),
-          retainMillis = 5000L)
-      }
-
-  /** Production trigger: one row per micro-batch; poll cadence comes from
-    * the writer's `Trigger.ProcessingTime(intervalSec seconds)` (see
-    * [[pollingQuery]]), NOT from a sub-1 rate — the rate source parses
-    * `rowsPerSecond` as a long, so a fractional string like "0.2" throws
-    * NumberFormatException at stream start. */
-  def rateTrigger(spark: SparkSession): DataFrame =
-    spark.readStream.format("rate").option("rowsPerSecond", "1").load()
-
-  /** The full production S6 composition: rate-source trigger + processing-
-    * time cadence + the polling foreachBatch sink. Call `.start()` on the
-    * result. */
-  def pollingQuery(spark: SparkSession, hosts: Seq[String], symbol: String,
-                   transport: Rest.Transport, tableDir: String,
-                   checkpointDir: String, intervalSec: Int): DataStreamWriter[Row] =
-    pollingWriter(rateTrigger(spark), hosts, symbol, transport, tableDir,
-      checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(
-        s"${math.max(1, intervalSec)} seconds"))
 }

@@ -1,11 +1,13 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.registry.Query
 
 /** Driver-contract smoke: entry() yields rows; every declared query runs on
-  * sf0.001 and reproduces its committed golden ROW COUNT, and each oracleSql
-  * key has a matching query. The golden file makes silently dropping or
-  * breaking a query a build failure, not a runtime bench footnote. */
+  * sf0.001 and reproduces its committed golden ROW COUNT; query names are
+  * distinct and every record carries its oracle SQL. The golden file makes
+  * silently dropping or breaking a query a build failure, not a runtime
+  * bench footnote. */
 class EntrySpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -25,9 +27,20 @@ class EntrySpec extends AnyFunSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("oracleSql keys are a subset of queries") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracleSql without queries: $missing")
+  test("a repeated query name fails the registry's distinct-name check") {
+    val run: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame =
+      (s, _) => s.range(1).toDF()
+    val twice = Seq(Query("q_dup", run, "SELECT 1"), Query("q_dup", run, "SELECT 2"))
+    val e = intercept[IllegalArgumentException](Query.distinct(twice))
+    assert(e.getMessage.contains("q_dup"))
+    val once = Seq(Query("q_a", run, "SELECT 1"), Query("q_b", run, "SELECT 2"))
+    assert(Query.distinct(once) == once)
+    assert(SparkEntry.queries.size == SparkEntry.all.size)
+  }
+
+  test("every registered query carries non-blank oracle SQL") {
+    val blank = SparkEntry.all.filter(_.oracleSql.trim.isEmpty).map(_.name)
+    assert(blank.isEmpty, s"queries without oracle SQL: $blank")
   }
 
   test("every golden query is still declared (none silently dropped)") {

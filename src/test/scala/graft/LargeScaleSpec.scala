@@ -171,41 +171,6 @@ class LargeScaleSpec extends AnyFunSuite {
       f"4× data cost $ratio%.1f× wall — super-linear; quadratic would be ~16×")
   }
 
-  /** ONE global series — the degeneracy ScanOps.ewmaGlobal exists for (a
-    * whole feed as a single ordered stream; any per-key shape would hold
-    * it as one giant array/window). The segmented scan must agree with a
-    * driver-side sequential fold (to float tolerance — the driver-side
-    * affine composition reorders ops) and scale ~linearly. */
-  private def ewmaPipeline(n: Long): Double = {
-    val df = spark.range(n).select(col("id").as("seq"),
-      (col("id") % 997).cast("double").as("x"))
-    operators.ScanOps.ewmaGlobal(df, Seq("seq"), col("x"), alpha = 0.05,
-        "x", "e", numPartitions = 64)
-      .agg(sum(col("e"))).head().getDouble(0)
-  }
-
-  test("global EWMA segmented scan scales ~linearly on ONE series", LargeScale) {
-    val small = 1000000L
-    val large = 4000000L
-    ewmaPipeline(10000L)
-    val (sumSmall, tSmall) = timed(ewmaPipeline(small))
-    val (sumLarge, tLarge) = timed(ewmaPipeline(large))
-    // Driver-side sequential reference at the small size.
-    var y = 0.0; var ref = 0.0; var i = 0L
-    while (i < small) {
-      val x = (i % 997).toDouble
-      y = if (i == 0L) x else 0.95 * y + 0.05 * x
-      ref += y; i += 1L
-    }
-    assert(math.abs(sumSmall - ref) / math.abs(ref) < 1e-9,
-      s"segmented scan sum $sumSmall vs sequential reference $ref")
-    val ratio = tLarge / tSmall
-    info(f"ewma: $small%,d rows in $tSmall%.1f s; $large%,d rows in " +
-      f"$tLarge%.1f s (ratio $ratio%.1f× for 4× data)")
-    assert(ratio < 10.0,
-      f"4× data cost $ratio%.1f× wall — super-linear")
-  }
-
   /** ONE language holding 80% of the corpus, with a heavy tie at one value
     * — the exact skew `ntile(10) OVER (PARTITION BY lang ORDER BY q)` would
     * serialize through a single group-sized sort task. The histogram path's

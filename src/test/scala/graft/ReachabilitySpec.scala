@@ -4,10 +4,10 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps test-only code out of `src/main`: every top-level `object` there
-  * must be reachable from the product, not just from specs. An object
-  * passes when, with comments and string literals stripped, at least one
-  * of these holds:
+/** Keeps test-only code out of `src/main`: every top-level `object`,
+  * `class` and `trait` there must be reachable from the product, not just
+  * from specs. A declaration passes when, with comments and string
+  * literals stripped, at least one of these holds:
   *  - another `src/main` file names it;
   *  - its own file names it outside its body (the codegen helpers that
   *    `Expressions` calls);
@@ -59,8 +59,9 @@ class ReachabilitySpec extends AnyFunSuite {
   }
 
   private val Ident = """[A-Za-z_][A-Za-z0-9_]*""".r
-  private val TopObject =
-    """(?m)^(?:(?:private|protected)(?:\[\w+\])? |case |final )*object (\w+)""".r
+  private val TopDecl =
+    ("""(?m)^(?:(?:private|protected)(?:\[\w+\])? |case |final |abstract |sealed )*""" +
+      """(?:object|class|trait) (\w+)""").r
 
   private def files(dir: String, exts: String*): Seq[Path] = {
     val root = Paths.get(dir)
@@ -98,7 +99,7 @@ class ReachabilitySpec extends AnyFunSuite {
     }
   }
 
-  /** Top-level `src/main` objects that nothing outside the specs names. */
+  /** Top-level `src/main` declarations that nothing outside the specs names. */
   private def unreachable(): Seq[String] = {
     val main = files("src/main/scala", ".scala")
       .map(p => p -> strip(Files.readString(p))).toMap
@@ -108,7 +109,7 @@ class ReachabilitySpec extends AnyFunSuite {
         files("tools", ".sh", ".py").flatMap(p => refs(Files.readString(p)))
     val outsideRefs = outside.toSet
     main.toSeq.flatMap { case (p, s) =>
-      TopObject.findAllMatchIn(s).flatMap { m =>
+      TopDecl.findAllMatchIn(s).flatMap { m =>
         val name = m.group(1)
         val end = bodyEnd(s, m.end)
         val body = s.substring(m.start, end)
@@ -128,12 +129,19 @@ class ReachabilitySpec extends AnyFunSuite {
     assert(refs(strip(src)) == Set("val", "a", "Foo", "x", "b", "Grault", "w"))
   }
 
+  test("top-level objects, classes and traits are all checked; nested ones are not") {
+    val src = "object A {\n  class Nested\n}\nfinal case class B(x: Int)\n" +
+      "class C extends (Int => Int) { def apply(i: Int) = i }\n" +
+      "private[graft] sealed trait D\n"
+    assert(TopDecl.findAllMatchIn(src).map(_.group(1)).toSeq == Seq("A", "B", "C", "D"))
+  }
+
   test("every src/main object has a caller outside the specs") {
     assert(files("src/main/scala", ".scala").nonEmpty,
       "run from the repository root")
     val orphans = unreachable()
     assert(orphans.isEmpty,
-      s"src/main objects named only by specs (move them to src/test or " +
+      s"src/main declarations named only by specs (move them to src/test or " +
         s"delete them): ${orphans.mkString(", ")}")
   }
 }

@@ -37,10 +37,9 @@ class RegistryDocSpec extends AnyFunSuite {
     // naming an operator entry point, or a WORD-BOUNDARY prefix marked
     // with an explicit ellipsis — never a hard character clip
     // ("per-group windo", the r12 artifact).
-    val src = Files.readString(
-      Paths.get("src/main/scala/graft/SparkEntry.scala"))
-    val parsed = RegistryDoc.parse(src)
-    assert(parsed.nonEmpty)
+    val parsed = RegistryDoc.Families
+      .map(f => RegistryDoc.parse(Files.readString(Paths.get(f)))).reduce(_ ++ _)
+    assert(parsed.keySet == SparkEntry.queries.keySet)
     parsed.foreach { case (name, (cap, _)) =>
       assert(cap.nonEmpty, s"$name: empty capability")
       assert(cap.length <= 121, s"$name: capability over length cap: $cap")

@@ -158,7 +158,8 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("ngramJaccardPairs finds near-dups and exact dups") {
-    val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", n = 3, minJaccard = 0.5)
+    val pairs = Dedup.ngramJaccardFromPostings(
+        Dedup.shinglePostings(docs, "doc_id", "text", n = 3), minJaccard = 0.5)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs.contains((0L, 3L))) // exact dup → jaccard 1.0
     assert(pairs.contains((0L, 1L)) || pairs.contains((1L, 3L))) // near-dup
@@ -166,7 +167,8 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("ngram jaccard of exact dup is 1.0") {
-    val j = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.9)
+    val j = Dedup.ngramJaccardFromPostings(
+        Dedup.shinglePostings(docs, "doc_id", "text", 3), 0.9)
       .where(col("id_a") === 0 && col("id_b") === 3)
       .select("jaccard").as[Double].head()
     assert(j == 1.0)
@@ -177,7 +179,8 @@ class DedupSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     // 'common shingle text' and 'shingle text here' appear in all 10 docs;
     // capped at 5 they contribute nothing, leaving no pair ≥ 0.3.
-    val capped = Dedup.ngramJaccardPairs(spam, "doc_id", "text", 3, 0.3, maxDocFreq = Some(5L))
+    val capped = Dedup.ngramJaccardFromPostings(
+      Dedup.shinglePostings(spam, "doc_id", "text", 3), 0.3, maxDocFreq = Some(5L))
     assert(capped.count() == 0)
   }
 
@@ -192,7 +195,8 @@ class DedupSpec extends AnyFunSuite {
     assert(shingled(0L) == 0 && shingled(1L) == 0 && shingled(2L) == 0)
     assert(shingled(3L) == 1)
     // The full pipelines run end-to-end over the mixed corpus.
-    val pairs = Dedup.ngramJaccardPairs(short, "doc_id", "text", 3, 0.5)
+    val pairs = Dedup.ngramJaccardFromPostings(
+        Dedup.shinglePostings(short, "doc_id", "text", 3), 0.5)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs == Set((3L, 4L))) // only the 3-token exact dups can pair
     Dedup.minhashLshCandidates(short, "doc_id", "text", 3, 8, 4).count() // no throw
@@ -277,7 +281,9 @@ class DedupSpec extends AnyFunSuite {
       graft.operators.Graph.connectedComponents(
           corpus.select(col("doc_id")), "doc_id", edges, "id_a", "id_b")
         .as[(Long, Long)].collect().toMap
-    val star = Dedup.minhashStarEdges(corpus, "doc_id", "text", 3, 8, 4)
+    val star = Dedup.starEdgesFromBuckets(
+      Dedup.minhashBandPostings(corpus, "doc_id", "text", 3, 8, 4),
+      Seq("band_idx", "band_val"))
     val allPairs = Dedup.minhashLshCandidates(corpus, "doc_id", "text", 3, 8, 4)
     assert(components(star) == components(allPairs))
   }
@@ -550,7 +556,7 @@ class DedupSpec extends AnyFunSuite {
       (4L, null.asInstanceOf[String]) // null text must not vanish
     ).toDF("doc_id", "text")
     // "footer text" occurs twice (== maxCount) → kept.
-    val got = Dedup.lineDedup(df, "doc_id", "text", maxCount = 2L)
+    val got = Dedup.segmentDedup(df, "doc_id", split(col("text"), "\n"), maxCount = 2L)
       .as[(Long, String, Long, Long)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
     assert(got(0L) == (("unique line zero\nfooter text", 2L, 1L)))
@@ -621,7 +627,8 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("ngramNovelty: first occurrence owns the shingle, dups score zero") {
-    val got = Dedup.ngramNovelty(docs, "doc_id", "text", n = 3)
+    val got = Dedup.ngramNoveltyFromPostings(docs.select(col("doc_id").as("id")),
+        Dedup.shinglePostings(docs, "doc_id", "text", n = 3))
       .select("id", "n_shingles", "novel_shingles", "novelty_milli")
       .as[(Long, Long, Long, Long)].collect().map(r => r._1 -> r).toMap
     // doc0: 10 tokens → 8 distinct 3-grams, all first-seen.
@@ -636,7 +643,8 @@ class DedupSpec extends AnyFunSuite {
 
   test("ngramNovelty: shingle-less docs report vacuous novelty 1000") {
     val tiny = Seq((1L, "only two"), (2L, "three tokens here")).toDF("doc_id", "text")
-    val got = Dedup.ngramNovelty(tiny, "doc_id", "text", n = 3)
+    val got = Dedup.ngramNoveltyFromPostings(tiny.select(col("doc_id").as("id")),
+        Dedup.shinglePostings(tiny, "doc_id", "text", n = 3))
       .select("id", "n_shingles", "novelty_milli")
       .as[(Long, Long, Long)].collect().map(r => r._1 -> r).toMap
     assert(got(1L) == (1L, 0L, 1000L))
@@ -644,7 +652,9 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("alignedRuns finds the full overlap run of near-duplicates") {
-    val got = Dedup.alignedRuns(docs, "doc_id", "text", n = 3, minRun = 3)
+    val got = Dedup.alignedRunsFromPostings(
+        Dedup.positionalShinglePostings(docs, "doc_id", "text", 3), n = 3,
+        minRun = 3, maxDocFreq = None)
       .select("id_a", "id_b", "run_kgrams", "run_tokens")
       .as[(Long, Long, Long, Long)].collect()
       .map(r => (r._1, r._2) -> (r._3, r._4)).toMap
@@ -662,12 +672,16 @@ class DedupSpec extends AnyFunSuite {
     val ab = Seq(
       (10L, "a b c d X e f g h"),
       (20L, "a b c d Y e f g h")).toDF("doc_id", "text")
-    val got = Dedup.alignedRuns(ab, "doc_id", "text", n = 3, minRun = 2)
+    val got = Dedup.alignedRunsFromPostings(
+        Dedup.positionalShinglePostings(ab, "doc_id", "text", 3), n = 3,
+        minRun = 2, maxDocFreq = None)
       .select("id_a", "id_b", "run_kgrams", "run_tokens")
       .as[(Long, Long, Long, Long)].collect()
     assert(got.toSeq == Seq((10L, 20L, 2L, 4L)))
     // minRun above the longest island filters the pair out entirely.
-    assert(Dedup.alignedRuns(ab, "doc_id", "text", n = 3, minRun = 3).isEmpty)
+    assert(Dedup.alignedRunsFromPostings(
+      Dedup.positionalShinglePostings(ab, "doc_id", "text", 3), n = 3,
+      minRun = 3, maxDocFreq = None).isEmpty)
   }
 
   test("selfAlignedRuns finds the longest internal verbatim repeat") {
@@ -676,7 +690,9 @@ class DedupSpec extends AnyFunSuite {
     val df = Seq(
       (1L, "a b c d e a b c d x"),
       (2L, "all these tokens appear exactly once here")).toDF("doc_id", "text")
-    val got = Dedup.selfAlignedRuns(df, "doc_id", "text", n = 3)
+    val got = Dedup.selfAlignedRunsFromPostings(df.select(col("doc_id").as("id")),
+        Dedup.positionalShinglePostings(df, "doc_id", "text", 3), n = 3,
+        maxOccurrences = 50L)
       .select("id", "rep_run_kgrams", "rep_run_tokens")
       .as[(Long, Long, Long)].collect().map(r => r._1 -> r).toMap
     assert(got(1L) == (1L, 2L, 4L))
@@ -686,12 +702,14 @@ class DedupSpec extends AnyFunSuite {
   test("selfAlignedRuns occurrence cap neutralizes degenerate repetition") {
     val spam = Seq((1L, "w w w w w w")).toDF("doc_id", "text")
     // Uncapped: "w w w" at pos 0-3, displacement 1 island of 3.
-    val loose = Dedup.selfAlignedRuns(spam, "doc_id", "text", n = 3,
+    val loose = Dedup.selfAlignedRunsFromPostings(spam.select(col("doc_id").as("id")),
+        Dedup.positionalShinglePostings(spam, "doc_id", "text", 3), n = 3,
         maxOccurrences = 50)
       .select("rep_run_kgrams").as[Long].head()
     assert(loose == 3L)
     // Cap below the occurrence count drops the gram before the self-join.
-    val capped = Dedup.selfAlignedRuns(spam, "doc_id", "text", n = 3,
+    val capped = Dedup.selfAlignedRunsFromPostings(spam.select(col("doc_id").as("id")),
+        Dedup.positionalShinglePostings(spam, "doc_id", "text", 3), n = 3,
         maxOccurrences = 3)
       .select("rep_run_kgrams").as[Long].head()
     assert(capped == 0L)
@@ -700,8 +718,9 @@ class DedupSpec extends AnyFunSuite {
   test("alignedRuns maxDocFreq cap drops ubiquitous n-grams") {
     // Every 3-gram of docs 0/3 appears in 2 documents; a cap of 1 removes
     // them all, so no pair survives.
-    val none = Dedup.alignedRuns(docs, "doc_id", "text", n = 3, minRun = 1,
-      maxDocFreq = Some(1L))
+    val none = Dedup.alignedRunsFromPostings(
+      Dedup.positionalShinglePostings(docs, "doc_id", "text", 3), n = 3,
+      minRun = 1, maxDocFreq = Some(1L))
     assert(none.isEmpty)
   }
 

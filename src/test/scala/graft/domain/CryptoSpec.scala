@@ -71,8 +71,8 @@ class CryptoSpec extends AnyFunSuite {
 
   test("largeTrades joins forward returns on the minute bucket") {
     val trades = Synthetic.syntheticTrades(spark, "AAA", 500, 1704067200L)
-    val out = Crypto.largeTrades(trades, candles.where(col("symbol") === "AAA"),
-      quantile = 0.9, topN = 20)
+    val out = Crypto.largeTradesReport(trades, candles.where(col("symbol") === "AAA"),
+      quantile = 0.9, topN = 20)._1
     assert(out.count() <= 20 && out.count() > 0)
     assert(out.columns.contains("fwd_ret_5"))
   }

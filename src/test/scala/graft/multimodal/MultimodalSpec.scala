@@ -9,31 +9,17 @@ class MultimodalSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
+  /** (width, height, channels, n_frames) of the reference JDK reader. */
+  private def decoded(bytes: Array[Byte]): (Int, Int, Int, Int) = {
+    val r = JvmCodec.decode(bytes)
+    (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3))
+  }
+
   test("payload plumbing: binary column + byte length") {
     val df = Multimodal.withPayload(Seq((1L, "abc"), (2L, "ab€")).toDF("id", "src"), "src")
     val rows = df.select("id", "byte_len").as[(Long, Int)].collect().toMap
     assert(rows(1L) == 3 && rows(2L) == 5) // € is 3 bytes in UTF-8
     assert(df.schema("payload").dataType.typeName == "binary")
-  }
-
-  test("decodeMeta: partition-wise stub decode is deterministic and schema-stable") {
-    val df = Multimodal.withPayload(
-      Seq((1L, "hello world"), (2L, "another payload")).toDF("id", "src"), "src")
-    val out = Multimodal.decodeMeta(spark, df)
-    assert(Seq("width", "height", "channels", "n_frames")
-      .forall(out.columns.contains))
-    val a = out.orderBy("id").select("width", "height", "channels", "n_frames")
-      .as[(Int, Int, Int, Int)].collect().toSeq
-    val b = Multimodal.decodeMeta(spark, df).orderBy("id")
-      .select("width", "height", "channels", "n_frames")
-      .as[(Int, Int, Int, Int)].collect().toSeq
-    assert(a == b)                      // deterministic fake codec
-    assert(a.forall(r => r._1 >= 64 && r._2 >= 64 && r._3 == 3 && r._4 >= 1))
-    // identical payloads decode identically; different payloads may differ
-    val same = Multimodal.decodeMeta(spark,
-      Multimodal.withPayload(Seq((1L, "x"), (2L, "x")).toDF("id", "src"), "src"))
-      .select("width").as[Int].collect().toSet
-    assert(same.size == 1)
   }
 
   test("MediaHeaders parses real PNG / GIF / WAV header bytes") {
@@ -165,11 +151,7 @@ class MultimodalSpec extends AnyFunSuite {
         MediaHeaders.sampleRate(col("payload")).as("sr"))
       .as[(String, String, Option[Long], Option[Long], Option[Long], Option[Long])]
       .collect().map(r => r._1 -> ((r._2, r._3, r._4, r._5, r._6))).toMap
-    val codec = Multimodal.decodeMeta(spark, df)
-      .select(col("case_id"), col("width"), col("height"), col("channels"),
-        col("n_frames"))
-      .as[(String, Int, Int, Int, Int)]
-      .collect().map(r => r._1 -> ((r._2, r._3, r._4, r._5))).toMap
+    val codec = cases.map { case (id, bytes) => id -> decoded(bytes) }.toMap
 
     // Kind detection: magic survives every truncation; garbage never matches.
     for ((k, _, _, _) <- fixtures; mode <- Seq("intact", "magic", "dims"))
@@ -229,9 +211,8 @@ class MultimodalSpec extends AnyFunSuite {
     val df = Seq((1L, png), (2L, gif), (3L, wav),
         (4L, "undecodable text".getBytes("US-ASCII")))
       .toDF("id", "payload")
-    val meta = Multimodal.decodeMeta(spark, df).orderBy("id")
-      .select("width", "height", "channels", "n_frames")
-      .as[(Int, Int, Int, Int)].collect().toSeq
+    val meta = Seq(png, gif, wav, "undecodable text".getBytes("US-ASCII"))
+      .map(decoded)
     assert(meta(0) == ((97, 59, 3, 1)), s"png decoded as ${meta(0)}")
     assert(meta(1) == ((320, 200, 3, 1)), s"gif decoded as ${meta(1)}")
     // Audio rides the image-shaped meta as (sample_rate, 0, channels, n).
@@ -256,20 +237,6 @@ class MultimodalSpec extends AnyFunSuite {
     assert(hdr(3)._2 == "unknown")
   }
 
-  test("extractFrame decodes real image payloads to PNG frame bytes") {
-    val df = Seq((1L, realGif(32, 16)), (2L, "plain bytes".getBytes))
-      .toDF("id", "payload").withColumn("n_frames", lit(1))
-    val frames = Multimodal.extractFrame(
-        Multimodal.sampleFrameIndexes(df, "n_frames", 1))
-      .select("id", "frame_bytes").as[(Long, Array[Byte])].collect().toMap
-    // The GIF frame came back as a real PNG with the source dimensions.
-    val back = javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(frames(1L)))
-    assert(back != null && back.getWidth == 32 && back.getHeight == 16)
-    // Non-image payloads keep the deterministic stub window (min(16, n)).
-    assert(new String(frames(2L), "US-ASCII") == "plain bytes")
-  }
-
   test("frame sampling explodes every stride-th index without shuffling") {
     val df = Multimodal.withPayload(
         Seq((1L, "a short clip payload"), (2L, "x")).toDF("id", "src"), "src")
@@ -284,26 +251,6 @@ class MultimodalSpec extends AnyFunSuite {
     assert(!plan.contains("Exchange"), s"frame sampling shuffled:\n$plan")
   }
 
-  test("extractFrame slices a deterministic per-frame window at the partition boundary") {
-    val df = Multimodal.withPayload(
-        Seq((1L, "abcdefghijklmnopqrstuvwxyz")).toDF("id", "src"), "src")
-      .withColumn("n_frames", lit(4))
-    val frames = Multimodal.extractFrame(
-      Multimodal.sampleFrameIndexes(df, "n_frames", stride = 1))
-    val got = frames.orderBy("frame_idx")
-      .select(col("frame_idx"), col("frame_bytes").cast("string"))
-      .as[(Int, String)].collect().toSeq
-    assert(got.size == 4)
-    assert(got.head == ((0, "abcdefghijklmnop"))) // window at offset 0
-    assert(got(1)._2 == "qrstuvwxyzabcdef")       // offset 16 wraps
-    // Deterministic across runs.
-    val again = Multimodal.extractFrame(
-      Multimodal.sampleFrameIndexes(df, "n_frames", stride = 1))
-      .orderBy("frame_idx").select(col("frame_bytes").cast("string"))
-      .as[String].collect().toSeq
-    assert(again == got.map(_._2))
-  }
-
   test("zero-frame and null/empty-payload rows degrade, never crash") {
     // n_frames = 0 (corrupt clip): sequence(0, -1, stride) would THROW at
     // runtime — the guard must drop the clip instead.
@@ -314,15 +261,10 @@ class MultimodalSpec extends AnyFunSuite {
     val nul = Multimodal.withPayload(Seq((1L, "x")).toDF("id", "src"), "src")
       .withColumn("n_frames", lit(null).cast("int"))
     assert(Multimodal.sampleFrameIndexes(nul, "n_frames", 2).count() == 0)
-    // Empty payload → empty frame; null payload → null frame — no
-    // ArrayIndexOutOfBounds/NPE from the stub extractor.
+    // Empty and null payloads pass through the sampler untouched.
     val edgy = Seq((1L, Array.empty[Byte]), (2L, null: Array[Byte]))
       .toDF("id", "payload").withColumn("n_frames", lit(1))
-    val frames = Multimodal.extractFrame(
-        Multimodal.sampleFrameIndexes(edgy, "n_frames", 1))
-      .select(col("id"), octet_length(col("frame_bytes")))
-      .as[(Long, Option[Int])].collect().toMap
-    assert(frames(1L).contains(0) && frames(2L).isEmpty)
+    assert(Multimodal.sampleFrameIndexes(edgy, "n_frames", 1).count() == 2)
   }
 
   test("resizeMetaTo fits the long side with exact integer scaling") {

@@ -9,7 +9,7 @@ class CoverageSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def run(postings: Seq[(Long, String)], k: Int): Seq[(Int, Long, Long, Long)] =
-    Coverage.greedyCover(postings.toDF("id", "sh"), "id", "sh", k)
+    NaiveRefs.greedyCover(postings.toDF("id", "sh"), "id", "sh", k)
       .as[(Int, Long, Long, Long)].collect().toSeq.sortBy(_._1)
 
   test("k beyond maxK fails loudly before any job runs; explicit maxK is the escape hatch") {
@@ -17,13 +17,13 @@ class CoverageSpec extends AnyFunSuite {
     // driver loop at any cluster size — the guardrail must throw up front.
     val df = Seq((1L, "a"), (2L, "b")).toDF("id", "sh")
     val e = intercept[IllegalArgumentException] {
-      Coverage.greedyCover(df, "id", "sh", k = Coverage.DefaultMaxK + 1)
+      NaiveRefs.greedyCover(df, "id", "sh", k = NaiveRefs.DefaultMaxK + 1)
     }
     assert(e.getMessage.contains("maxK"))
     // Explicit maxK raises the ceiling (tiny corpus exhausts immediately —
     // the point is only that construction no longer throws).
-    val ok = Coverage.greedyCover(df, "id", "sh",
-      k = Coverage.DefaultMaxK + 1, maxK = Coverage.DefaultMaxK + 1)
+    val ok = NaiveRefs.greedyCover(df, "id", "sh",
+      k = NaiveRefs.DefaultMaxK + 1, maxK = NaiveRefs.DefaultMaxK + 1)
     assert(ok.count() == 2)
   }
 
@@ -89,7 +89,7 @@ class CoverageSpec extends AnyFunSuite {
     // size and the DuckDB oracle unrolls strict greedy.
     val postings = graft.dedup.Dedup.shinglePostings(
       graft.Tables.documents(spark, SparkTestSession.sf), "doc_id", "text", 3)
-    val exact = Coverage.greedyCover(postings, "id", "shh", 5)
+    val exact = NaiveRefs.greedyCover(postings, "id", "shh", 5)
       .as[(Int, Long, Long, Long)].collect().toSeq.sortBy(_._1)
     val small = Coverage.greedyCoverExactSmall(postings, "id", "shh", 5)
       .as[(Int, Long, Long, Long)].collect().toSeq.sortBy(_._1)
@@ -122,7 +122,7 @@ class CoverageSpec extends AnyFunSuite {
       j <- 0 until 50
     } yield id -> s"key_${id}_$j" // disjoint: greedy picks ids ascending
     val df = longDocs.toDF("id", "sh")
-    val exact = Coverage.greedyCover(df, "id", "sh", 3)
+    val exact = NaiveRefs.greedyCover(df, "id", "sh", 3)
       .as[(Int, Long, Long, Long)].collect().toSeq.sortBy(_._1)
     val routed = Coverage.greedyCoverExactSmall(df, "id", "sh", 3,
         maxPostings = 64L)
@@ -180,7 +180,7 @@ class CoverageSpec extends AnyFunSuite {
     val postings = graft.dedup.Dedup.shinglePostings(
       graft.Tables.documents(spark, SparkTestSession.sf), "doc_id", "text", 3)
     val k = 100
-    val exact = Coverage.greedyCover(postings, "id", "shh", k)
+    val exact = NaiveRefs.greedyCover(postings, "id", "shh", k)
       .as[(Int, Long, Long, Long)].collect()
     val approx = Coverage.greedyCoverApprox(postings, "id", "shh", k)
       .as[(Int, Long, Long, Long)].collect()

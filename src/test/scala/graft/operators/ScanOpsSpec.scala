@@ -63,57 +63,13 @@ class ScanOpsSpec extends AnyFunSuite {
     assert(got(2).getDouble(3) == 0.5 * 7.0 + 0.5 * 9.0)
   }
 
-  test("ewmaGlobal matches the reference fold within 1e-12 relative across partitions") {
-    val n = 50000
-    val xs = (0 until n).map(i => math.cos(i * 0.01) * 50 + (i % 97))
-    val df = xs.zipWithIndex.map { case (x, i) => (i.toLong, x) }.toDF("seq", "x")
-    // 8 partitions so the driver-side composition actually chains state
-    val got = ScanOps.ewmaGlobal(df, Seq("seq"), col("x"), 0.1, "x", "ewma",
-        numPartitions = 8)
-      .orderBy("seq").collect().map(_.getDouble(2))
-    val want = refEwma(xs, 0.1)
-    assert(got.length == n)
-    var i = 0
-    while (i < n) {
-      val denom = math.max(1.0, math.abs(want(i)))
-      assert(math.abs(got(i) - want(i)) / denom < 1e-12,
-        s"row $i: got ${got(i)}, want ${want(i)}")
-      i += 1
-    }
-  }
-
-  test("ewmaGlobal on an empty frame returns an empty frame") {
-    val df = Seq.empty[(Long, Double)].toDF("seq", "x")
-    assert(ScanOps.ewmaGlobal(df, Seq("seq"), col("x"), 0.2, "x", "e", 4).count() == 0)
-  }
-
-  test("ewmaPerKey and ewmaGlobal agree on a single-key series") {
-    // Cross-path check: the in-row fold and the segmented scan are
-    // independent implementations of the same recurrence; on one key they
-    // must agree to float tolerance (the segmented scan's driver-side
-    // affine composition reorders ops, so not bitwise).
-    val n = 5000
-    val rows = (0 until n).map(i => (1L, i.toLong, math.sin(i * 0.1) * 10 + i % 7))
-    val df = rows.toDF("k", "seq", "x")
-    val perKey = ScanOps.ewmaPerKey(df, Seq("k"), Seq("seq"), col("x"), 0.2, "x", "e")
-      .orderBy("seq").collect().map(_.getDouble(3))
-    val global = ScanOps.ewmaGlobal(df.select(col("seq"), col("x")),
-        Seq("seq"), col("x"), 0.2, "x", "e", numPartitions = 6)
-      .orderBy("seq").collect().map(_.getDouble(2))
-    assert(perKey.length == n && global.length == n)
-    perKey.zip(global).zipWithIndex.foreach { case ((a, b), i) =>
-      assert(math.abs(a - b) / math.max(1.0, math.abs(a)) < 1e-12,
-        s"row $i: perKey $a vs global $b")
-    }
-  }
-
   test("alpha is validated") {
     val df = Seq((1L, 1.0)).toDF("seq", "x")
     intercept[IllegalArgumentException] {
       ScanOps.ewmaPerKey(df, Seq("seq"), Seq("seq"), col("x"), 0.0, "x", "e")
     }
     intercept[IllegalArgumentException] {
-      ScanOps.ewmaGlobal(df, Seq("seq"), col("x"), 1.5, "x", "e")
+      ScanOps.ewmaPerKey(df, Seq("seq"), Seq("seq"), col("x"), 1.5, "x", "e")
     }
   }
 }

@@ -143,11 +143,6 @@ class AnnSpec extends AnyFunSuite {
     assert(kept == expected)
   }
 
-  test("GraftExtensions instantiates and applies cleanly") {
-    val ext = new graft.plans.GraftExtensions
-    ext.apply(new org.apache.spark.sql.SparkSessionExtensions)
-  }
-
   test("hyperplanes are deterministic") {
     val a = Ann.hyperplanes(4, 8).map(_.toSeq).toSeq
     val b = Ann.hyperplanes(4, 8).map(_.toSeq).toSeq

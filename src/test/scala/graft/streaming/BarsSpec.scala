@@ -25,56 +25,6 @@ class BarsSpec extends AnyFunSuite {
     assert(bars == Seq((10.0, 12.0, 10.0, 11.0, 4.0, 3L), (13.0, 13.0, 13.0, 13.0, 0.5, 1L)))
   }
 
-  test("ticker micro-poll fetches per batch and upserts idempotently") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.sources.Rest
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    var fetches = 0
-    val transport: Rest.Transport = url => {
-      fetches += 1
-      if (url.contains("host-a")) Left(429) // first host throttled
-      else Right(s"""{"symbol":"BTCUSDT","price":"${42000 + fetches}.5"}""")
-    }
-    val table = java.nio.file.Files.createTempDirectory("ticks").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("tick-ckpt").toString
-    val mem = MemoryStream[Long]
-    val q = Ticker.pollingWriter(mem.toDF(), Seq("http://host-a", "http://host-b"),
-      "BTCUSDT", transport, table, ckpt).start()
-    try {
-      mem.addData(1L); q.processAllAvailable()
-      mem.addData(2L); q.processAllAvailable()
-    } finally q.stop()
-    val ticks = graft.operators.UpsertWriter.read(spark, table).get
-      .orderBy("poll_id").select("symbol", "poll_id", "price")
-      .as[(String, Long, Double)].collect().toSeq
-    assert(ticks.size == 2)
-    assert(ticks.forall(_._1 == "BTCUSDT"))
-    assert(fetches >= 4) // each poll tried host-a (throttled) then host-b
-  }
-
-  test("production rate-source trigger path starts and polls (S6)") {
-    import graft.sources.Rest
-    val transport: Rest.Transport = _ =>
-      Right("""{"symbol":"ETHUSDT","price":"2500.25"}""")
-    val table = Files.createTempDirectory("rate-ticks").toString
-    val ckpt = Files.createTempDirectory("rate-ckpt").toString
-    // The real trigger: rate source (integer rowsPerSecond) + ProcessingTime
-    // cadence. The round-1 fractional rowsPerSecond threw NumberFormatException
-    // here at stream start.
-    val q = Ticker.pollingQuery(spark, Seq("http://host"), "ETHUSDT",
-      transport, table, ckpt, intervalSec = 1).start()
-    try {
-      val deadline = System.currentTimeMillis() + 30000
-      var n = 0L
-      while (n == 0 && System.currentTimeMillis() < deadline) {
-        Thread.sleep(250)
-        n = UpsertWriter.read(spark, table).map(_.count()).getOrElse(0L)
-      }
-      assert(n > 0, "rate-trigger stream produced no ticks within 30s")
-    } finally q.stop()
-  }
-
   test("upsert GCs superseded generations (keeps current + previous)") {
     val table = Files.createTempDirectory("gen-gc").toString
     (1 to 4).foreach { i =>
