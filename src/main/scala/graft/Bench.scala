@@ -155,7 +155,7 @@ object Bench {
       // environment — the exact misleading adjudication the field exists
       // to prevent.
       calibrationInflation(results.collect {
-        case (k, v, _, _, ok, _) if ok => (k, v) }, sfDir),
+        case (k, v, _, _, ok, _) if ok => (k, v) }, sfDir, refs),
       inflationStats(results.collect {
         case (k, v, _, _, ok, _) if ok => inflOf(k, v) }.flatten),
       // Ratio only on full sf0.1 runs: the denominator is the whole-suite
@@ -268,7 +268,7 @@ object Bench {
       else Map.empty[String, Double]
     val json = renderLine(results, 0, sfDir, outFile,
       calibrationInflation(results.collect {
-        case (k, v, _, _, ok) if ok => (k, v) }, sfDir),
+        case (k, v, _, _, ok) if ok => (k, v) }, sfDir, refs),
       inflationStats(results.collect { case (k, v, _, _, ok)
         if ok && refs.get(k).exists(_ > 0) && v > 0 => v / refs(k) }),
       compositeSessions = Some(paths.length),
@@ -320,15 +320,11 @@ object Bench {
     * post-change session is committed, and ≈1.0 stays the judge-grade
     * reading by construction (ADVICE-r15: a hand-maintained ref drifted
     * 8% above the committed median and silently deflated calibration to
-    * ~0.9). The literals below are a FALLBACK for runs without a
-    * readable committed detail (fresh clone mid-edit); they are the r15
-    * committed-session medians. */
-  private[graft] val calibrationBasketFallback: Map[String, Double] = Map(
-    "q76_line_dedup" -> 0.371,
-    "q01_pricing_summary" -> 0.18,
-    "q50_corr_matrix" -> 0.164,
-    "q03_daily_summary" -> 0.114,
-    "q81_pack_sequences" -> 0.144)
+    * ~0.9). Without a readable committed detail that holds every basket
+    * query, the calibration field is absent. */
+  private[graft] val calibrationBasket: Set[String] = Set(
+    "q76_line_dedup", "q01_pricing_summary", "q50_corr_matrix",
+    "q03_daily_summary", "q81_pack_sequences")
 
   /** Candidate locations of the committed reference detail:
     * `SPARK_GRAFT_BENCH_REF` override, the working directory (tools/run.sh
@@ -385,16 +381,14 @@ object Bench {
     }.find(_._1 > 0)
   }
 
-  /** Basket refs from the committed detail when ALL basket queries are
-    * present there (a partial artifact would silently re-weight the
-    * geomean); the audited fallback literals otherwise. */
-  private[graft] lazy val calibrationRefs: Map[String, Double] = {
-    val refs = refMedians()
-    if (calibrationBasketFallback.keySet.forall(k =>
-        refs.get(k).exists(_ > 0)))
-      calibrationBasketFallback.keySet.map(k => k -> refs(k)).toMap
-    else calibrationBasketFallback
-  }
+  /** Basket refs out of `refs` (the [[refMedians]] of the committed
+    * detail) when ALL basket queries are present there; empty otherwise —
+    * a partial artifact would silently re-weight the geomean. */
+  private[graft] def calibrationRefs(refs: Map[String, Double])
+      : Map[String, Double] =
+    if (calibrationBasket.forall(k => refs.get(k).exists(_ > 0)))
+      refs.filter { case (k, _) => calibrationBasket(k) }
+    else Map.empty
 
   /** (p50, max, n) over the per-query inflation ratios — the suite-wide
     * complement of the basket geomean: a healthy session reads p50 ≈ max
@@ -412,16 +406,19 @@ object Bench {
   }
 
   /** Geometric-mean wall-clock inflation of this run's calibration-query
-    * medians vs [[calibrationRefs]] — ≈1.0 on a judge-grade session, ≫1 in
-    * a degraded environment. None when the run isn't at the sf0.1 the
-    * references were measured on, or when no calibration query ran. */
+    * medians vs the [[calibrationRefs]] of `refs` — ≈1.0 on a judge-grade
+    * session, ≫1 in a degraded environment. None when the run isn't at the
+    * sf0.1 the references were measured on, when `refs` lacks a basket
+    * query, or when no calibration query ran. */
   private[graft] def calibrationInflation(results: Seq[(String, Double)],
-                                          sfDir: String): Option[Double] = {
+                                          sfDir: String,
+                                          refs: Map[String, Double])
+      : Option[Double] = {
+    val basket = calibrationRefs(refs)
     if (!sfDir.replaceAll("/+$", "").endsWith("sf0.1")) None
     else {
       val ratios = results.collect {
-        case (k, v) if calibrationRefs.contains(k) && v > 0 =>
-          v / calibrationRefs(k)
+        case (k, v) if basket.contains(k) && v > 0 => v / basket(k)
       }
       if (ratios.isEmpty) None
       else Some(math.exp(ratios.map(math.log).sum / ratios.length))

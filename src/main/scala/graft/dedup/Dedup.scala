@@ -258,12 +258,6 @@ object Dedup {
       .groupBy(col("fingerprint"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_dups"))
 
-  /** Distinct word n-gram shingles from an already-tokenized column.
-    *
-    * Documents with fewer than `n` tokens yield an EMPTY array: `sequence`
-    * with end < start would produce a DESCENDING range (e.g. [1,0]) whose
-    * 0 position makes `slice` throw, so the short-doc case is guarded
-    * explicitly with a typed empty literal. */
   /** Ordered (position-preserving) n-gram list of a token array — the
     * positional base [[shinglesFromTokens]] distinct-ifies. */
   def orderedShinglesFromTokens(toks: Column, n: Int): Column =
@@ -272,6 +266,12 @@ object Dedup {
         i => array_join(slice(toks, i, lit(n)), " ")))
       .otherwise(lit(Array.empty[String]))
 
+  /** Distinct word n-gram shingles from an already-tokenized column.
+    *
+    * Documents with fewer than `n` tokens yield an EMPTY array: `sequence`
+    * with end < start would produce a DESCENDING range (e.g. [1,0]) whose
+    * 0 position makes `slice` throw, so the short-doc case is guarded
+    * explicitly with a typed empty literal. */
   def shinglesFromTokens(toks: Column, n: Int): Column =
     array_distinct(orderedShinglesFromTokens(toks, n))
 
@@ -301,62 +301,57 @@ object Dedup {
       .select(col("id"), explode(col("sh_arr")).as("sh"))
 
   /** All-pairs n-gram Jaccard similarity ≥ minJaccard over (id, shh)
-    * [[shinglePostings]], via inverted-index join on shingles (shuffle
-    * keyed by shingle, quadratic only within a shingle's posting list).
-    * `maxDocFreq` drops shingles that occur in more than that many
-    * documents — the skew guard that keeps hot shingles from exploding the
-    * join at corpus scale (they contribute almost no discriminative signal
-    * anyway). Pass a materialized (localCheckpoint'ed) postings frame to
-    * shingle the corpus exactly once: the lazy plan otherwise re-derives
-    * the explode for the per-doc sizes, the document-frequency filter, and
-    * both join sides.
+    * [[shinglePostings]], via the one pair core [[pairOverlapCounts]]:
+    * each shingle's posting list is gathered once, bounded by `maxDocFreq`,
+    * and pairs form only within a list (quadratic in the list length, never
+    * in the corpus). `maxDocFreq` drops shingles that occur in more than
+    * that many documents — the skew guard that keeps hot shingles from
+    * exploding the pair emission at corpus scale (they contribute almost no
+    * discriminative signal anyway). Pass a materialized (localCheckpoint'ed)
+    * postings frame to shingle the corpus exactly once: the lazy plan
+    * otherwise re-derives the explode for the per-doc sizes and the
+    * posting-list aggregate.
     *
-    * Shuffle economy: the posting-list join carries only (id, shingle-HASH)
-    * — 16 bytes/row instead of the shingle string and per-doc counts; the
-    * per-doc set sizes are the per-id posting counts (postings are distinct
-    * per doc) and rejoin AFTER pair aggregation as a broadcast dim (one row
-    * per doc, not one per posting). A 64-bit hash false-collision needs
-    * ~2^32 distinct shingles to matter; corpora that big use minhash anyway. */
+    * Shuffle economy: the posting lists carry only (shingle-HASH, id) —
+    * never the shingle string or per-doc counts; the per-doc set sizes are
+    * the per-id posting counts (postings are distinct per doc) and rejoin
+    * AFTER pair aggregation as a broadcast dim (one row per doc, not one per
+    * posting). A 64-bit hash false-collision needs ~2^32 distinct shingles
+    * to matter; corpora that big use minhash anyway. */
   def ngramJaccardFromPostings(postings: DataFrame, minJaccard: Double,
-                               maxDocFreq: Option[Long] = None): DataFrame =
-    pairOverlaps(postings, maxDocFreq)
+                               maxDocFreq: Long): DataFrame =
+    pairOverlapCounts(postings, maxDocFreq)
       .withColumn("jaccard",
         round(col("inter") / (col("n_a") + col("n_b") - col("inter")), 6))
       .where(col("jaccard") >= minJaccard)
       .select(col("id_a"), col("id_b"), col("jaccard"))
 
   /** Containment near-dup pairs: |A∩B| / min(|A|, |B|) ≥ `minContainment`
-    * over the same inverted-index postings as [[ngramJaccardFromPostings]].
+    * over the same pair core as [[ngramJaccardFromPostings]].
     * Containment is the subset-duplicate detector Jaccard structurally
     * misses: a wire story embedded verbatim in a 10×-longer page has
     * Jaccard ≈ 0.1 but containment ≈ 1.0. Same scale shape — the metric is
-    * a post-aggregation projection over the identical join. */
+    * a post-aggregation projection over the identical pair counts. */
   def ngramContainmentFromPostings(postings: DataFrame, minContainment: Double,
-                                   maxDocFreq: Option[Long] = None): DataFrame =
-    pairOverlaps(postings, maxDocFreq)
+                                   maxDocFreq: Long): DataFrame =
+    pairOverlapCounts(postings, maxDocFreq)
       .withColumn("containment",
         round(col("inter") / least(col("n_a"), col("n_b")), 6))
       .where(col("containment") >= minContainment)
       .select(col("id_a"), col("id_b"), col("containment"))
 
-  /** Shared candidate core of the n-gram pair metrics: distinct-shingle
-    * overlap counts per (id_a < id_b) pair plus both set sizes, via the
-    * inverted-index self-join on 8-byte hashes with the `maxDocFreq` skew
-    * cap; sizes rejoin broadcast AFTER pair aggregation. */
   /** Raw shared-shingle pair counts: (id_a < id_b, inter) for pairs with
     * ≥ `minShared` distinct common shingles — the absolute-overlap cousin
     * of [[ngramJaccardFromPostings]] for consumers (provenance matrices,
     * flow audits) that care about how MUCH text is shared, not the ratio.
-    * Same inverted-index core, same `maxDocFreq` skew cap. */
+    * Same pair core, same `maxDocFreq` skew cap. */
   def sharedShinglePairs(postings: DataFrame, minShared: Long,
-                         maxDocFreq: Option[Long] = None): DataFrame =
-    pairOverlaps(postings, maxDocFreq).where(col("inter") >= minShared)
+                         maxDocFreq: Long): DataFrame =
+    pairOverlapCounts(postings, maxDocFreq).where(col("inter") >= minShared)
       .select(col("id_a"), col("id_b"), col("inter"))
 
-  /** Pair overlap counts via BOUNDED posting lists — the one-exchange,
-    * skew-safe alternative to [[pairOverlapCounts]]'s inverted-index
-    * self-join when a doc-frequency cap is in force anyway. One aggregate
-    * groups the postings by key through
+  /** Pair overlap counts via BOUNDED posting lists — the one pair core of
+    * the n-gram family. One aggregate groups the postings by key through
     * [[graft.plans.Expressions.BoundedCollectSet]], whose buffer NEVER
     * exceeds cap+1 elements: a ubiquitous hot key (stop-gram shingle,
     * boilerplate fingerprint — exactly the skew this operator's callers
@@ -366,10 +361,14 @@ object Dedup {
     * exists; each surviving key emits its ≤ C(cap, 2) ordered pairs in
     * place from the sorted ≤cap-element list. Output:
     * (id_a < id_b, n_shared). Identical to the DISTINCT + self-join +
-    * df-prune composition; preferred at scale because both the per-key
-    * MEMORY and the pair emission are capped by construction and the
-    * postings shuffle once (map-side partial sets ≤ cap+1 each) instead
-    * of three times.
+    * df-prune composition (the oracle's spelling); the postings shuffle
+    * once (map-side partial sets ≤ cap+1 each) and both the per-key MEMORY
+    * and the pair emission are capped by construction.
+    *
+    * Pair emission is lambda-free: `posexplode` yields each list element
+    * with its position i, and `explode(slice(list, i + 2, size))` yields the
+    * elements after it — both generators stay in whole-stage codegen,
+    * where nested `transform` lambdas would run interpreted per row.
     *
     * Duplicate (id, key) postings are deduped INSIDE the aggregate's set,
     * so the df band counts DISTINCT ids and a repeated posting can never
@@ -386,98 +385,24 @@ object Dedup {
       .agg(graft.plans.Expressions
         .boundedCollectSet(col(idCol), maxDocFreq.toInt).as("__ids"))
       .where(col("__ids").isNotNull)
-      .select(explode(flatten(transform(col("__ids"), (x, i) =>
-        transform(slice(col("__ids"), i + lit(2), size(col("__ids"))),
-          y => struct(x.as("id_a"), y.as("id_b")))))).as("__p"))
-      .groupBy(col("__p.id_a").as("id_a"), col("__p.id_b").as("id_b"))
-      .agg(count(lit(1)).as("n_shared"))
-  }
-
-  /** [[boundedPairCounts]] specialised to a TINY, caller-known id space
-    * (sources, eval suites, shards — ≤ 63 distinct values): each key's id
-    * set becomes a LONG BITMASK built with a `bit_or` aggregate, so the
-    * one corpus-sized exchange carries 8-byte masks instead of per-key
-    * posting arrays (no TypedImperative buffer serialize per key, no array
-    * allocation), and the doc-frequency band is a `bit_count` filter on
-    * the mask. Pair emission then runs over the MASK HISTOGRAM —
-    * ≤ min(2^|ids|, distinct keys) rows, typically a few hundred — not per
-    * key: each surviving mask expands to its present-id pairs in place
-    * (the per-bit presence tests are unrolled over the literal id list at
-    * plan time; everything stays in one codegen'd projection) and the
-    * final (id_a, id_b) rollup sums histogram counts.
-    *
-    * `ids` must cover every value of `idCol` (a stray id RAISES — a
-    * silently-dropped source would fabricate overlap counts); duplicate
-    * (id, key) postings dedupe inside the bit_or for free. Output and
-    * semantics identical to [[boundedPairCounts]] on the same inputs:
-    * (id_a < id_b lexicographically, n_shared), keys with distinct-id
-    * count outside [2, maxDocFreq] contribute nothing. Two exchanges,
-    * both skew-immune: the per-key mask aggregate (long values) and the
-    * pair rollup whose key space is ≤ C(|ids|, 2) — map-side combine
-    * collapses it to at most that many rows per task. */
-  def pairCountsByBitmask(postings: DataFrame, keyCol: String, idCol: String,
-                          ids: Seq[String], maxDocFreq: Long): DataFrame = {
-    require(ids.nonEmpty && ids.size <= 63,
-      s"pairCountsByBitmask needs 1..63 known ids, got ${ids.size}")
-    require(ids.distinct.size == ids.size, "pairCountsByBitmask: duplicate ids")
-    require(maxDocFreq >= 2, s"maxDocFreq must be >= 2, got $maxDocFreq")
-    val sorted = ids.sorted
-    val pos = array_position(array(sorted.map(lit): _*), col(idCol))
-    val bit = when(pos > 0,
-        call_function("shiftleft", lit(1L), (pos - 1).cast("int")))
-      .otherwise(raise_error(concat(
-        lit("pairCountsByBitmask: id outside the provided id list: "),
-        col(idCol).cast("string"))))
-    // Pair emission via a CONSTANT candidate table, not per-row array
-    // building: every C(|ids|, 2) ordered pair with its two-bit test mask
-    // is ONE folded literal, exploded against each surviving key's mask
-    // and filtered with plain bitwise ops. An earlier spelling built a
-    // present-id array per row with nested higher-order functions —
-    // transform/filter lambdas are interpreted (they never enter
-    // whole-stage codegen), and the post-aggregate rows land on the 1-2
-    // partitions AQE's byte-based coalescing leaves, so that per-row
-    // interpretation was the query's single hottest stage in the profile.
-    // Explode-then-filter stays fully codegen'd; the ≤190-for-20-ids
-    // fan-out costs a predicate per candidate, in-stage, no shuffle.
-    // Tuple fields: _1 = id_a, _2 = id_b (sorted order ⇒ id_a < id_b),
-    // _3 = (1<<i)|(1<<j).
-    val pairsLit = typedlit(for {
-      i <- sorted.indices; j <- (i + 1) until sorted.size
-    } yield (sorted(i), sorted(j), (1L << i) | (1L << j)))
-    postings
-      .select(col(keyCol).as("__k"), bit.as("__bit"))
-      .groupBy(col("__k"))
-      .agg(call_function("bit_or", col("__bit")).as("__m"))
-      .where(call_function("bit_count", col("__m")).between(2, maxDocFreq))
-      .select(col("__m"), explode(pairsLit).as("__p"))
-      .where(col("__m").bitwiseAND(col("__p._3")) === col("__p._3"))
-      .groupBy(col("__p._1").as("id_a"), col("__p._2").as("id_b"))
-      .agg(count(lit(1)).as("n_shared"))
-  }
-
-  /** Public view of the raw pair core — (id_a, id_b, inter, n_a, n_b) —
-    * for consumers that derive their own metric (integer-milli Jaccard,
-    * the q137 recall curve) instead of the prepackaged
-    * [[ngramJaccardFromPostings]]/[[ngramContainmentFromPostings]] cuts. */
-  def pairOverlapCounts(postings: DataFrame,
-                        maxDocFreq: Option[Long] = None): DataFrame =
-    pairOverlaps(postings, maxDocFreq)
-
-  private def pairOverlaps(postings: DataFrame,
-                           maxDocFreq: Option[Long]): DataFrame = {
-    val sizes = postings.groupBy(col("id")).agg(count(lit(1)).as("n_sh"))
-    val filtered = maxDocFreq match {
-      case Some(cap) =>
-        val hot = postings.groupBy(col("shh")).agg(count(lit(1)).as("df"))
-          .where(col("df") > cap)
-        postings.join(hot, Seq("shh"), "left_anti")
-      case None => postings
-    }
-    val a = filtered.select(col("id").as("id_a"), col("shh"))
-    val b = filtered.select(col("id").as("id_b"), col("shh"))
-    a.join(b, Seq("shh")).where(col("id_a") < col("id_b"))
+      .select(col("__ids"), posexplode(col("__ids")).as(Seq("__i", "id_a")))
+      .select(col("id_a"),
+        explode(slice(col("__ids"), col("__i") + 2, size(col("__ids")))).as("id_b"))
       .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("inter"))
+      .agg(count(lit(1)).as("n_shared"))
+  }
+
+  /** (id_a, id_b, inter, n_a, n_b) over (id, shh) [[shinglePostings]]: the
+    * [[boundedPairCounts]] core plus both set sizes, which rejoin broadcast
+    * AFTER pair aggregation and count every posting of the id (hot
+    * shingles included) — for consumers that derive their own metric
+    * (integer-milli Jaccard, the q137 recall curve) instead of the
+    * prepackaged [[ngramJaccardFromPostings]]/[[ngramContainmentFromPostings]]
+    * cuts. */
+  def pairOverlapCounts(postings: DataFrame, maxDocFreq: Long): DataFrame = {
+    val sizes = postings.groupBy(col("id")).agg(count(lit(1)).as("n_sh"))
+    boundedPairCounts(postings, "shh", "id", maxDocFreq)
+      .withColumnRenamed("n_shared", "inter")
       .join(broadcast(sizes.select(col("id").as("id_a"), col("n_sh").as("n_a"))), Seq("id_a"))
       .join(broadcast(sizes.select(col("id").as("id_b"), col("n_sh").as("n_b"))), Seq("id_b"))
   }
@@ -1110,18 +1035,6 @@ object Dedup {
       .where(col("hamming") <= maxHamming)
   }
 
-  /** Exploded (id, simhash, combo index, packed combo key) postings for
-    * Hamming-radius search, Manku-style (Detecting Near-Duplicates for Web
-    * Crawling, WWW 2007): the 64-bit hash splits into `blocks` near-equal
-    * bit blocks, and every (blocks − maxHamming)-block COMBINATION becomes
-    * one bucket key. maxHamming flipped bits touch ≤ maxHamming blocks, so
-    * some untouched combination always remains — full recall — while the
-    * key widens from one block (~64/blocks bits) to blocks−maxHamming of
-    * them (~32 bits at the 6/3 default): chance-collision bucket density
-    * drops from n/2^16 to n/2^32. The C(blocks, maxHamming) posting
-    * multiplicity (20× at the default) is the linear price that keeps the
-    * within-bucket pair join from going quadratic on templated corpora,
-    * where millions of DISTINCT hashes crowd a 16-bit band value. */
   /** The array-of-(ci, ck) combo keys for a `simhash` column — exposed
     * within the package so DedupSpec can check the pigeonhole recall
     * contract on the exact bucketing. */
@@ -1140,6 +1053,18 @@ object Dedup {
     }: _*)
   }
 
+  /** Exploded (id, simhash, combo index, packed combo key) postings for
+    * Hamming-radius search, Manku-style (Detecting Near-Duplicates for Web
+    * Crawling, WWW 2007): the 64-bit hash splits into `blocks` near-equal
+    * bit blocks, and every (blocks − maxHamming)-block COMBINATION becomes
+    * one bucket key. maxHamming flipped bits touch ≤ maxHamming blocks, so
+    * some untouched combination always remains — full recall — while the
+    * key widens from one block (~64/blocks bits) to blocks−maxHamming of
+    * them (~32 bits at the 6/3 default): chance-collision bucket density
+    * drops from n/2^16 to n/2^32. The C(blocks, maxHamming) posting
+    * multiplicity (20× at the default) is the linear price that keeps the
+    * within-bucket pair join from going quadratic on templated corpora,
+    * where millions of DISTINCT hashes crowd a 16-bit band value. */
   private def simhashComboPostings(hashes: DataFrame, blocks: Int,
                                    maxHamming: Int): DataFrame =
     hashes.select(col("id"), col("simhash"),

@@ -642,18 +642,17 @@ private[graft] object CorpusQueries {
          min(doc_id) AS keep_id, count(*) AS n_dups
          FROM documents GROUP BY 1 ORDER BY fingerprint"""),
 
-    // Dedup: n-gram (3-shingle) Jaccard pairs via inverted-index join.
-    // maxDocFreq caps posting-list length — shingles present in >100 docs
-    // are stop-shingles: quadratic join blowup at corpus scale for near-zero
-    // discriminative signal. The oracle mirrors the cap.
-    // Postings materialized once (localCheckpoint): the sizes derivation,
-    // the document-frequency filter, and both join sides otherwise each
-    // re-run the shingle explode (~3× the dominant cost).
+    // Dedup: n-gram (3-shingle) Jaccard pairs via the bounded posting-list
+    // pair core. maxDocFreq caps posting-list length — shingles present in
+    // >100 docs are stop-shingles: quadratic pair blowup at corpus scale for
+    // near-zero discriminative signal. The oracle mirrors the cap.
+    // Postings materialized once (localCheckpoint): the sizes derivation and
+    // the posting-list aggregate otherwise each re-run the shingle explode.
     Query("q42_ngram_jaccard", (s, d) => {
       val postings = mat(Dedup.shinglePostings(t(s, d, "documents"),
         "doc_id", "text", 3))
       Dedup.ngramJaccardFromPostings(postings,
-          minJaccard = 0.05, maxDocFreq = Some(100L))
+          minJaccard = 0.05, maxDocFreq = 100L)
         .orderBy(col("id_a"), col("id_b"))
     }, oracleSql =
       s"""WITH $shinglesCte,
@@ -1183,7 +1182,7 @@ private[graft] object CorpusQueries {
       val postings = mat(Dedup.shinglePostings(t(s, d, "documents"),
         "doc_id", "text", 3))
       Dedup.ngramContainmentFromPostings(postings,
-          minContainment = 0.6, maxDocFreq = Some(100L))
+          minContainment = 0.6, maxDocFreq = 100L)
         .orderBy(col("id_a"), col("id_b"))
     }, oracleSql =
       s"""WITH $shinglesCte,
@@ -2572,14 +2571,14 @@ private[graft] object CorpusQueries {
     // shingles capped), and how many pairs flow between them — the
     // provenance audit behind a keep-best-source policy (q83). Exact
     // fingerprints would miss everything here (this corpus's duplicates
-    // never cross sources verbatim); the shared inverted-index pair core
-    // keys everything by the 8-byte shingle hash, and the source labels
-    // join onto the tiny surviving pair set.
+    // never cross sources verbatim); the shared bounded pair core keys
+    // everything by the 8-byte shingle hash, and the source labels join
+    // onto the tiny surviving pair set.
     Query("q126_source_copy_matrix", (s, d) => {
       val docs = t(s, d, "documents")
       val postings = mat(Dedup.shinglePostings(docs, "doc_id", "text", 3))
       val pairs = Dedup.sharedShinglePairs(postings, minShared = 8,
-        maxDocFreq = Some(100))
+        maxDocFreq = 100L)
       val src = docs.select(col("doc_id"), col("source"))
       pairs
         .join(src.select(col("doc_id").as("id_a"), col("source").as("__sa")),
@@ -2592,8 +2591,8 @@ private[graft] object CorpusQueries {
         .agg(count(lit(1)).as("n_pairs"))
         .orderBy(col("source_a"), col("source_b"))
     }, oracleSql =
-      // Raw-shingle mirror of the capped inverted-index pair core (q42's
-      // tolerance: counts on strings vs 64-bit hashes).
+      // Raw-shingle mirror of the capped pair core as a df prune plus
+      // self-join (q42's tolerance: counts on strings vs 64-bit hashes).
       s"""WITH $shinglesCte,
          hot AS (SELECT sh FROM e GROUP BY sh HAVING count(*) > 100),
          f AS (SELECT id, sh FROM e LEFT JOIN hot USING (sh)
@@ -2858,13 +2857,13 @@ private[graft] object CorpusQueries {
     // MinHash blocking actually surfaces — the measured S-curve that
     // validates (or indicts) the band configuration, next to q116's
     // estimator error and q89's ANN recall. Ground truth comes from the
-    // capped inverted-index pair core over the materialized postings;
+    // capped bounded pair core over the materialized postings;
     // detection from the band-bucket candidate set over the materialized
     // signature frame.
     Query("q137_lsh_recall_curve", (s, d) => {
       val docs = t(s, d, "documents")
       val postings = mat(Dedup.shinglePostings(docs, "doc_id", "text", 3))
-      val truth = Dedup.pairOverlapCounts(postings, maxDocFreq = Some(100L))
+      val truth = Dedup.pairOverlapCounts(postings, maxDocFreq = 100L)
         .withColumn("j_milli", expr("inter * 1000 div (n_a + n_b - inter)"))
         .where(col("j_milli") >= 50)
         .select(col("id_a"), col("id_b"), expr("j_milli div 100").as("band"))
@@ -3398,7 +3397,7 @@ private[graft] object CorpusQueries {
       val cand = Dedup.candidatePairsFromBandPostings(banded)
       val truth = Dedup.pairOverlapCounts(
           Dedup.shinglePostings(docs, "doc_id", "text", 3),
-          maxDocFreq = Some(100L))
+          maxDocFreq = 100L)
         .select(col("id_a"), col("id_b"),
           expr("inter * 1000 div (n_a + n_b - inter)").as("jm"))
       cand.join(truth, Seq("id_a", "id_b"), "left")
@@ -3647,7 +3646,7 @@ private[graft] object CorpusQueries {
       val len = docs.select(col("doc_id"), col("n_chars"))
       Dedup.pairOverlapCounts(
           Dedup.shinglePostings(docs, "doc_id", "text", 3),
-          maxDocFreq = Some(100L))
+          maxDocFreq = 100L)
         .withColumn("jm", expr("inter * 1000 div (n_a + n_b - inter)"))
         .where(col("jm") >= 300)
         .withColumn("containment_milli", expr("inter * 1000 div least(n_a, n_b)"))
@@ -4042,36 +4041,18 @@ private[graft] object CorpusQueries {
     // aggregate (the buffer itself poisons at cap+1 — no unbounded collect)
     // — this query is also that one-shuffle pair core's oracle gate: each
     // surviving shingle emits its ≤ C(15,2) source pairs in place (no
-    // inverted-index self-join, no anti-join). Counts compare
-    // hash-agnostic (the q42-family tolerance: xxhash64 postings
-    // engine-side, raw shingle strings oracle-side).
+    // self-join, no anti-join). Counts compare hash-agnostic (the
+    // q42-family tolerance: xxhash64 postings engine-side, raw shingle
+    // strings oracle-side).
     Query("q201_source_overlap", (s, d) => {
-      // The id space is the SOURCE dimension — a handful of values known
-      // up front (one pruned-column scan collects the tiny dim, the
-      // Analyze symbol-dim precedent) — so the pair core is the bitmask
-      // variant: the corpus exchange carries 8-byte masks instead of
-      // posting arrays and pair emission runs over the mask histogram.
-      // No upstream .distinct(): the bit_or dedupes (id, key) for free.
-      // NOTE: collecting the dim runs a (tiny, pruned-column) driver job
-      // at query-CONSTRUCTION time — visible even in plan-only Explain
-      // sessions. That is the price of choosing the pair core by measured
-      // cardinality rather than by taste; the scan reads one column of a
-      // dictionary-encoded dim.
-      val sources = t(s, d, "documents").select(col("source"))
-        .distinct().collect().map(_.getString(0)).toSeq
-      // (The spread guard lives inside shinglePostings since the sf1
-      // starvation fix — a second call-site Spread here would just stack
-      // an extra exchange on the same tiny input.)
+      // The ids are SOURCES, so one source posts each shingle once per
+      // document; the bounded aggregate's set dedupes those (id, key)
+      // repeats, so no upstream .distinct() is needed. (The spread guard
+      // lives inside shinglePostings since the sf1 starvation fix — a
+      // second call-site Spread here would just stack an extra exchange on
+      // the same tiny input.)
       val p = Dedup.shinglePostings(t(s, d, "documents"), "source", "text", 3)
-      // Regime dispatch, not a hard require: past 63 sources the long mask
-      // can't hold the id space, so fall back to the generic bounded-
-      // buffer pair core (identical output contract) instead of throwing
-      // at a larger scale factor's wider dim.
-      val pairs =
-        if (sources.nonEmpty && sources.size <= 63)
-          Dedup.pairCountsByBitmask(p, "shh", "id", sources, maxDocFreq = 15L)
-        else Dedup.boundedPairCounts(p, "shh", "id", maxDocFreq = 15L)
-      pairs
+      Dedup.boundedPairCounts(p, "shh", "id", maxDocFreq = 15L)
         .select(col("id_a").as("source_a"), col("id_b").as("source_b"),
           col("n_shared"))
         .orderBy(col("source_a"), col("source_b"))

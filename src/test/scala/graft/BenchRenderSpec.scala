@@ -67,24 +67,48 @@ class BenchRenderSpec extends AnyFunSuite {
   }
 
   test("calibration inflation: geomean of the pair, sf0.1-only, self-flagging") {
+    val committed = Bench.refMedians()
+    val refs = Bench.calibrationRefs(committed)
+    assert(refs.keySet == Bench.calibrationBasket)
     // Exactly the reference values -> 1.0.
-    val at = Bench.calibrationInflation(
-      Bench.calibrationRefs.toSeq, "/root/testdata/sf0.1")
+    val at = Bench.calibrationInflation(refs.toSeq, "/data/sf0.1",
+      committed)
     assert(at.exists(c => math.abs(c - 1.0) < 1e-9))
     // A 2.5x-degraded environment (the BENCH_r9/r10 driver-run shape)
     // flags itself.
     val hot = Bench.calibrationInflation(
-      Bench.calibrationRefs.view.mapValues(_ * 2.5).toSeq, "/root/testdata/sf0.1/")
+      refs.view.mapValues(_ * 2.5).toSeq, "/data/sf0.1/", committed)
     assert(hot.exists(c => math.abs(c - 2.5) < 1e-6))
     // One query of the pair is enough; a foreign SF or no calibration query
     // yields no field rather than a misleading number.
     assert(Bench.calibrationInflation(
-      Seq("q76_line_dedup" -> Bench.calibrationRefs("q76_line_dedup") * 2.0),
-      "/root/testdata/sf0.1").exists(c => math.abs(c - 2.0) < 1e-6))
+      Seq("q76_line_dedup" -> refs("q76_line_dedup") * 2.0),
+      "/data/sf0.1", committed).exists(c => math.abs(c - 2.0) < 1e-6))
     assert(Bench.calibrationInflation(
-      Bench.calibrationRefs.toSeq, "/root/testdata/sf0.01").isEmpty)
+      refs.toSeq, "/data/sf0.01", committed).isEmpty)
     assert(Bench.calibrationInflation(
-      Seq("q02_market_metrics" -> 0.2), "/root/testdata/sf0.1").isEmpty)
+      Seq("q02_market_metrics" -> 0.2), "/data/sf0.1",
+      committed).isEmpty)
+  }
+
+  test("calibration is absent without a readable committed detail or a basket query") {
+    val run = Seq("q76_line_dedup" -> 0.4, "q01_pricing_summary" -> 0.2)
+    val unreadable = Bench.refMedians(Seq("/nonexistent/BENCH_LOCAL_DETAIL.json"))
+    assert(unreadable.isEmpty)
+    assert(Bench.calibrationInflation(run, "/data/sf0.1",
+      unreadable).isEmpty)
+    // A detail that lacks one basket query yields no refs at all, not a
+    // re-weighted geomean over the rest.
+    val partial = Bench.refMedians() - "q81_pack_sequences"
+    assert(Bench.calibrationRefs(partial).isEmpty)
+    assert(Bench.calibrationInflation(run, "/data/sf0.1",
+      partial).isEmpty)
+    // The line keeps its shape and omits the field.
+    val j = check(Bench.renderLine(mk(3), 0, "/data/sf0.1",
+      "out.json", Bench.calibrationInflation(run, "/data/sf0.1",
+        unreadable)))
+    assert((j \ "calibration_inflation") == JNothing)
+    assert((j \ "value") != JNothing)
   }
 
   test("calibration field lands in the line and the line still fits") {

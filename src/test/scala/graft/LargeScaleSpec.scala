@@ -536,7 +536,7 @@ class LargeScaleSpec extends AnyFunSuite {
     val banded = Dedup.minhashBandPostingsFromSignatures(sig, numHashes = 8,
       bands = 4)
     val cand = Dedup.candidatePairsFromBandPostings(banded).localCheckpoint()
-    val truth = Dedup.pairOverlapCounts(postings, maxDocFreq = Some(100L))
+    val truth = Dedup.pairOverlapCounts(postings, maxDocFreq = 100L)
       .withColumn("j_milli", expr("inter * 1000 div (n_a + n_b - inter)"))
       .localCheckpoint()
     val rec = truth.where(col("j_milli") >= 500)

@@ -127,6 +127,59 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
+  test("pairOverlapCounts equals the oracle's df prune + self-join + sizes reference") {
+    // A hot key in 60 docs (> cap: pruned from the pairs, still counted in
+    // the sizes), df-1 keys on docs 100..109 (sizes only, no pair), ids
+    // 40..59 whose only key is the hot one, and 23 shared keys driving
+    // multi-key pair counts.
+    val postings: Seq[(Long, Long)] = ((0L until 200L).map(i => (i % 40, i % 23)) ++
+      (0L until 60L).map(i => (i, 999L)) ++
+      (100L until 110L).map(i => (i, 1000L + i))).distinct
+    val cap = 15L
+    // The oracle's semantics spelled in Scala: keys with count(*) > cap
+    // leave the postings, the self-join counts matches per (a < b), and the
+    // sizes are count(*) per id over the UNPRUNED postings.
+    def reference(ps: Seq[(Long, Long)]): Map[(Long, Long), (Long, Long, Long)] = {
+      val sizes = ps.groupBy(_._1).view.mapValues(_.size.toLong).toMap
+      ps.groupBy(_._2).values.filter(_.size <= cap).toSeq
+        .flatMap(g => for ((a, _) <- g; (b, _) <- g if a < b) yield (a, b))
+        .groupBy(identity).map { case (pr @ (a, b), hits) =>
+          pr -> ((hits.size.toLong, sizes(a), sizes(b))) }
+    }
+    def core(ps: Seq[(Long, Long)]): Map[(Long, Long), (Long, Long, Long)] =
+      Dedup.pairOverlapCounts(ps.toDF("id", "shh"), cap)
+        .select("id_a", "id_b", "inter", "n_a", "n_b")
+        .as[(Long, Long, Long, Long, Long)].collect()
+        .map { case (a, b, i, na, nb) => ((a, b), (i, na, nb)) }.toMap
+    val want = reference(postings)
+    assert(want.nonEmpty)
+    assert(want.keys.forall { case (a, b) => a < 40 && b < 40 })
+    assert(core(postings) == want)
+    // Doubled postings (a duplicated doc_id row) are where the two
+    // semantics part: the core counts DISTINCT ids per key, so its pairs
+    // and `inter` do not move, while count(*) doubles every df and
+    // quadruples every match. Hence the precondition that
+    // shinglePostings is distinct per (id, shh) and doc_id is unique.
+    val doubled = postings ++ postings
+    def inters(m: Map[(Long, Long), (Long, Long, Long)]) =
+      m.view.mapValues(_._1).toMap
+    assert(inters(core(doubled)) == inters(want))
+    assert(inters(reference(doubled)) != inters(want))
+  }
+
+  test("shinglePostings is distinct per (id, shh) on a repetitive document") {
+    // "a a a a a a" has four 3-gram positions but one distinct shingle; the
+    // oracle's count(*) equals the core's distinct-id count only because
+    // each document posts each shingle once.
+    val rep = Seq((0L, "a a a a a a"), (1L, "a a a b a a a"), (2L, "a a"))
+      .toDF("doc_id", "text")
+    val ps = Dedup.shinglePostings(rep, "doc_id", "text", 3)
+      .as[(Long, Long)].collect().toSeq
+    assert(ps.size == ps.distinct.size)
+    assert(ps.groupBy(_._1).view.mapValues(_.size).toMap ==
+      Map(0L -> 1, 1L -> 4))
+  }
+
   test("keepBestPerGroup picks max-priority (ties lowest id) per group") {
     val grouped = Seq(
       (0L, 10L, 1L), (1L, 10L, 5L), (2L, 10L, 5L), // grp 10: 1 wins (5, tie -> low id)
@@ -157,9 +210,10 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
-  test("ngramJaccardPairs finds near-dups and exact dups") {
+  test("ngramJaccardFromPostings finds near-dups and exact dups") {
     val pairs = Dedup.ngramJaccardFromPostings(
-        Dedup.shinglePostings(docs, "doc_id", "text", n = 3), minJaccard = 0.5)
+        Dedup.shinglePostings(docs, "doc_id", "text", n = 3), minJaccard = 0.5,
+        maxDocFreq = 100L)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs.contains((0L, 3L))) // exact dup → jaccard 1.0
     assert(pairs.contains((0L, 1L)) || pairs.contains((1L, 3L))) // near-dup
@@ -168,7 +222,7 @@ class DedupSpec extends AnyFunSuite {
 
   test("ngram jaccard of exact dup is 1.0") {
     val j = Dedup.ngramJaccardFromPostings(
-        Dedup.shinglePostings(docs, "doc_id", "text", 3), 0.9)
+        Dedup.shinglePostings(docs, "doc_id", "text", 3), 0.9, 100L)
       .where(col("id_a") === 0 && col("id_b") === 3)
       .select("jaccard").as[Double].head()
     assert(j == 1.0)
@@ -180,7 +234,7 @@ class DedupSpec extends AnyFunSuite {
     // 'common shingle text' and 'shingle text here' appear in all 10 docs;
     // capped at 5 they contribute nothing, leaving no pair ≥ 0.3.
     val capped = Dedup.ngramJaccardFromPostings(
-      Dedup.shinglePostings(spam, "doc_id", "text", 3), 0.3, maxDocFreq = Some(5L))
+      Dedup.shinglePostings(spam, "doc_id", "text", 3), 0.3, maxDocFreq = 5L)
     assert(capped.count() == 0)
   }
 
@@ -196,7 +250,7 @@ class DedupSpec extends AnyFunSuite {
     assert(shingled(3L) == 1)
     // The full pipelines run end-to-end over the mixed corpus.
     val pairs = Dedup.ngramJaccardFromPostings(
-        Dedup.shinglePostings(short, "doc_id", "text", 3), 0.5)
+        Dedup.shinglePostings(short, "doc_id", "text", 3), 0.5, 100L)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs == Set((3L, 4L))) // only the 3-token exact dups can pair
     Dedup.minhashLshCandidates(short, "doc_id", "text", 3, 8, 4).count() // no throw
@@ -538,10 +592,10 @@ class DedupSpec extends AnyFunSuite {
     val short = (1 to 12).map(i => s"w$i").mkString(" ")
     val df = Seq((0L, long), (1L, short)).toDF("doc_id", "text")
     val postings = Dedup.shinglePostings(df, "doc_id", "text", 3)
-    val cont = Dedup.ngramContainmentFromPostings(postings, 0.9)
+    val cont = Dedup.ngramContainmentFromPostings(postings, 0.9, 100L)
       .as[(Long, Long, Double)].collect().toSeq
     assert(cont == Seq((0L, 1L, 1.0)))
-    val jac = Dedup.ngramJaccardFromPostings(postings, 0.9)
+    val jac = Dedup.ngramJaccardFromPostings(postings, 0.9, 100L)
     assert(jac.isEmpty, "jaccard at the same threshold must miss the subset pair")
   }
 
