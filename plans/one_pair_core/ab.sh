@@ -4,13 +4,14 @@
 # Usage: plans/one_pair_core/ab.sh <parent-rev> <change-rev> [outDir]
 #   env: SF_DIR (required: the sf0.1 corpus directory, TESTDATA.md),
 #        PAIRS (default 5),
+#        QUERIES (comma-separated, default the 8 pair-core queries),
 #        WORK (scratch for the two checkouts, default /tmp/one_pair_core_ab)
 #
 # Each revision is exported with `git archive` into its own directory and
 # compiled there with the Spark distribution's scalac (the perfbench/build.py
 # recipe) into that copy's target/scala-2.13/classes, so the two sides never
 # share a class dir. Then, for each pair, both sides run
-#   SPARK_GRAFT_BENCH_ONLY=<the 8 queries> SPARK_GRAFT_BENCH_REPS=3 tools/run.sh graft.Bench
+#   SPARK_GRAFT_BENCH_ONLY=<QUERIES> SPARK_GRAFT_BENCH_REPS=3 tools/run.sh graft.Bench
 # one after the other, the first side alternating by pair (odd pairs: parent
 # first). Bench writes each run's JSON line and per-query detail file to
 # outDir as pair<N>_<side>.json / pair<N>_<side>_DETAIL.json; summarize.py
@@ -24,7 +25,7 @@ SF_DIR=${SF_DIR:?set SF_DIR to the sf0.1 corpus directory}
 PAIRS=${PAIRS:-5}
 WORK=${WORK:-/tmp/one_pair_core_ab}
 JARS=$(cd "$REPO/perfbench" && python3 -c 'import build; print(build.spark_jars())')
-QUERIES=q42_ngram_jaccard,q77_containment_pairs,q88_winnowed_overlap,q126_source_copy_matrix,q137_lsh_recall_curve,q171_lsh_precision,q181_pair_explain,q201_source_overlap
+QUERIES=${QUERIES:-q42_ngram_jaccard,q77_containment_pairs,q88_winnowed_overlap,q126_source_copy_matrix,q137_lsh_recall_curve,q171_lsh_precision,q181_pair_explain,q201_source_overlap}
 mkdir -p "$OUT" "$WORK"
 
 build() { # <rev> <side>

@@ -46,14 +46,13 @@ object GraftSession {
     "spark.locality.wait" -> "0",
     // Kryo for RDD shuffle/broadcast payloads (SQL exchanges use the
     // UnsafeRow serializer regardless — this reaches RDD shuffles,
-    // persist spills, checkpoints and broadcasts app-wide, e.g. the CC
-    // rounds' primitive-block shuffles, dedup's BloomFilter broadcast,
-    // ScanOps' persisted Option[Double] rows; validated on the CC family
-    // + the full test suite). Measured on the CC contraction at 1M edges
-    // (r18, when its RDD rounds still shuffled one boxed (Long, Long) per
-    // edge): under the default JavaSerializer those rounds ran ~25% SLOWER
-    // than the Catalyst rounds of the time, under Kryo ~30% FASTER (warm
-    // A/B 22.7 s vs 32.8 s).
+    // persist spills and broadcasts app-wide, e.g. the CC rounds'
+    // primitive-block shuffles and persisted round state; validated on the
+    // CC family + the full test suite). Measured on the CC contraction at
+    // 1M edges (r18, when its RDD rounds still shuffled one boxed
+    // (Long, Long) per edge): under the default JavaSerializer those rounds
+    // ran ~25% SLOWER than the Catalyst rounds of the time, under Kryo ~30%
+    // FASTER (warm A/B 22.7 s vs 32.8 s).
     // Takes effect at SparkContext creation, so it must ride the builder,
     // not a post-hoc conf.set.
     "spark.serializer" -> "org.apache.spark.serializer.KryoSerializer",

@@ -1,80 +1,25 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-/** Pluggable materialization strategy for frames a downstream plan
-  * references more than once (self-join sides, iterative-loop state, the
-  * shared base of a composed pipeline). One conf, `graft.materialize`,
-  * selects the strategy everywhere — [[SparkEntry]]'s `mat`, ScanOps'
-  * EWMA two-pass sort, Coverage's greedy rounds, PageRank's degree frame,
-  * Ann's cell assignment — so the fault-tolerance/speed tradeoff is a
-  * deployment decision, not a code change:
+/** Materialization of frames a downstream plan references more than once
+  * (self-join sides, iterative-loop state, the shared base of a composed
+  * pipeline): [[SparkEntry]]'s `mat`, Coverage's greedy rounds, PageRank's
+  * degree frame, Ann's cell assignment.
   *
-  *  - `"true"` (default) — `localCheckpoint()`: fastest (executor-local
-  *    blocks, lineage truncated), but NOT fault-tolerant: localCheckpoint
-  *    discards the recompute path, so an executor loss mid-query fails the
-  *    job. The right default for local[] and short interactive runs.
-  *  - `"disk"` — `persist(DISK_ONLY)`: compute-once sharing with the FULL
-  *    lineage retained, so a lost partition recomputes instead of killing
-  *    the job — the multi-hour-cluster-job setting. Lineage is NOT
-  *    truncated: per-round plans in iterative loops keep growing, so loops
-  *    that iterate many times should (and do — see Graph.connectedComponents)
-  *    manage their own round persistence.
-  *  - `"reliable"` — `checkpoint()` to the SparkContext's checkpoint dir
-  *    (HDFS/object store on a cluster): lineage truncated AND recoverable
-  *    from storage — survives executor loss at the cost of a durable write
-  *    per materialization. The checkpoint dir comes from an existing
-  *    `sc.setCheckpointDir`, else `graft.checkpointDir`, else a local temp
-  *    dir (test convenience; set a durable dir in production).
-  *  - `"false"` — no-op: fully lazy, inspectable plans (Explain).
+  * The strategy is `localCheckpoint()`: executor-local blocks with the
+  * lineage truncated. Every session is `local[n]` ([[GraftSession]]), so
+  * the executor lives in the driver JVM and losing it ends the
+  * application; no recompute path or durable checkpoint could outlive it.
   *
-  * Duplicate-work note: `disk` populates its cache lazily on first action,
-  * `true`/`reliable` run one eager job — all three guarantee the shared
-  * stage computes once across consumers.
-  */
+  * One boolean conf, `graft.materialize` (default `true`), turns it off:
+  * `false` keeps plans fully lazy and inspectable (Explain). Any other
+  * value fails loudly. */
 object Materialize {
 
-  def apply(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    spark.conf.getOption("graft.materialize").getOrElse("true") match {
-      case "false"   => df
-      case "disk"    => df.persist(StorageLevel.DISK_ONLY)
-      case "reliable" =>
-        val sc = spark.sparkContext
-        if (sc.getCheckpointDir.isEmpty) {
-          val dir = spark.conf.getOption("graft.checkpointDir").getOrElse {
-            // Test convenience only: reliable checkpoints are never removed
-            // on unpersist, so a temp dir accumulates data for the session's
-            // lifetime and is only reclaimed by the JVM-exit hook. Anything
-            // but a test should set graft.checkpointDir to durable storage.
-            val tmp = java.nio.file.Files.createTempDirectory("graft-ckpt")
-            org.slf4j.LoggerFactory.getLogger(Materialize.getClass).warn(
-              s"graft.materialize=reliable with no checkpoint dir: falling " +
-                s"back to local temp $tmp (deleted on JVM exit; NOT " +
-                "durable). Set graft.checkpointDir for production use.")
-            Runtime.getRuntime.addShutdownHook(new Thread(() =>
-              try {
-                import scala.jdk.CollectionConverters._
-                java.nio.file.Files.walk(tmp).iterator().asScala.toSeq
-                  .reverse.foreach(java.nio.file.Files.deleteIfExists(_))
-              } catch { case _: Exception => () }))
-            tmp.toString
-          }
-          // Session-global side effect: later code sees this checkpoint dir.
-          sc.setCheckpointDir(dir)
-        }
-        df.checkpoint()
-      case "true" => df.localCheckpoint()
-      // Fail LOUDLY on an unrecognized mode: the wildcard used to fall
-      // through to localCheckpoint — the one NON-fault-tolerant strategy —
-      // so a typo ("disc", "DISK") on a multi-hour cluster job silently
-      // re-enabled exactly the failure mode the knob exists to avoid.
-      case other => throw new IllegalArgumentException(
-        s"unknown graft.materialize mode '$other' " +
-          "(expected true | disk | reliable | false)")
-    }
-  }
+  def apply(df: DataFrame): DataFrame =
+    if (enabled(df.sparkSession)) df.localCheckpoint() else df
 
   /** Lazy compute-once sharing for SMALL frames on a query's hot path:
     * `persist(MEMORY_AND_DISK)` — no eager materialization job (the cache
@@ -90,8 +35,11 @@ object Materialize {
     if (enabled(df.sparkSession)) df.persist(StorageLevel.MEMORY_AND_DISK)
     else df
 
-  /** True unless the session asked for fully-lazy plans — the guard loop
-    * operators use to decide whether to materialize round state at all. */
-  def enabled(spark: org.apache.spark.sql.SparkSession): Boolean =
-    !spark.conf.getOption("graft.materialize").contains("false")
+  private def enabled(spark: SparkSession): Boolean =
+    spark.conf.getOption("graft.materialize").getOrElse("true") match {
+      case "true"  => true
+      case "false" => false
+      case other => throw new IllegalArgumentException(
+        s"unknown graft.materialize value '$other' (expected true | false)")
+    }
 }

@@ -617,47 +617,6 @@ object Dedup {
         col("__top.n").as("top_shared"), col("n_suites"))
   }
 
-  /** [[contaminationFromPostings]] with a broadcast Bloom prefilter on the
-    * training side — the shape for benchmark suites too big to broadcast as
-    * an exact hash set.
-    *
-    * The plain join leaves Spark two bad options once the test side
-    * outgrows the broadcast threshold: shuffle EVERY training posting
-    * (corpus-sized shuffle at 100 TB) or broadcast tens of millions of
-    * 8-byte hashes per executor. A Bloom filter over the test hashes is
-    * ~1.2 bytes/element at 1% fpp — 10M benchmark shingles broadcast as
-    * ~12 MB — and the corpus side shuffles only the bloom-positive
-    * postings: true matches (rare by construction — contamination is the
-    * exception) plus an fpp-sized sliver. The exact join against the test
-    * hashes then runs on that sliver, so false positives are eliminated
-    * and the result is BIT-IDENTICAL to [[contaminationFromPostings]] for
-    * any fpp (Bloom filters have no false negatives).
-    *
-    * CONSTRUCTION RUNS JOBS: the filter build is a treeAggregate action
-    * (plus a count when `expectedItems` is not given), and the verify join
-    * re-derives the test postings — so pass MATERIALIZED frames, and from
-    * plan-inspection paths (graft.materialize=false) call the plain
-    * [[contaminationFromPostings]] instead, the way q74 does.
-    * `mightContainLong` is a JVM lambda — the one UDF in the engine, kept
-    * because Spark's own `BloomFilterMightContain` expression is not
-    * public API and the probe is a handful of xxhash rounds per row
-    * either way. */
-  def contaminationFromPostingsBloom(train: DataFrame, test: DataFrame,
-                                     minShared: Long, fpp: Double = 0.01,
-                                     expectedItems: Option[Long] = None): DataFrame = {
-    val te = test.select(col("shh")).distinct()
-    val spark = te.sparkSession
-    val bloom = te.stat.bloomFilter("shh",
-      expectedItems.getOrElse(math.max(te.count(), 1L)), fpp)
-    val bc = spark.sparkContext.broadcast(bloom)
-    val mightContain = udf((h: Long) => bc.value.mightContainLong(h))
-    train.where(mightContain(col("shh")))
-      .join(te, Seq("shh"))
-      .groupBy(col("id")).agg(count(lit(1)).as("n_shared"))
-      .where(col("n_shared") >= minShared)
-      .select(col("id").as("doc_id"), col("n_shared"))
-  }
-
   /** C4/CCNet-style duplicate-SEGMENT removal: drop every segment (line,
     * paragraph, fixed token block) that occurs more than `maxCount` times
     * across the corpus, then reassemble each document from its surviving

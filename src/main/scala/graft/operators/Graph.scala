@@ -57,10 +57,7 @@ import scala.collection.mutable
   *    count, checksum), the intermediate state read back from cache, so the
   *    fixpoint is detected at the exact round it happens.
   *  - Superseded rounds are unpersisted DETERMINISTICALLY once their
-  *    successor is materialized (memory: 2 edge sets, not O(rounds)). With
-  *    `sparkContext.setCheckpointDir` set, each round also checkpoints
-  *    RELIABLY (one extra cache-fed job), so executor loss recovers from
-  *    storage instead of replaying the contraction.
+  *    successor is materialized (memory: 2 edge sets, not O(rounds)).
   *  - Reducer counts are re-sized each round from the previous round's
   *    exact edge count, capped at the caller's `spark.sql.shuffle.partitions`.
   *    The caller's session confs are never touched.
@@ -315,7 +312,6 @@ object Graph {
   private def contract(seed: RDD[Pairs], seedStats: (Long, Long),
                        seedHeavy: Nodes, basePartsN: Int, rowsPerPart: Long,
                        maxIters: Int, hotDegree: Long): (RDD[Pairs], Int) = {
-    val sc = seed.sparkContext
     val held = mutable.ArrayBuffer[RDD[_]](seed)
     def keep(r: RDD[Pairs]): RDD[Pairs] = {
       held += r.persist(StorageLevel.MEMORY_AND_DISK); r
@@ -369,7 +365,6 @@ object Graph {
           if (!hot) (none, none) else adjMaps(mid.map(adjPart(_, midSalted, thr)).collect())
         val (next, nextSalted) = round(mid, midMin, midHeavy)
         keep(next)
-        if (sc.getCheckpointDir.isDefined) next.checkpoint()
         val statRows = next.map(a => (1, adjPart(a, nextSalted, thr)))
           .union(mid.map(a => (0, adjPart(a, none, -1L))))
           .collect()
@@ -448,7 +443,6 @@ object Graph {
     require(unknown.isEmpty, s"unknown connectedComponents loopConfs " +
       s"${unknown.mkString(", ")}; supported: ${confKeys.mkString(", ")}")
     val spark = nodes.sparkSession
-    val sc = spark.sparkContext
     val cleaned = edges
       .select(col(srcCol).cast("long").as("_1"), col(dstCol).cast("long").as("_2"))
       .where(col("_1") =!= col("_2"))
@@ -468,7 +462,6 @@ object Graph {
         Iterator.single(b.result())
       }
       .persist(StorageLevel.MEMORY_AND_DISK)
-    if (sc.getCheckpointDir.isDefined) seed.checkpoint()
     val thr0 = hotDegree / math.max(1, seed.getNumPartitions)
     val seedParts = seed.map { a =>
       var n = 0L; var x = 0L
@@ -504,8 +497,9 @@ object Graph {
     * degree-annotated edge list, keyed by src) and ONE map-side-combined
     * aggregate on dst — the canonical distributed PageRank round; nothing
     * is ever collected. The degree-annotated symmetric edge list is derived
-    * once and materialized (localCheckpoint, unless `graft.materialize` is
-    * `false`) so the `iters` rounds and the degree computation re-read one
+    * once and materialized ([[graft.Materialize]]: localCheckpoint; lazy
+    * under Explain's `graft.materialize=false`) so the `iters` rounds and
+    * the degree computation re-read one
     * frame instead of re-deriving the candidate pairs each round. A fixed
     * small `iters` keeps the lineage depth bounded, so no per-round RDD
     * re-wrapping is needed (contrast [[connectedComponents]], whose round

@@ -1114,31 +1114,20 @@ private[graft] object CorpusQueries {
          FROM bat b JOIN idx i ON b.bi = i.bi AND b.bv = i.bv
          GROUP BY b.id ORDER BY doc_id"""),
 
-    // Bloom-prefiltered decontamination: same contract as q66 (different
-    // split/threshold so the two queries stay distinct) but the corpus
-    // side probes a broadcast Bloom filter before anything shuffles — the
-    // shape for benchmark suites too big to broadcast exactly. The result
-    // is bit-identical to the plain join for any fpp, which is exactly
-    // what the oracle checks.
+    // Decontamination on a second split: q66's contract with a 1-in-40
+    // test split and a threshold of 2, so the two queries stay distinct.
+    // The name keeps its historical "bloom" because the evidence ledger
+    // keys on it; the broadcast Bloom prefilter the query once ran did not
+    // beat the plain join (plans/local_only) and is gone.
     Query("q74_bloom_decontaminate", (s, d) => {
       val docs = t(s, d, "documents")
-      val tr = mat(Dedup.shinglePostings(
-        docs.where(col("doc_id") % 40 =!= 0), "doc_id", "text", n = 3))
-      val te = mat(Dedup.shinglePostings(
-        docs.where(col("doc_id") % 40 === 0), "doc_id", "text", n = 3))
-      // The bloom build is an ACTION at construction time; under lazy plan
-      // inspection (graft.materialize=false) degrade to the plain exact
-      // join — same semantics by the operator's bit-identity contract, and
-      // no job may run before Explain prints a plan.
-      if (!Materialize.enabled(s))
-        Dedup.contaminationFromPostings(tr, te, minShared = 2L)
-          .orderBy(col("doc_id"))
-      else
-        Dedup.contaminationFromPostingsBloom(tr, te, minShared = 2L, fpp = 0.01)
-          .orderBy(col("doc_id"))
+      val tr = Dedup.shinglePostings(
+        docs.where(col("doc_id") % 40 =!= 0), "doc_id", "text", n = 3)
+      val te = Dedup.shinglePostings(
+        docs.where(col("doc_id") % 40 === 0), "doc_id", "text", n = 3)
+      Dedup.contaminationFromPostings(tr, te, minShared = 2L)
+        .orderBy(col("doc_id"))
     }, oracleSql =
-      // The Bloom prefilter is an engine-side physical optimization with no
-      // semantic footprint: the oracle is the plain exact-join SQL.
       s"""WITH $shinglesCte,
          te AS (SELECT DISTINCT $contShingleHashSql AS shh FROM e WHERE id % 40 = 0),
          tr AS (SELECT id, $contShingleHashSql AS shh FROM e WHERE id % 40 <> 0)

@@ -4,15 +4,14 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskStart}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Fault-tolerance drill for the pluggable materialization modes:
-  * MaterializeSpec proves the modes agree on RESULTS; this spec proves the
-  * fault-tolerant ones actually SURVIVE losing work mid-run. A listener
-  * kills live task attempts (`SparkContext.killTaskAttempt`) while the
-  * q79/q87 composite pipelines execute under `graft.materialize=disk` —
-  * kills are rescheduled WITHOUT counting toward spark.task.maxFailures
-  * (TaskKilled.countTowardsTaskFailures = false), so the drill runs on the
-  * default local session the way a lost-executor re-run would on a
-  * cluster — and the outputs must hash-match the undisturbed baseline.
+/** Fault-tolerance drill for the materialization strategy the product
+  * runs: MaterializeSpec proves `graft.materialize` true/false agree on
+  * RESULTS; this spec proves the default (localCheckpoint) SURVIVES losing
+  * work mid-run. A listener kills live task attempts
+  * (`SparkContext.killTaskAttempt`) while the q79/q87 composite pipelines
+  * execute — kills are rescheduled WITHOUT counting toward
+  * spark.task.maxFailures (TaskKilled.countTowardsTaskFailures = false) —
+  * and the outputs must hash-match the undisturbed baseline.
   *
   * Tasks at the fixture scale are short, so any single kill can race a
   * task's natural completion; the drill retries the whole query until at
@@ -26,7 +25,7 @@ class FaultDrillSpec extends AnyFunSuite {
   private def rows(q: String): Seq[String] =
     SparkEntry.queries(q)(spark, sfDir).collect().map(_.toString).toSeq
 
-  test("disk materialization survives mid-run task kills with green hashes") {
+  test("default materialization survives mid-run task kills with green hashes") {
     val sc = spark.sparkContext
     val baseline = probes.map(q => q -> rows(q)).toMap
     assert(baseline.values.forall(_.nonEmpty))
@@ -45,7 +44,6 @@ class FaultDrillSpec extends AnyFunSuite {
         }
     }
     sc.addSparkListener(killer)
-    spark.conf.set("graft.materialize", "disk")
     try {
       probes.foreach { q =>
         var got: Seq[String] = null
@@ -60,10 +58,9 @@ class FaultDrillSpec extends AnyFunSuite {
           s"$q: no kill ever landed in $attempts runs — the drill is vacuous; " +
             "slow the fixture down or raise the attempt cap")
         assert(got == baseline(q),
-          s"$q under graft.materialize=disk diverged after ${landed.get()} task kills")
+          s"$q diverged after ${landed.get()} task kills")
       }
     } finally {
-      spark.conf.unset("graft.materialize")
       sc.removeSparkListener(killer)
       spark.catalog.clearCache()
     }

@@ -2,10 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The pluggable materialization contract: every `graft.materialize` mode
-  * (localCheckpoint / persist-disk / reliable checkpoint / fully lazy)
-  * yields IDENTICAL results for a composite query that materializes shared
-  * state — the strategy is a deployment knob, never a semantics knob. */
+/** The materialization contract: both `graft.materialize` settings
+  * (localCheckpoint / fully lazy) yield IDENTICAL results for a composite
+  * query that materializes shared state — the switch only decides whether
+  * plans stay inspectable, never the semantics. */
 class MaterializeSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val sfDir = "/root/testdata/sf0.001"
@@ -15,68 +15,37 @@ class MaterializeSpec extends AnyFunSuite {
     * the scalar two-reference shape. */
   private val probes = Seq("q70_minhash_components", "q31_robust_z")
 
-  /** SparkContext has no public unset; reliable-mode runs set the
-    * SESSION-GLOBAL checkpoint dir, which would leak into later suites
-    * (GraphSpec asserts a pristine context before its own checkpoint
-    * test). Clear it via the generated setter, as GraphSpec does. */
-  private def clearCheckpointDir(): Unit = {
-    val sc = spark.sparkContext
-    sc.getClass.getMethod("checkpointDir_$eq", classOf[Option[_]])
-      .invoke(sc, None)
-    assert(sc.getCheckpointDir.isEmpty)
-  }
-
-  private def runAll(mode: Option[String]): Map[String, Seq[String]] = {
-    mode match {
-      case Some(m) => spark.conf.set("graft.materialize", m)
-      case None    => spark.conf.unset("graft.materialize")
-    }
+  private def runAll(mode: String): Map[String, Seq[String]] = {
+    spark.conf.set("graft.materialize", mode)
     try probes.map { q =>
       q -> SparkEntry.queries(q)(spark, sfDir).collect().map(_.toString).toSeq
     }.toMap
-    finally {
-      spark.conf.unset("graft.materialize")
-      if (mode.contains("reliable")) clearCheckpointDir()
-    }
+    finally spark.conf.unset("graft.materialize")
   }
 
-  test("all four materialization modes produce identical results") {
-    val baseline = runAll(None) // default = localCheckpoint
-    assert(baseline.values.forall(_.nonEmpty))
-    Seq("disk", "reliable", "false").foreach { mode =>
-      val got = runAll(Some(mode))
-      probes.foreach { q =>
-        assert(got(q) == baseline(q),
-          s"$q under graft.materialize=$mode diverged from default")
-      }
-    }
-  }
-
-  test("reliable mode configures a checkpoint dir and writes checkpoints") {
-    spark.conf.set("graft.materialize", "reliable")
-    try {
-      import spark.implicits._
-      val out = Materialize((1 to 10).toDF("x"))
-      assert(out.count() == 10)
-      val dir = spark.sparkContext.getCheckpointDir
-      assert(dir.isDefined, "reliable mode must establish a checkpoint dir")
-      // the checkpoint actually landed on storage (recovery source exists)
-      val files = new java.io.File(new java.net.URI(dir.get).getPath).listFiles()
-      assert(files != null && files.nonEmpty, s"no checkpoint data under $dir")
-    } finally {
-      spark.conf.unset("graft.materialize")
-      clearCheckpointDir()
+  test("true and false materialization produce identical results") {
+    val checkpointed = runAll("true") // the default
+    assert(checkpointed.values.forall(_.nonEmpty))
+    val lazyPlans = runAll("false")
+    probes.foreach { q =>
+      assert(lazyPlans(q) == checkpointed(q),
+        s"$q under graft.materialize=false diverged from true")
     }
   }
 
   test("unknown materialize modes fail loudly, not silently non-fault-tolerant") {
     import spark.implicits._
-    spark.conf.set("graft.materialize", "disc") // the typo that matters
+    // `disk` was a mode once: a stale setting must not quietly become
+    // localCheckpoint, on either entry point.
+    spark.conf.set("graft.materialize", "disk")
     try {
       val e = intercept[IllegalArgumentException] {
         Materialize(Seq(1).toDF("x"))
       }
-      assert(e.getMessage.contains("disc"))
+      assert(e.getMessage.contains("disk"))
+      intercept[IllegalArgumentException] {
+        Materialize.lazyCache(Seq(1).toDF("x"))
+      }
     } finally spark.conf.unset("graft.materialize")
   }
 
@@ -97,20 +66,6 @@ class MaterializeSpec extends AnyFunSuite {
       val lazyOut = Materialize.lazyCache(Seq(1, 2).toDF("x"))
       assert(lazyOut.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
       assert(lazyOut.count() == 2)
-    } finally spark.conf.unset("graft.materialize")
-  }
-
-  test("disk mode keeps the recompute path (plan is not truncated to an RDD scan)") {
-    import spark.implicits._
-    spark.conf.set("graft.materialize", "disk")
-    try {
-      val out = Materialize(Seq(1, 2, 3).toDF("x"))
-      val plan = out.queryExecution.optimizedPlan.toString
-      // localCheckpoint shows up as a LogicalRDD with no children — the
-      // lineage is gone. persist keeps the original plan under an
-      // InMemoryRelation, which is what makes executor loss survivable.
-      assert(!plan.contains("LogicalRDD"), s"disk mode truncated lineage:\n$plan")
-      assert(out.count() == 3)
     } finally spark.conf.unset("graft.materialize")
   }
 }

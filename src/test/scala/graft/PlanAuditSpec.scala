@@ -2,12 +2,13 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
 import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
 
 /** Plan-quality audit over the FULL query registry — the regressions the
   * DuckDB oracle cannot see. Every query is PLANNED (not run) at sf0.001
   * with AQE and materialization off, so the physical tree is the complete,
-  * static, codegen-annotated plan, and three properties are pinned:
+  * static, codegen-annotated plan, and four properties are pinned:
   *
   *  1. ZERO CartesianProduct nodes anywhere (main plan or subqueries) — a
   *     cartesian is never the right plan in this engine; every intentional
@@ -25,6 +26,9 @@ import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
   *     whose entire tree fell out of codegen (e.g. an interpreted-only
   *     expression landing in the hot path) fails loudly instead of
   *     shipping 10× slower.
+  *  4. ZERO ScalaUDF expressions: every function the engine adds is a
+  *     Catalyst expression (`graft.plans.Expressions`), never a JVM lambda
+  *     that boxes each row through Scala converters.
   *
   * AQE is disabled HERE only so the audit sees deterministic static plans;
   * Bench/Verify keep it on (it never introduces cartesians — it only
@@ -50,8 +54,8 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     plan.collectWithSubqueries { case p => p }
 
   /** (cartesian count, bnlj count, has a codegen span, sort-agg count,
-    * shuffle-exchange count) for one query. */
-  private def profile(name: String): (Int, Int, Boolean, Int, Int) = {
+    * shuffle-exchange count, ScalaUDF count) for one query. */
+  private def profile(name: String): (Int, Int, Boolean, Int, Int, Int) = {
     val plan = SparkEntry.queries(name)(spark, SparkTestSession.sf)
       .queryExecution.executedPlan
     val all = nodes(plan)
@@ -59,7 +63,8 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
       all.count(_.getClass.getSimpleName.startsWith("BroadcastNestedLoopJoin")),
       all.exists(_.isInstanceOf[WholeStageCodegenExec]),
       all.count(_.getClass.getSimpleName.startsWith("SortAggregate")),
-      all.count(_.getClass.getSimpleName.startsWith("ShuffleExchange")))
+      all.count(_.getClass.getSimpleName.startsWith("ShuffleExchange")),
+      all.map(_.expressions.map(_.collect { case u: ScalaUDF => u }.size).sum).sum)
   }
 
   /** Queries whose aggregates are all HASH-shaped by design — the r12
@@ -90,7 +95,7 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
   if (sys.env.contains("GRAFT_REGEN_PLAN_PROFILE")) {
     test("REGENERATE plan profile (GRAFT_REGEN_PLAN_PROFILE set)") {
       val lines = SparkEntry.queries.keys.toSeq.sorted.map { name =>
-        val (cart, bnlj, _, _, shuf) = profile(name)
+        val (cart, bnlj, _, _, shuf, _) = profile(name)
         assert(cart == 0, s"$name plans a CartesianProduct — fix before pinning")
         s"$name bnlj=$bnlj shuf=$shuf"
       }
@@ -108,8 +113,9 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     for (name <- SparkEntry.queries.keys.toSeq.sorted) {
       test(s"plan audit: $name") {
-        val (cart, bnlj, hasCodegen, sortAggs, shuf) = profile(name)
+        val (cart, bnlj, hasCodegen, sortAggs, shuf, udfs) = profile(name)
         assert(cart == 0, s"$name plans a CartesianProduct")
+        assert(udfs == 0, s"$name plans $udfs ScalaUDF expression(s)")
         golden.get(name).foreach { case (wantBnlj, wantShuf) =>
           assert(bnlj == wantBnlj,
             s"$name has $bnlj BroadcastNestedLoopJoin nodes, golden pins " +

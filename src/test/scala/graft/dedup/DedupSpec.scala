@@ -559,10 +559,9 @@ class DedupSpec extends AnyFunSuite {
       2L -> (("suiteB", 3L, 2L))))
   }
 
-  test("bloom-prefiltered contamination is bit-identical to the exact join") {
-    // A mixed corpus: one exact copy of a test doc, one partial overlap,
-    // many clean docs (the bloom must pass the first two and the exact
-    // verify join must kill any false positives among the rest).
+  test("postings contamination flags the copy and the partial overlap, not clean docs") {
+    // A mixed corpus: one exact copy of a test doc (all 6 trigrams shared),
+    // one partial overlap ("alpha beta gamma" only), many clean docs.
     val train = (
       Seq((0L, "alpha beta gamma delta epsilon zeta eta theta"),
           (1L, "alpha beta gamma unrelated trailing words here now")) ++
@@ -572,17 +571,11 @@ class DedupSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val tr = Dedup.shinglePostings(train, "doc_id", "text", n = 3)
     val te = Dedup.shinglePostings(test_, "doc_id", "text", n = 3)
-    val exact = Dedup.contaminationFromPostings(tr, te, minShared = 1L)
-      .as[(Long, Long)].collect().toMap
-    // Identical across fpp settings, INCLUDING an absurd 50% false-positive
-    // rate: the verify join makes fpp a pure performance knob.
-    for (fpp <- Seq(0.5, 0.01)) {
-      val bloom = Dedup.contaminationFromPostingsBloom(tr, te,
-          minShared = 1L, fpp = fpp)
+    def flagged(minShared: Long): Map[Long, Long] =
+      Dedup.contaminationFromPostings(tr, te, minShared)
         .as[(Long, Long)].collect().toMap
-      assert(bloom == exact, s"fpp=$fpp diverged from exact join")
-    }
-    assert(exact.contains(0L) && exact.contains(1L) && exact.size == 2)
+    assert(flagged(1L) == Map(0L -> 6L, 1L -> 1L))
+    assert(flagged(2L) == Map(0L -> 6L))
   }
 
   test("containment flags subset-duplicates that jaccard misses") {
@@ -669,7 +662,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("rolling hash expression matches the scala reference implementation") {
-    Expressions.register(spark)
+    Expressions.ensureRegistered(spark)
     val df = docs.select(col("doc_id"), Expressions.rollingHash(col("text")).as("h"),
       col("text"))
     df.as[(Long, Long, String)].collect().foreach { case (_, h, text) =>

@@ -13,7 +13,7 @@ class CharEntropySpec extends AnyFunSuite {
   import spark.implicits._
 
   private def entropyOf(s: String): Double = {
-    Expressions.register(spark)
+    Expressions.ensureRegistered(spark)
     Seq(Tuple1(s)).toDF("t")
       .select(Expressions.charEntropy(col("t"))).as[Double].head()
   }
@@ -26,7 +26,7 @@ class CharEntropySpec extends AnyFunSuite {
   }
 
   test("null propagates as null") {
-    Expressions.register(spark)
+    Expressions.ensureRegistered(spark)
     val got = Seq(Tuple1(null: String)).toDF("t")
       .select(Expressions.charEntropy(col("t"))).collect()
     assert(got.head.isNullAt(0))
@@ -42,7 +42,7 @@ class CharEntropySpec extends AnyFunSuite {
         val p = c.toDouble / bytes.length; -p * math.log(p)
       }.sum / math.log(2.0)
     }
-    Expressions.register(spark)
+    Expressions.ensureRegistered(spark)
     val got = texts.map(Tuple1(_)).toDF("t")
       .select(col("t"), Expressions.charEntropy(col("t")))
       .as[(String, Double)].collect().toMap
@@ -54,7 +54,7 @@ class CharEntropySpec extends AnyFunSuite {
   }
 
   test("runs under CODEGEN_ONLY (real doGenCode, no fallback)") {
-    Expressions.register(spark)
+    Expressions.ensureRegistered(spark)
     spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     try {
       val got = Seq("alpha", "beta beta", "gamma gamma gamma")

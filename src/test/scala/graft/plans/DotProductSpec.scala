@@ -17,7 +17,7 @@ class DotProductSpec extends AnyFunSuite {
     val df = (0 until 50).map { i =>
       (i.toLong, (0 until 64).map(d => math.sin(i * 64 + d) * 3).toArray)
     }.toDF("id", "vec")
-    Expressions.register(spark)
+    Expressions.ensureRegistered(spark)
     df
   }
 

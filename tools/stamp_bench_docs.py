@@ -4,8 +4,9 @@
 prose never drifts from the evidence (the r14 finding: hand-written
 "healthy total" ranges rotted every round).
 
-Reads the COMMITTED artifacts: BENCH_LOCAL.json (headline line),
-BENCH_LOCAL_DETAIL.json (per-query count), ORACLE_TIMING_sf0.1.json
+Reads only COMMITTED artifacts, so it runs on a clean checkout:
+BENCH_COMPOSITE.json (headline line: the cross-session composite),
+the detail file it names (per-query count) and ORACLE_TIMING_sf0.1.json
 (DuckDB denominator). Run after refreshing those:
 
     python3 tools/stamp_bench_docs.py
@@ -22,20 +23,20 @@ END = "<!-- bench-envelope:end -->"
 
 
 def envelope() -> str:
-    bench = json.loads((ROOT / "BENCH_LOCAL.json").read_text())
-    detail = json.loads((ROOT / "BENCH_LOCAL_DETAIL.json").read_text())
+    comp = json.loads((ROOT / "BENCH_COMPOSITE.json").read_text())
+    detail = json.loads((ROOT / comp.get("detail", "BENCH_COMPOSITE_DETAIL.json"))
+                        .read_text())
     oracle = json.loads((ROOT / "ORACLE_TIMING_sf0.1.json").read_text())
     head = subprocess.run(["git", "rev-parse", "--short", "HEAD"],
                           capture_output=True, text=True,
                           cwd=ROOT).stdout.strip() or "?"
-    nq = len(detail)
-    total = bench["value"]
-    cal = bench.get("calibration_inflation")
-    est = bench.get("value_est_corrected")
-    osec = oracle.get("total_sec") or oracle.get("value") or sum(
-        v for v in oracle.values() if isinstance(v, (int, float)))
-    parts = [f"Committed sf0.1 bench (local[32], {nq} queries): "
-             f"**{total:.1f} s** raw"]
+    total = comp["value"]
+    cal = comp.get("calibration_inflation")
+    est = comp.get("value_est_corrected")
+    osec = comp.get("oracle_total_sec") or oracle.get("total_sec")
+    parts = [f"Committed sf0.1 bench composite (local[32], {len(detail)} "
+             f"queries, per-query median over {comp.get('sessions', '?')} "
+             f"sessions): **{total:.1f} s**"]
     if cal is not None:
         parts.append(f"at calibration {cal:.2f}")
     if est is not None:
@@ -47,20 +48,12 @@ def envelope() -> str:
     parts.append(f"vs the multi-threaded single-node DuckDB oracle "
                  f"**{osec:.1f} s** on the same parquet")
     # The composite's stamped ratio is THE round-over-round regression
-    # signal (VERDICT-r17 #1 + "what's wrong" #2: one canonical artifact,
-    # self-adjudicating head). Absent fields mean a pre-r18 composite —
-    # fall back to computing from its value.
-    comp_path = ROOT / "BENCH_COMPOSITE.json"
-    if comp_path.exists():
-        comp = json.loads(comp_path.read_text())
-        ratio = comp.get("ratio_vs_oracle") or (
-            round(comp["value"] / osec, 3) if osec else None)
-        if ratio is not None:
-            parts.append(
-                f"; canonical regression signal: composite "
-                f"**{comp['value']:.1f} s / {ratio:.3f}x oracle** over "
-                f"{comp.get('sessions', '?')} sessions")
-    parts.append(f"— stamped from the committed artifacts at HEAD {head}.")
+    # signal (it medians across sessions, so one host burst cannot fake a
+    # regression).
+    ratio = comp.get("ratio_vs_oracle") or round(total / osec, 3)
+    parts.append(f"= **{ratio:.3f}x oracle**, the canonical regression "
+                 f"signal — stamped from the committed artifacts at HEAD "
+                 f"{head}.")
     return " ".join(parts)
 
 
