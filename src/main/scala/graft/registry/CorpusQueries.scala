@@ -1116,9 +1116,7 @@ private[graft] object CorpusQueries {
 
     // Decontamination on a second split: q66's contract with a 1-in-40
     // test split and a threshold of 2, so the two queries stay distinct.
-    // The name keeps its historical "bloom" because the evidence ledger
-    // keys on it; the broadcast Bloom prefilter the query once ran did not
-    // beat the plain join (plans/local_only) and is gone.
+    // The "bloom" in its name is historical; the evidence ledger keys on it.
     Query("q74_bloom_decontaminate", (s, d) => {
       val docs = t(s, d, "documents")
       val tr = Dedup.shinglePostings(
