@@ -499,15 +499,15 @@ object Graph {
     * is ever collected. The degree-annotated symmetric edge list is derived
     * once and materialized ([[graft.Materialize]]: localCheckpoint; lazy
     * under Explain's `graft.materialize=false`) so the `iters` rounds and
-    * the degree computation re-read one
-    * frame instead of re-deriving the candidate pairs each round. A fixed
-    * small `iters` keeps the lineage depth bounded, so no per-round RDD
-    * re-wrapping is needed (contrast [[connectedComponents]], whose round
-    * count is data-dependent). An RDD-round rewrite was tried in r18 and
-    * REJECTED on measurement: with the whole 3-iteration recurrence in ONE
-    * Catalyst plan there is no per-round planning to save, and the
-    * mega-hub drill regressed 4.7 s → 35.5 s at 1M nodes (Tungsten rows
-    * beat serialized tuples once per-round data is large).
+    * the degree computation re-read one frame instead of re-deriving the
+    * candidate pairs each round. A fixed small `iters` keeps the lineage
+    * depth bounded, so no per-round RDD re-wrapping is needed (contrast
+    * [[connectedComponents]], whose round count is data-dependent). An
+    * RDD-round rewrite was tried in r18 and REJECTED on measurement: with
+    * the whole 3-iteration recurrence in ONE Catalyst plan there is no
+    * per-round planning to save, and the mega-hub drill regressed
+    * 4.7 s → 35.5 s at 1M nodes (Tungsten rows beat serialized tuples once
+    * per-round data is large).
     *
     * All arithmetic is integral and floored (`div`), so ranks are
     * bit-identical across engines, partitionings and merge orders:
