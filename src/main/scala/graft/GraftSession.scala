@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.SparkSession
 
 /** The ONE place session defaults live. Every entry point (`Main`,
@@ -101,6 +103,13 @@ object GraftSession {
       .getOrCreate()
     checkStaticConfs(spark.sparkContext.getConf)
     spark.sparkContext.setLogLevel(logLevel)
+    // WindowExec warns "No Partition Defined" once per unpartitioned
+    // window it plans (203 lines in one sf0.001 Verify). Every such window
+    // in the registry sits over an aggregate or a global top-k, never a raw
+    // scan (plans/one_topk/unpartitioned_windows.md); PlanAuditSpec pins
+    // that set, so a new one fails a test instead of a log line.
+    Configurator.setLevel("org.apache.spark.sql.execution.window.WindowExec",
+      Level.ERROR)
     applyEnvConfs(spark)
     spark
   }

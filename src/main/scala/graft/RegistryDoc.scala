@@ -24,7 +24,7 @@ object RegistryDoc {
   private val OpRe =
     ("""(?:Dedup|Ann|TextOps|TimeOps|RobustZ|Sketches|TfIdf|Collocations|""" +
       """LmScore|AggOps|WindowOps|JoinOps|SetOps|RangeJoin|Mixture|Packing|""" +
-      """Splits|Calibrate|Sessionize|ScanOps|Graph|Coverage|Salting|""" +
+      """Splits|Calibrate|Sessionize|ScanOps|Graph|Coverage|""" +
       """Expressions|Multimodal|MediaHeaders|Crypto|UpsertWriter|StreamJoin|""" +
       """Bars)\.\w+""").r
 

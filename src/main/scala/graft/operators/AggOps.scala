@@ -225,17 +225,13 @@ object AggOps {
       .withColumn("mid", (col("best_ask") + col("best_bid")) / 2)
 
   /** A15 (`binance_analysis.py:505-512`): top-N book depth per side — rank
-    * window limited to N, then per-side sums. `side` has a handful of
-    * values, so the rank goes through [[WindowOps.topKPerGroupSalted]]:
-    * identical output, but the sort parallelizes across sub-partitions
-    * instead of funneling each side through one reducer.
+    * window limited to N, then per-side sums. The rank goes through
+    * [[WindowOps.thresholdedTopKPerGroup]]: a bounded-heap pass finds each
+    * side's N-th price, and only the rows at or above it reach the window.
     * `exactGrids=true` (integral qty, centi price) derives both sums from
     * exact long grids — no order-dependent double accumulation. */
   def depthTopN(df: DataFrame, side: String, price: Column, qty: Column, n: Int,
                 tiebreak: Seq[Column], exactGrids: Boolean = false): DataFrame = {
-    // Threshold-prefilter top-n (not the salted rank): the corpus never
-    // sorts — a bounded-heap pass finds each side's n-th price, and only
-    // the ≈ n·|sides| at-or-above-threshold rows reach the rank window.
     val ranked = WindowOps.thresholdedTopKPerGroup(df, Seq(side),
       price, tiebreak, n, out = "__rn")
     val agged =

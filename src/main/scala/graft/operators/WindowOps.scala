@@ -63,50 +63,13 @@ object WindowOps {
   def topK(df: DataFrame, order: Seq[Column], k: Int): DataFrame =
     df.orderBy(order: _*).limit(k)
 
-  /** Per-group top-k (rank window ≤ k): shuffles once by the group key. */
+  /** Per-group top-k (rank window ≤ k), the general form: Spark plans
+    * `row_number() <= k` as a Partial `WindowGroupLimit` before the
+    * exchange and a Final one after it, so each map task ships at most k
+    * rows per group and a hot group reaches its reducer pre-pruned. */
   def topKPerGroup(df: DataFrame, part: Seq[Column], order: Seq[Column], k: Int,
                    out: String = "rank"): DataFrame =
     df.withColumn(out, row_number().over(w(part, order))).where(col(out) <= k)
-
-  /** Per-group top-k that stays parallel when there are FEW groups: a plain
-    * rank window funnels each whole group through one reducer — with 4
-    * groups on a 1000-executor cluster, 996 sit idle while 4 sort
-    * everything. Phase 1 ranks within (group, salt) — `salts`-way parallel
-    * per group, each sub-sort bounded by |group|/salts — and keeps its
-    * local top-k; phase 2 re-ranks only the ≤ salts·k survivors per group.
-    *
-    * Output is IDENTICAL to [[topKPerGroup]]: any row in the true top-k is
-    * top-k within whatever sub-partition it landed in, so it survives
-    * phase 1; phase 2's full-ordering rank then reproduces the plain
-    * ranking exactly (tiebreak columns make it deterministic regardless of
-    * how rows were salted). */
-  def topKPerGroupSalted(df: DataFrame, part: Seq[Column], order: Seq[Column],
-                         k: Int, salts: Int = 16, out: String = "rank"): DataFrame = {
-    val local = w(part :+ spark_partition_id() % salts, order)
-    df.withColumn("__lrn", row_number().over(local)).where(col("__lrn") <= k)
-      .drop("__lrn")
-      .withColumn(out, row_number().over(w(part, order))).where(col(out) <= k)
-  }
-
-  /** Per-group top-k that MEASURES the skew before choosing a plan: one
-    * cheap profiling pass ([[Salting.profileGroups]] — map-side combined,
-    * scan pruned to the group columns) feeds [[Salting.adviseSalts]], and
-    * the rank runs plain ([[topKPerGroup]], one exchange, no survivor
-    * inflation) when no group exceeds a fair per-task share, or salted
-    * ([[topKPerGroupSalted]]) with the ADVISED factor when one does —
-    * closing the loop the q155 profiler only reported on: the salting
-    * decision was previously a per-query hand call. Results are identical
-    * on every path (the salted rank is output-equal by construction); only
-    * the plan differs. Worth the extra pass when `df` is a scan or cheap
-    * projection; for an expensive upstream, materialize first or pick a
-    * variant by hand. */
-  def topKPerGroupAdaptive(df: DataFrame, part: Seq[Column], order: Seq[Column],
-                           k: Int, out: String = "rank"): DataFrame = {
-    val salts = Salting.adviseSalts(Salting.profileGroups(df, part),
-      df.sparkSession.sparkContext.defaultParallelism)
-    if (salts <= 1) topKPerGroup(df, part, order, k, out)
-    else topKPerGroupSalted(df, part, order, k, salts, out)
-  }
 
   /** Per-group top-k via the THRESHOLD-PREFILTER pattern — the variant for
     * when the ranking value is one column: pass 1 computes each group's
@@ -116,40 +79,41 @@ object WindowOps {
     * instead of SORTING); pass 2 broadcast-joins the ≤|groups| thresholds
     * back and ranks ONLY the rows at-or-above their group's threshold —
     * a ties-inclusive superset of the true top-k, typically ≈ k·|groups|
-    * rows. The full window sort that [[topKPerGroup]] (one reducer per
-    * group) and [[topKPerGroupSalted]] (corpus-wide local sorts) both pay
-    * never happens at any scale.
+    * rows. [[topKPerGroup]]'s partial limit sorts every input partition
+    * first; this never sorts the corpus. Measured at sf0.1, where
+    * lineitem is one parquet row group: q14/q18 ran 1.9–2.2× slower on
+    * the plain rank (`plans/one_topk/`).
     *
     * Tradeoff: the input is consumed twice (threshold pass + filter pass) —
     * right when it's a table scan or a cheap projection; for an expensive
-    * upstream, materialize it first or prefer the salted variant.
-    * Contract: group columns non-null (equi-join semantics); `value` rows
-    * ranked DESC NULLS LAST with `tiebreak` completing a total order.
-    * A group with fewer than k non-null values gets a NULL threshold =
-    * keep-everything (its rank column still caps at k). Output: input
-    * columns + `out` = 1-based rank, rows with rank ≤ k — identical to
-    * [[topKPerGroup]] on the same ordering. */
+    * upstream, materialize it first. The threshold join is null-safe, so a
+    * null group key ranks as its own group, as in [[topKPerGroup]].
+    * Contract: `value` rows ranked DESC NULLS LAST with `tiebreak`
+    * completing a total order. A group with fewer than k non-null values
+    * gets a NULL threshold = keep-everything (its rank column still caps
+    * at k). Output: input columns + `out` = 1-based rank, rows with
+    * rank ≤ k — identical to [[topKPerGroup]] on the same ordering. */
   def thresholdedTopKPerGroup(df: DataFrame, part: Seq[String], value: Column,
                               tiebreak: Seq[Column], k: Int,
                               out: String = "rank"): DataFrame = {
     graft.plans.Expressions.ensureRegistered(df.sparkSession)
-    val thr = df.groupBy(part.map(col): _*)
+    val keys = part.indices.map(i => s"__g$i")
+    val thr = df.groupBy(part.zip(keys).map { case (p, g) => col(p).as(g) }: _*)
       .agg(graft.plans.Expressions.kthLargest(value, k).as("__thr"))
-    df.join(broadcast(thr), part)
+    df.join(broadcast(thr),
+        part.zip(keys).map { case (p, g) => col(p) <=> col(g) }.reduce(_ && _))
       .where(col("__thr").isNull || value >= col("__thr"))
       .withColumn(out, row_number().over(
         w(part.map(col), value.desc +: tiebreak)))
       .where(col(out) <= k)
-      .drop("__thr")
+      .drop(keys :+ "__thr": _*)
   }
 
   /** Global top-k under a per-group cap — "the best k docs overall, but no
     * more than `perGroup` from any one source": the diversified selection a
     * curation pipeline uses so one high-quality domain cannot monopolize
-    * the kept set. Phase 1 prunes to the per-group top-`perGroup` with the
-    * skew-ADAPTIVE rank ([[topKPerGroupAdaptive]] — plain window when the
-    * measured profile says no group exceeds a task share, salted by the
-    * advised factor when one does); phase 2's global top-k then runs over
+    * the kept set. Phase 1 prunes to the per-group top-`perGroup` with
+    * [[topKPerGroup]]; phase 2's global top-k then runs over
     * ≤ groups·perGroup rows and compiles to TakeOrderedAndProject
     * (per-partition k, no full sort). Deterministic iff `order` is a total
     * order — pass a unique tiebreak. Output keeps `out` = the within-group
@@ -157,7 +121,7 @@ object WindowOps {
   def diversifiedTopK(df: DataFrame, group: Seq[Column], order: Seq[Column],
                       perGroup: Int, k: Int,
                       out: String = "group_rank"): DataFrame =
-    topKPerGroupAdaptive(df, group, order, perGroup, out = out)
+    topKPerGroup(df, group, order, perGroup, out = out)
       .orderBy(order: _*).limit(k)
 
   /** O4 (`binance_analysis.py:713`): deterministic exact-n sample. Contract
@@ -170,13 +134,12 @@ object WindowOps {
     * chosen by md5-of-id rank — the corpus-mixing primitive of a
     * training-data pipeline (rebalance languages/sources/domains to target
     * counts) with a cross-engine-reproducible draw. One shuffle on the
-    * stratum key; `sampleBy` gives probabilistic fractions, this gives
-    * exact deterministic quotas. */
+    * stratum key, carrying at most `nPerGroup` rows per stratum per map
+    * task ([[topKPerGroup]]); `sampleBy` gives probabilistic fractions,
+    * this gives exact deterministic quotas. */
   def stratifiedSample(df: DataFrame, strata: Seq[Column], idExpr: Column,
                        nPerGroup: Int, out: String = "rank"): DataFrame =
-    // Strata are typically FEW (languages, sources) — use the salted
-    // two-phase rank so one stratum never funnels through one reducer.
-    topKPerGroupSalted(df, strata, Seq(md5(idExpr.cast("string"))), nPerGroup,
+    topKPerGroup(df, strata, Seq(md5(idExpr.cast("string"))), nPerGroup,
       out = out)
 
   /** Deterministic importance sampling: keep a row iff its md5-derived

@@ -881,7 +881,8 @@ private[graft] object CorpusQueries {
          FROM documents ORDER BY doc_id"""),
 
     // Corpus mixing: exact per-language quotas with a deterministic
-    // md5-keyed draw (the rebalancing step before training-data packing).
+    // md5-keyed draw (the rebalancing step before training-data packing),
+    // one rank window per language.
     Query("q61_stratified_sample", (s, d) =>
       WindowOps.stratifiedSample(t(s, d, "documents"), Seq(col("lang")),
           col("doc_id"), 50, out = "rnk")
@@ -1408,24 +1409,17 @@ private[graft] object CorpusQueries {
                ORDER BY (CAST(substring(source, 4) AS BIGINT) % 7) DESC, doc_id) AS rn
            FROM documents) WHERE rn = 1 ORDER BY doc_id"""),
 
-    // Corpus vocabulary: token frequencies per language, top-20 via the
-    // skew-ADAPTIVE two-phase top-k: the measured group profile (few
-    // groups — each language far exceeds a task share) advises the salt
-    // factor, instead of the hand-picked constant rounds ≤ 11 used. A
-    // plain rank window would funnel each language through ONE reducer;
-    // see topKPerGroupAdaptive. groupBy-count itself is skew-immune: hot
-    // tokens reduce map-side.
+    // Corpus vocabulary: token frequencies per language, top-20 by one
+    // rank window. Few groups (languages), but the rank's partial
+    // WindowGroupLimit keeps ≤ 20 rows per language per map task, so no
+    // reducer sees a whole language. groupBy-count itself is skew-immune:
+    // hot tokens reduce map-side.
     Query("q85_vocab_topk", (s, d) => {
-      val docs = t(s, d, "documents")
-      // Lazily cached: the adaptive rank's profiling pass fills the cache
-      // and the ranking itself reads it — the counts aggregate (the
-      // expensive upstream the topKPerGroupAdaptive scaladoc warns about)
-      // computes once.
-      val counts = matLazy(docs
+      val counts = t(s, d, "documents")
         .select(col("lang"), explode(TextOps.tokens(col("text"))).as("token"))
         .where(col("token") =!= "")
-        .groupBy(col("lang"), col("token")).agg(count(lit(1)).as("n")))
-      operators.WindowOps.topKPerGroupAdaptive(counts, Seq(col("lang")),
+        .groupBy(col("lang"), col("token")).agg(count(lit(1)).as("n"))
+      operators.WindowOps.topKPerGroup(counts, Seq(col("lang")),
           Seq(col("n").desc, col("token")), k = 20)
         .select(col("lang"), col("token"), col("n"), col("rank"))
         .orderBy(col("lang"), col("rank"))
@@ -1781,7 +1775,7 @@ private[graft] object CorpusQueries {
 
     // Diversified selection: the 100 best docs by quality overall, capped
     // at 10 per source — the "best of corpus, no domain monopoly" pick.
-    // Per-group cap via the salted two-phase rank; the global cut is a
+    // Per-group cap via one rank window; the global cut is a
     // TakeOrderedAndProject over ≤ sources×10 survivors.
     Query("q104_diversified_topk", (s, d) => {
       val docs = t(s, d, "documents")
@@ -1793,7 +1787,7 @@ private[graft] object CorpusQueries {
         .select(col("doc_id"), col("source"), col("quality_milli"),
           col("group_rank").cast("long").as("group_rank"))
     }, oracleSql =
-      // Window row_number mirror of the salted two-phase group rank; the
+      // Window row_number mirror of the engine's per-group rank; the
       // final ordering (quality desc, doc_id) is total, so the LIMIT cut is
       // deterministic in both engines.
       s"""WITH $qualityMilliCte,
@@ -2140,8 +2134,8 @@ private[graft] object CorpusQueries {
     // Cluster-balanced sampling: up to 5 vectors per embedding cell under
     // the deterministic md5 draw — the "uniform over semantic space, not
     // over raw counts" selection (dense clusters stop dominating the
-    // sample). Composes the IVF cell assignment with the salted
-    // stratified-quota rank.
+    // sample). Composes the IVF cell assignment with the stratified-quota
+    // rank.
     Query("q107_cluster_balanced_sample", (s, d) => {
       val cells = Ann.clusterAssign(t(s, d, "embeddings"),
         "vec_id", "embedding", nlist = 16)

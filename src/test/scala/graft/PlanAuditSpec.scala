@@ -4,11 +4,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.catalyst.expressions.ScalaUDF
 import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.window.WindowExec
 
 /** Plan-quality audit over the FULL query registry — the regressions the
   * DuckDB oracle cannot see. Every query is PLANNED (not run) at sf0.001
   * with AQE and materialization off, so the physical tree is the complete,
-  * static, codegen-annotated plan, and four properties are pinned:
+  * static, codegen-annotated plan, and five properties are pinned:
   *
   *  1. ZERO CartesianProduct nodes anywhere (main plan or subqueries) — a
   *     cartesian is never the right plan in this engine; every intentional
@@ -29,6 +30,9 @@ import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
   *  4. ZERO ScalaUDF expressions: every function the engine adds is a
   *     Catalyst expression (`graft.plans.Expressions`), never a JVM lambda
   *     that boxes each row through Scala converters.
+  *  5. The set of queries with an unpartitioned Window (one task sees the
+  *     window's whole input) equals a classified list; see
+  *     `unpartitionedWindows`.
   *
   * AQE is disabled HERE only so the audit sees deterministic static plans;
   * Bench/Verify keep it on (it never introduces cartesians — it only
@@ -53,12 +57,14 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def nodes(plan: SparkPlan): Seq[SparkPlan] =
     plan.collectWithSubqueries { case p => p }
 
+  private val plans = scala.collection.concurrent.TrieMap.empty[String, SparkPlan]
+  private def plan(name: String): SparkPlan = plans.getOrElseUpdate(name,
+    SparkEntry.queries(name)(spark, SparkTestSession.sf).queryExecution.executedPlan)
+
   /** (cartesian count, bnlj count, has a codegen span, sort-agg count,
     * shuffle-exchange count, ScalaUDF count) for one query. */
   private def profile(name: String): (Int, Int, Boolean, Int, Int, Int) = {
-    val plan = SparkEntry.queries(name)(spark, SparkTestSession.sf)
-      .queryExecution.executedPlan
-    val all = nodes(plan)
+    val all = nodes(plan(name))
     (all.count(_.getClass.getSimpleName.startsWith("CartesianProduct")),
       all.count(_.getClass.getSimpleName.startsWith("BroadcastNestedLoopJoin")),
       all.exists(_.isInstanceOf[WholeStageCodegenExec]),
@@ -74,6 +80,17 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     * Sort+SortAggregate pair on these hot paths. */
   private val hashAggOnly = Seq("q83_dedup_keep_best",
     "q84_near_dup_keep_best", "q106_incremental_embedding")
+
+  /** Queries that plan a Window with no PARTITION BY, which sends its
+    * whole input through one task. Each such node sits over an aggregate
+    * or a global top-k whose size is bounded by a key's distinct values
+    * or a fixed cut, never over a scan (classified node by node in
+    * plans/one_topk/unpartitioned_windows.md). */
+  private val unpartitionedWindows = Set("q115_zipf_fit",
+    "q153_curriculum_order", "q155_key_skew", "q156_time_to_convert",
+    "q175_spearman", "q176_mutual_info", "q185_gini",
+    "q187_events_to_convert", "q192_price_band_revenue",
+    "q195_apportionment", "q203_decile_divergence")
 
   /** name -> (bnlj count, shuffle-exchange count). Shuffle counts joined
     * the profile in r16 (previously two hand-maintained literal pins for
@@ -109,6 +126,17 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(golden.keySet == SparkEntry.queries.keySet,
         s"stale plan profile: missing=${SparkEntry.queries.keySet -- golden.keySet} " +
           s"dropped=${golden.keySet -- SparkEntry.queries.keySet} — regenerate")
+    }
+
+    test("unpartitioned Window nodes: exactly the classified queries") {
+      val got = SparkEntry.queries.keySet.filter(name => nodes(plan(name)).exists {
+        case w: WindowExec => w.partitionSpec.isEmpty
+        case _ => false
+      })
+      assert(got == unpartitionedWindows,
+        s"unclassified=${got -- unpartitionedWindows} " +
+          s"gone=${unpartitionedWindows -- got} — classify the window's input " +
+          "in plans/one_topk/unpartitioned_windows.md, then update this set")
     }
 
     for (name <- SparkEntry.queries.keys.toSeq.sorted) {

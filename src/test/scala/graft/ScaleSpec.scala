@@ -1,6 +1,8 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.{Partial, WindowGroupLimitExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.dedup.Dedup
@@ -128,15 +130,50 @@ class ScaleSpec extends AnyFunSuite {
     }
   }
 
-  test("salted top-k per group matches the plain rank window exactly") {
-    val li = Tables.load(spark, SparkTestSession.sf, "lineitem")
-    val part = Seq(col("l_returnflag"))
-    val ord = Seq(col("l_extendedprice").desc, col("l_orderkey"), col("l_linenumber"))
-    val plain = operators.WindowOps.topKPerGroup(li, part, ord, 100)
-      .select($"l_returnflag", $"l_orderkey", $"l_linenumber", $"rank")
-    val salted = operators.WindowOps.topKPerGroupSalted(li, part, ord, 100, salts = 7)
-      .select($"l_returnflag", $"l_orderkey", $"l_linenumber", $"rank")
-    assert(plain.exceptAll(salted).isEmpty && salted.exceptAll(plain).isEmpty)
+  test("hot-key per-group top-k: one partial limit under one exchange, equals a reference") {
+    // 90 % of the rows share one key, over 4 input partitions: the partial
+    // WindowGroupLimit keeps ≤ k rows per group per map task, so the hot
+    // group crosses the exchange as ≤ 4·k rows, not 9000.
+    val fx = spark.range(0, 10000, 1, 4).select(
+      when($"id" < 9000, lit("hot")).otherwise(concat(lit("cold"), $"id" % 10)).as("k"),
+      (xxhash64($"id") % 100000).as("v"), $"id")
+    val k = 7
+    val top = operators.WindowOps.topKPerGroup(fx, Seq($"k"), Seq($"v".desc, $"id"), k)
+      .select($"k", $"v", $"id", $"rank")
+    val want = fx.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+      .groupBy(_._1).values.flatMap { g =>
+        g.sortBy(r => (-r._2, r._3)).take(k).zipWithIndex
+          .map { case ((kk, v, id), i) => (kk, v, id, i + 1) }
+      }.toSet
+    assert(want.size == 11 * k)
+    val prev = spark.conf.getOption("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val got = top.collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet
+      assert(got == want)
+      val plan = top.queryExecution.executedPlan
+      val exchanges = plan.collect { case e: ShuffleExchangeExec => e }
+      assert(exchanges.size == 1, s"expected one exchange:\n$plan")
+      val partials = exchanges.head.collect {
+        case l: WindowGroupLimitExec if l.mode == Partial => l }
+      assert(partials.size == 1,
+        s"expected one Partial WindowGroupLimit below the exchange:\n$plan")
+    } finally prev match {
+      case Some(v) => spark.conf.set("spark.sql.adaptive.enabled", v)
+      case None => spark.conf.unset("spark.sql.adaptive.enabled")
+    }
+  }
+
+  test("building q85 and q104 runs no Spark job") {
+    // Building a query is planning only: no profile pass, no eager
+    // materialization before the caller's action.
+    Tables.load(spark, SparkTestSession.sf, "documents") // memoized handle
+    val jobs = JobCounter.jobsDuring(spark) {
+      Seq("q85_vocab_topk", "q104_diversified_topk")
+        .foreach(q => SparkEntry.queries(q)(spark, SparkTestSession.sf))
+    }
+    assert(jobs == 0, s"building q85 and q104 ran $jobs Spark job(s)")
   }
 
   test("thresholded top-k per group matches the plain rank window exactly") {
@@ -154,12 +191,16 @@ class ScaleSpec extends AnyFunSuite {
   test("thresholded top-k: under-k groups, duplicate values, null values") {
     // group a: 2 rows (< k → NULL threshold, keep all); group b: heavy ties
     // AT the k-th value (ties-superset must re-rank correctly); group c:
-    // nulls beyond a full top-k (must never displace non-null values).
+    // nulls beyond a full top-k (must never displace non-null values);
+    // a null group key: ranked as its own group, as the plain window does.
     val rows =
-      Seq(("a", Some(5.0), 1L), ("a", Some(3.0), 2L)) ++
-      (1L to 10L).map(i => ("b", Some(7.0), i)) ++
-      Seq(("b", Some(9.0), 11L), ("b", Some(1.0), 12L)) ++
-      ((1L to 5L).map(i => ("c", Some(i.toDouble), i)) :+ ("c", None, 6L))
+      Seq((Some("a"), Some(5.0), 1L), (Some("a"), Some(3.0), 2L)) ++
+      (1L to 10L).map(i => (Some("b"), Some(7.0), i)) ++
+      Seq((Some("b"), Some(9.0), 11L), (Some("b"), Some(1.0), 12L)) ++
+      ((1L to 5L).map(i => (Some("c"), Some(i.toDouble), i)) :+
+        (Some("c"), None, 6L)) ++
+      Seq(4.0, 8.0, 6.0, 2.0).zipWithIndex.map { case (v, i) =>
+        (Option.empty[String], Some(v), 13L + i) }
     val df = rows.toDF("g", "v", "id")
     val ord = Seq(col("v").desc, col("id"))
     val plain = operators.WindowOps.topKPerGroup(df, Seq(col("g")), ord, 3)
@@ -167,6 +208,7 @@ class ScaleSpec extends AnyFunSuite {
     val thresholded = operators.WindowOps.thresholdedTopKPerGroup(df,
         Seq("g"), col("v"), Seq(col("id")), 3)
       .select($"g", $"id", $"rank")
+    assert(plain.where($"g".isNull).count() == 3)
     assert(plain.exceptAll(thresholded).isEmpty && thresholded.exceptAll(plain).isEmpty)
   }
 
