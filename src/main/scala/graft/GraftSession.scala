@@ -38,6 +38,18 @@ object GraftSession {
     *  - `locality.wait=0`: all these mains run `local[n]` where every
     *    block is PROCESS_LOCAL, so the wait can only ever stall; on a
     *    real cluster deployment this is the one knob to revisit.
+    *  - `codegen.cache.maxEntries=4000`: Spark's generated-code cache
+    *    (static, read once per JVM; default 100) must hold what a session
+    *    reuses, or every repeated query recompiles with Janino. Counted
+    *    under an effectively unbounded cache (plans/codegen_cache/): one
+    *    pass over all 203 queries at sf0.001 makes 1,783 entries (the
+    *    driver-side and task-side compiles of one source are two) and
+    *    ~35 more per further pass; perfbench's `registry` run makes 260,
+    *    its `pipeline` run 434. 4,000 is 1.8× registry plus pipeline:
+    *    Guava splits the bound over 4 segments that each evict on their
+    *    own. A second 203-query pass then spends 0.5 s in Janino instead
+    *    of 31.7 s (2 % of the first pass's 26.3 s), for ~14 MB more
+    *    metaspace and ~90 MB more live heap (sources are the keys).
     */
   val sharedConfs: Seq[(String, String)] = Seq(
     "spark.sql.session.timeZone" -> "UTC",
@@ -76,7 +88,8 @@ object GraftSession {
     // shuffles have R ≫ 200, where the bypass writer never engages and
     // this conf is inert — it only changes the small-R tail, where the
     // single-file writer wins on any disk-backed local dir.
-    "spark.shuffle.sort.bypassMergeThreshold" -> "0")
+    "spark.shuffle.sort.bypassMergeThreshold" -> "0",
+    "spark.sql.codegen.cache.maxEntries" -> "4000")
 
   /** Thread count: `SPARK_GRAFT_CPUS` env, else the caller's default
     * (mains differ — Bench wants many, Analyze is modest). */
@@ -101,30 +114,37 @@ object GraftSession {
     val spark = (sharedConfs ++ envConfs).foldLeft(b) {
       case (bb, (k, v)) => bb.config(k, v) }
       .getOrCreate()
-    checkStaticConfs(spark.sparkContext.getConf)
-    spark.sparkContext.setLogLevel(logLevel)
-    // WindowExec warns "No Partition Defined" once per unpartitioned
-    // window it plans (203 lines in one sf0.001 Verify). Every such window
-    // in the registry sits over an aggregate or a global top-k, never a raw
-    // scan (plans/one_topk/unpartitioned_windows.md); PlanAuditSpec pins
-    // that set, so a new one fails a test instead of a log line.
-    Configurator.setLevel("org.apache.spark.sql.execution.window.WindowExec",
-      Level.ERROR)
+    afterCreate(spark, logLevel)
     applyEnvConfs(spark)
     spark
   }
 
+  /** What every graft session gets once `getOrCreate` returns, whether
+    * [[create]] or the test suite's fixed local[4] session built it:
+    * [[checkStaticConfs]], the log level, and the `WindowExec` logger at
+    * ERROR. WindowExec warns "No Partition Defined" once per unpartitioned
+    * window it plans (203 lines in one sf0.001 Verify). Every such window
+    * in the registry sits over an aggregate or a global top-k, never a raw
+    * scan (plans/one_topk/unpartitioned_windows.md); PlanAuditSpec pins
+    * that set, so a new one fails a test instead of a log line. */
+  private[graft] def afterCreate(spark: SparkSession, logLevel: String): Unit = {
+    checkStaticConfs(spark.sparkContext.getConf)
+    spark.sparkContext.setLogLevel(logLevel)
+    Configurator.setLevel("org.apache.spark.sql.execution.window.WindowExec",
+      Level.ERROR)
+  }
+
   /** Confs that only take effect at SparkContext creation. */
-  private val staticKeys =
-    Seq("spark.serializer", "spark.shuffle.sort.bypassMergeThreshold")
+  private val staticKeys = Seq("spark.serializer",
+    "spark.shuffle.sort.bypassMergeThreshold", "spark.sql.codegen.cache.maxEntries")
 
   /** Fails loudly when a running context does not carry the static confs
     * [[create]] asked for ([[sharedConfs]], then `SPARK_GRAFT_CONF_*`
     * overrides). `getOrCreate` returns a pre-existing session (a shell, a
     * test-order leak) as is, and its builder confs are then silently
-    * dropped: such a session would run the JavaSerializer and the
-    * bypass-merge shuffle writer while every measurement assumed
-    * otherwise.
+    * dropped: such a session would run the JavaSerializer, the
+    * bypass-merge shuffle writer and a 100-entry generated-code cache
+    * while every measurement assumed otherwise.
     *
     * Values compare as verbatim strings: an override must spell a static
     * conf exactly as the running context stores it. A second spelling of

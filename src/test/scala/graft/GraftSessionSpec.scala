@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Session defaults live in exactly one place. The r13 verdict found the
@@ -37,6 +38,9 @@ class GraftSessionSpec extends AnyFunSuite {
     // writer, not the R-files-per-map-task bypass writer (measured 2×
     // on the 32-thread shingle cluster; inert at production R > 200).
     assert(m("spark.shuffle.sort.bypassMergeThreshold") == "0")
+    // Room for every generated class of the registry and the product path
+    // (plans/codegen_cache/): Spark's default of 100 evicts on every pass.
+    assert(m("spark.sql.codegen.cache.maxEntries") == "4000")
     // No duplicate keys hiding a lost value.
     assert(GraftSession.sharedConfs.size == m.size)
   }
@@ -51,21 +55,52 @@ class GraftSessionSpec extends AnyFunSuite {
   test("a context without the static confs fails the post-create check") {
     // A SparkConf built without Kryo stands in for a pre-existing session
     // (a shell, a test-order leak) that getOrCreate would hand back as is.
+    val cacheSize =
+      GraftSession.sharedConfs.toMap.apply("spark.sql.codegen.cache.maxEntries")
     val withoutKryo = new org.apache.spark.SparkConf(false)
       .set("spark.shuffle.sort.bypassMergeThreshold", "0")
+      .set("spark.sql.codegen.cache.maxEntries", cacheSize)
     val ex = intercept[IllegalStateException] {
       GraftSession.checkStaticConfs(withoutKryo)
     }
     assert(ex.getMessage.contains("spark.serializer=<unset>"))
     assert(!ex.getMessage.contains("bypassMergeThreshold"))
+    assert(!ex.getMessage.contains("maxEntries"))
     val bypass = withoutKryo.clone()
       .set("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
       .set("spark.shuffle.sort.bypassMergeThreshold", "200")
     assert(intercept[IllegalStateException] {
       GraftSession.checkStaticConfs(bypass)
     }.getMessage.contains("bypassMergeThreshold=200"))
+    // A context on Spark's default 100-entry codegen cache fails too.
+    val defaultCache = bypass.clone()
+      .set("spark.shuffle.sort.bypassMergeThreshold", "0")
+      .remove("spark.sql.codegen.cache.maxEntries")
+    val cacheEx = intercept[IllegalStateException] {
+      GraftSession.checkStaticConfs(defaultCache)
+    }
+    assert(cacheEx.getMessage.contains("spark.sql.codegen.cache.maxEntries=<unset>"))
+    assert(!cacheEx.getMessage.contains("serializer"))
+    GraftSession.checkStaticConfs(
+      defaultCache.clone().set("spark.sql.codegen.cache.maxEntries", cacheSize))
     // The shared test session carries them, so the check passes on it.
     GraftSession.checkStaticConfs(SparkTestSession.spark.sparkContext.getConf)
+  }
+
+  test("a repeated query compiles no new class") {
+    // The cache size is read once per JVM, at the first code generation, so
+    // the conf check alone cannot show it took effect. 120 projections that
+    // differ in a literal generate 120 distinct classes, each compiled on
+    // the driver and again in a task: more entries than Spark's default
+    // 100-entry cache holds, which would have evicted the first by now.
+    val spark = SparkTestSession.spark
+    def project(i: Int): Unit =
+      spark.range(4).selectExpr(s"id * $i + ${i}L AS v").collect()
+    (1 to 120).foreach(project)
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    project(1)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0 == 0,
+      "the generated-code cache evicted a class of a query 120 queries ago")
   }
 
   test("SPARK_GRAFT_CONF_ env passthrough translates underscores to dots") {

@@ -1,9 +1,9 @@
 #!/usr/bin/env bash
 # Alternated repository-benchmark A/B, parent vs change.
 #
-# Usage: plans/local_only/perfbench.sh <parent-rev> <change-rev> [outDir]
+# Usage: tools/ab_perfbench.sh <parent-rev> <change-rev> <outDir>
 #   env: SEEDS (default "1 2 3 4 5"),
-#        WORK (scratch for the two checkouts, default /tmp/local_only_perfbench)
+#        WORK (scratch for the two checkouts, default ${TMPDIR:-/tmp}/graft_perfbench)
 #
 # Each revision is exported with `git archive` into its own directory. For
 # each seed and each workload (registry, pipeline), both sides run
@@ -11,14 +11,14 @@
 # in their own copy, one after the other, the first side alternating by seed
 # (odd seeds: parent first). Each run's stdout (the harness's two JSON
 # lines) lands in outDir as <workload>_s<seed>_t0_<side>.txt; a file that
-# already exists is kept, not re-run. plans/one_pair_core/perfbench_table.py
-# summarizes the directory.
+# already exists is kept, not re-run. The script ends by printing
+# tools/perfbench_table.py's summary of outDir.
 set -euo pipefail
 PARENT=${1:?parent rev}; CHANGE=${2:?change rev}
 REPO=$(git rev-parse --show-toplevel)
-OUT=$(realpath -m "${3:-$REPO/plans/local_only/perfbench}")
+OUT=$(realpath -m "${3:?outDir}")
 SEEDS=${SEEDS:-1 2 3 4 5}
-WORK=${WORK:-/tmp/local_only_perfbench}
+WORK=${WORK:-${TMPDIR:-/tmp}/graft_perfbench}
 mkdir -p "$OUT" "$WORK"
 
 for side in parent change; do
@@ -40,4 +40,4 @@ for s in $SEEDS; do
     else run "$w" "$s" change; run "$w" "$s" parent; fi
   done
 done
-python3 "$REPO/plans/one_pair_core/perfbench_table.py" "$OUT"
+python3 "$REPO/tools/perfbench_table.py" "$OUT"

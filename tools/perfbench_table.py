@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Parent-vs-change table of alternated perfbench runs.
 
-Usage: python3 plans/one_pair_core/perfbench_table.py <dir>
+Usage: python3 tools/perfbench_table.py <dir>
 
 Reads <dir>/<workload>_s<seed>_t0_<side>.txt (perfbench/run.py's two JSON
 lines; the last holds the end-to-end metrics) and prints, per workload and
@@ -17,7 +17,7 @@ import statistics
 import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                                "..", "..", "perfbench"))
+                                "..", "perfbench"))
 from stats import percentile  # noqa: E402
 
 METRICS = ["setup_s", "wall_s", "op_p50_ms", "op_tail_ms"]
