@@ -45,9 +45,9 @@ object GraftSession {
     *    pass over all 203 queries at sf0.001 makes 1,783 entries (the
     *    driver-side and task-side compiles of one source are two) and
     *    ~35 more per further pass; perfbench's `registry` run makes 260,
-    *    its `pipeline` run 434. 4,000 is 1.8× registry plus pipeline:
-    *    Guava splits the bound over 4 segments that each evict on their
-    *    own. A second 203-query pass then spends 0.5 s in Janino instead
+    *    its `pipeline` run 434. 4,000 is 1.8× the 203-query pass plus
+    *    `pipeline` (2,217): Guava splits the bound over 4 segments that
+    *    each evict on their own. A second 203-query pass then spends 0.5 s in Janino instead
     *    of 31.7 s (2 % of the first pass's 26.3 s), for ~14 MB more
     *    metaspace and ~90 MB more live heap (sources are the keys).
     */
