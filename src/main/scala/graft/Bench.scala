@@ -12,8 +12,7 @@ import org.apache.spark.sql.SparkSession
   * query happens to run first, making per-query numbers meaningless. The
   * generated-code cache GraftSession sizes keeps every class the warm-up
   * compiled, so the timed pass recompiles only where a plan differs at the
-  * timed scale (under Spark's default 100-entry cache the warm-up's classes
-  * were evicted long before their query's timed run).
+  * timed scale.
   * Queries are timed in sorted name order, one action (count) each.
   *
   * Self-diagnostics: each query also records its JVM GC-time delta and its
