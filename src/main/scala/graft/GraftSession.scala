@@ -2,7 +2,7 @@ package graft
 
 import org.apache.logging.log4j.Level
 import org.apache.logging.log4j.core.config.Configurator
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 
 /** The ONE place session defaults live. Every entry point (`Main`,
   * `Analyze`, `Verify`, `Bench`, `Explain`, `ScaleUp`, `UpsertBench`)
@@ -50,6 +50,14 @@ object GraftSession {
     *    each evict on their own. A second 203-query pass then spends 0.5 s in Janino instead
     *    of 31.7 s (2 % of the first pass's 26.3 s), for ~14 MB more
     *    metaspace and ~90 MB more live heap (sources are the keys).
+    *  - `extensions=graft.GraftExtensions`: the engine's ten custom
+    *    expressions ([[graft.plans.Expressions]]) exist in a session only
+    *    through this extension, which Spark applies once per built session
+    *    (`newSession()` and cloned sessions included). The conf is static:
+    *    a context created without it has no way to gain the functions, and
+    *    every dedup, ANN and top-k plan would then fail at analysis. So
+    *    [[checkStaticConfs]] pins it like Kryo, and such a context fails in
+    *    [[create]] instead.
     */
   val sharedConfs: Seq[(String, String)] = Seq(
     "spark.sql.session.timeZone" -> "UTC",
@@ -89,7 +97,8 @@ object GraftSession {
     // this conf is inert — it only changes the small-R tail, where the
     // single-file writer wins on any disk-backed local dir.
     "spark.shuffle.sort.bypassMergeThreshold" -> "0",
-    "spark.sql.codegen.cache.maxEntries" -> "4000")
+    "spark.sql.codegen.cache.maxEntries" -> "4000",
+    "spark.sql.extensions" -> classOf[GraftExtensions].getName)
 
   /** Thread count: `SPARK_GRAFT_CPUS` env, else the caller's default
     * (mains differ — Bench wants many, Analyze is modest). */
@@ -136,7 +145,8 @@ object GraftSession {
 
   /** Confs that only take effect at SparkContext creation. */
   private val staticKeys = Seq("spark.serializer",
-    "spark.shuffle.sort.bypassMergeThreshold", "spark.sql.codegen.cache.maxEntries")
+    "spark.shuffle.sort.bypassMergeThreshold", "spark.sql.codegen.cache.maxEntries",
+    "spark.sql.extensions")
 
   /** Fails loudly when a running context does not carry the static confs
     * [[create]] asked for ([[sharedConfs]], then `SPARK_GRAFT_CONF_*`
@@ -144,7 +154,8 @@ object GraftSession {
     * test-order leak) as is, and its builder confs are then silently
     * dropped: such a session would run the JavaSerializer, the
     * bypass-merge shuffle writer and a 100-entry generated-code cache
-    * while every measurement assumed otherwise.
+    * while every measurement assumed otherwise, and it would lack the
+    * engine's custom functions.
     *
     * Values compare as verbatim strings: an override must spell a static
     * conf exactly as the running context stores it. A second spelling of
@@ -185,4 +196,13 @@ object GraftSession {
           if (!spark.conf.getOption(k).contains(v)) throw e
       }
     }
+}
+
+/** The session extension every graft session is built with (named by
+  * `spark.sql.extensions` in [[GraftSession.sharedConfs]]): it injects the
+  * custom expressions of [[graft.plans.Expressions]] under their SQL
+  * names, so the Column helpers resolve in any session of the context. */
+class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  override def apply(ext: SparkSessionExtensions): Unit =
+    graft.plans.Expressions.functions.foreach(ext.injectFunction)
 }

@@ -76,11 +76,9 @@ object Dedup {
     val fast = isIntegral(pre.schema("__p").dataType) &&
       isIntegral(pre.schema("__id").dataType)
     val best =
-      if (fast) {
-        Expressions.ensureRegistered(pre.sparkSession)
-        Expressions.minPairLong((-col("__p")).cast("long"),
-          col("__id").cast("long")).as("__best")
-      } else min(struct((-col("__p")).as("np"), col("__id").as("i"))).as("__best")
+      if (fast) Expressions.minPairLong((-col("__p")).cast("long"),
+        col("__id").cast("long")).as("__best")
+      else min(struct((-col("__p")).as("np"), col("__id").as("i"))).as("__best")
     (Seq(best, nullIdCheck(idCol, op).as("__nullck"),
       priorityCheck(op).as("__pck")), if (fast) "pay" else "i")
   }
@@ -379,7 +377,6 @@ object Dedup {
                         maxDocFreq: Long): DataFrame = {
     require(maxDocFreq >= 2 && maxDocFreq <= Int.MaxValue,
       s"maxDocFreq must be in [2, Int.MaxValue], got $maxDocFreq")
-    graft.plans.Expressions.ensureRegistered(postings.sparkSession)
     postings
       .groupBy(col(keyCol))
       .agg(graft.plans.Expressions
@@ -906,11 +903,9 @@ object Dedup {
 
   /** SimHash per doc (custom Catalyst expression — single projection pass,
     * no shuffle) plus the band columns used for Hamming-bucket joins. */
-  def withSimhash(df: DataFrame, textCol: String, out: String = "simhash"): DataFrame = {
-    Expressions.ensureRegistered(df.sparkSession)
+  def withSimhash(df: DataFrame, textCol: String, out: String = "simhash"): DataFrame =
     graft.operators.Spread(df)
       .withColumn(out, Expressions.simhash64(TextOps.tokens(col(textCol))))
-  }
 
   /** Normalized (id, simhash) hashes — the input currency of the
     * verified-edge and banding constructions below; materialize this (e.g.
@@ -1088,7 +1083,6 @@ object Dedup {
     // Zero-norm vectors have no direction: their cosine is 0/0 = NaN, and
     // Spark orders NaN ABOVE every real number, so `cosine >= minSim` would
     // admit the pair. Excluded on both sides (mirrored in the oracle).
-    graft.plans.Expressions.ensureRegistered(df.sparkSession)
     val v = df.select(col(idCol).as("id"),
         transform(col(vecCol), x => x.cast("double")).as("vec"))
       .withColumn("norm",
@@ -1130,7 +1124,6 @@ object Dedup {
                                    numPlanes: Int, dim: Int,
                                    minSim: Double): DataFrame = {
     val planes = Ann.hyperplanes(numPlanes, dim)
-    graft.plans.Expressions.ensureRegistered(newVecs.sparkSession)
     def prep(df: DataFrame, idOut: String, vecOut: String, normOut: String) =
       df.select(col(idCol).as(idOut),
           transform(col(vecCol), x => x.cast("double")).as(vecOut))
@@ -1171,7 +1164,6 @@ object Dedup {
   def embeddingCosinePairs(df: DataFrame, idCol: String, vecCol: String,
                            blockCol: String, minSim: Double): DataFrame = {
     // norm > 0: see embeddingLshPairs — NaN cosine would pass >= minSim.
-    graft.plans.Expressions.ensureRegistered(df.sparkSession)
     val v = df.select(col(blockCol).as("block"), col(idCol).as("id"),
         transform(col(vecCol), x => x.cast("double")).as("vec"))
       .withColumn("norm",

@@ -96,7 +96,6 @@ object WindowOps {
   def thresholdedTopKPerGroup(df: DataFrame, part: Seq[String], value: Column,
                               tiebreak: Seq[Column], k: Int,
                               out: String = "rank"): DataFrame = {
-    graft.plans.Expressions.ensureRegistered(df.sparkSession)
     val keys = part.indices.map(i => s"__g$i")
     val thr = df.groupBy(part.zip(keys).map { case (p, g) => col(p).as(g) }: _*)
       .agg(graft.plans.Expressions.kthLargest(value, k).as("__thr"))

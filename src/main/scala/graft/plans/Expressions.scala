@@ -1,8 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BinaryExpression, CreateNamedStruct, EqualTo, Expression, GreaterThan, If, IsNotNull, IsNull, LessThan, Literal, Or, UnaryExpression, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BinaryExpression, CreateNamedStruct, EqualTo, Expression, ExpressionInfo, GreaterThan, If, IsNotNull, IsNull, LessThan, Literal, Or, UnaryExpression, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{DeclarativeAggregate, TypedImperativeAggregate}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.trees.BinaryLike
@@ -12,12 +12,19 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, St
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Custom Catalyst expressions for the operators Spark's built-ins can't
-  * express efficiently: content rolling-hash fingerprints and SimHash.
+  * express efficiently: content rolling-hash fingerprints, SimHash, vector
+  * dot products and signatures, and bounded or pairwise aggregates.
   *
-  * Both are single-pass scalar expressions evaluated inside the projection
+  * The scalars are single-pass expressions evaluated inside the projection
   * (no shuffle, no UDF serialization of Row objects); the SimHash variant
   * replaces what would otherwise be an explode + 64 conditional sums +
   * re-aggregate (a full extra shuffle per document corpus).
+  *
+  * The Column helpers at the end (`rollingHash`, `dotProduct`, …) call the
+  * functions by name, so they resolve through the session's function
+  * registry. [[graft.GraftExtensions]] fills that registry from
+  * [[functions]] whenever a session is built, `newSession()` and cloned
+  * sessions included, so no caller registers anything.
   */
 object Expressions {
 
@@ -495,36 +502,29 @@ object Expressions {
       copy(ord = newLeft, payload = newRight)
   }
 
-  /** Registers the expressions as SQL functions on the session (idempotent);
-    * the Column helpers below route through the registry. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("rolling_hash", es => RollingHash(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("simhash64", es => SimHash64(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("dot_product", es => DotProduct(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("char_entropy", es => CharEntropy(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("bounded_collect_set",
-      es => BoundedCollectSet(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("kth_largest",
-      es => KthLargest(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("max_pair_long",
-      es => MaxPairLong(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("min_pair_long",
-      es => MinPairLong(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("sign_signature",
-      es => SignSignature(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("vector_floor_sum",
-      es => VectorFloorSum(es(0), es(1)), "scala_udf")
-  }
-
-  /** Registration that library operators call on THEIR input's session
-    * before building custom-expression columns — quiet (no re-registration
-    * WARN) when already present. Probes the NEWEST name so sessions
-    * registered by an older library version still pick up later additions. */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(FunctionIdentifier("vector_floor_sum")))
-      register(spark)
+  /** The ten expressions under their SQL names, each with an
+    * `ExpressionInfo` naming its class: the table [[graft.GraftExtensions]]
+    * injects into every session's function registry when the session is
+    * built. One instance per JVM, so a cloned session's re-injection
+    * re-puts the identical entry and logs no replacement WARN. */
+  private[graft] val functions
+      : Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = {
+    def fn(name: String, cls: Class[_])(build: Seq[Expression] => Expression) =
+      (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
+    Seq(
+      fn("rolling_hash", classOf[RollingHash])(es => RollingHash(es.head)),
+      fn("simhash64", classOf[SimHash64])(es => SimHash64(es.head)),
+      fn("dot_product", classOf[DotProduct])(es => DotProduct(es(0), es(1))),
+      fn("char_entropy", classOf[CharEntropy])(es => CharEntropy(es.head)),
+      fn("bounded_collect_set", classOf[BoundedCollectSet])(
+        es => BoundedCollectSet(es(0), es(1))),
+      fn("kth_largest", classOf[KthLargest])(es => KthLargest(es(0), es(1))),
+      fn("max_pair_long", classOf[MaxPairLong])(es => MaxPairLong(es(0), es(1))),
+      fn("min_pair_long", classOf[MinPairLong])(es => MinPairLong(es(0), es(1))),
+      fn("sign_signature", classOf[SignSignature])(
+        es => SignSignature(es(0), es(1))),
+      fn("vector_floor_sum", classOf[VectorFloorSum])(
+        es => VectorFloorSum(es(0), es(1))))
   }
 
   def rollingHash(c: Column): Column = call_function("rolling_hash", c)

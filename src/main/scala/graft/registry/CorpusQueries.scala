@@ -744,7 +744,6 @@ private[graft] object CorpusQueries {
     // Document fingerprinting via custom rolling-hash expression
     // (oracled via HUGEINT polynomial-mod arithmetic in DuckDB).
     Query("q49_rolling_hash", (s, d) => {
-      Expressions.ensureRegistered(s)
       t(s, d, "documents").select(col("doc_id"),
           Expressions.rollingHash(col("text")).as("rhash"))
         .orderBy(col("doc_id"))
@@ -1812,7 +1811,6 @@ private[graft] object CorpusQueries {
     // before the first shuffle). Low entropy flags repeated boilerplate /
     // degenerate text; high entropy flags encoded blobs.
     Query("q109_char_entropy", (s, d) => {
-      Expressions.ensureRegistered(s)
       t(s, d, "documents")
         .select(col("doc_id"),
           round(Expressions.charEntropy(col("text")), 6).as("entropy_bits"))

@@ -20,7 +20,6 @@ object Ann {
   /** Cast float vector to double + L2 norm, computed once. */
   private def prepared(df: DataFrame, idCol: String, vecCol: String,
                        idOut: String, vecOut: String, normOut: String): DataFrame = {
-    graft.plans.Expressions.ensureRegistered(df.sparkSession)
     df.select(col(idCol).as(idOut),
         transform(col(vecCol), x => x.cast("double")).as(vecOut))
       .withColumn(normOut,
@@ -31,8 +30,7 @@ object Ann {
     * fused [[graft.plans.Expressions.DotProduct]] codegen expression — the
     * same left-to-right double fold as the aggregate(zip_with) composite
     * (bit-identical, oracles untouched) without allocating a product array
-    * per candidate pair. Callers that prepare their own frames register
-    * the function via Expressions.ensureRegistered first. */
+    * per candidate pair. */
   def cosine(vecA: Column, normA: Column, vecB: Column, normB: Column): Column =
     graft.plans.Expressions.dotProduct(vecA, vecB) / (normA * normB)
 
@@ -46,7 +44,6 @@ object Ann {
     * bit-reproducible against a SQL oracle. Change the rounding or the
     * tie-break here and every caller (and its oracle) moves together. */
   private[graft] def blockedCosinePairs(v: DataFrame, minSim: Double): DataFrame = {
-    graft.plans.Expressions.ensureRegistered(v.sparkSession)
     val a = v.select(col("block"), col("id").as("id_a"),
       col("vec").as("__va"), col("norm").as("__na"))
     val b = v.select(col("block"), col("id").as("id_b"),
@@ -93,8 +90,7 @@ object Ann {
     * resulting whole-stage codegen compile time dominated the small-corpus
     * bench. Bit-identical results (same left-to-right double accumulation,
     * same >= 0 bit rule, same null-element behavior — see the expression's
-    * scaladoc). Callers must hold a session with the graft functions
-    * registered; every operator entry point calls ensureRegistered. */
+    * scaladoc). */
   def signature(vec: Column, planes: Array[Array[Double]]): Column =
     graft.plans.Expressions.signSignature(vec,
       typedlit(planes.map(_.toSeq).toSeq))
@@ -326,7 +322,6 @@ object Ann {
     if (cached != null) cached
     else {
       val child = owner.newSession()
-      graft.plans.Expressions.ensureRegistered(child)
       child.conf.set("spark.sql.adaptive.enabled", "false")
       child.conf.set("spark.sql.shuffle.partitions", "1")
       indexSessions.put(owner, child)
@@ -400,7 +395,6 @@ object Ann {
     val centLit = typedlit(centroids.map { case (cid, cvec, cnorm) =>
       (cid, cnorm, cvec.toSeq)
     }.toSeq)
-    graft.plans.Expressions.ensureRegistered(df.sparkSession)
     val sims = transform(centLit, c =>
       struct((graft.plans.Expressions.dotProduct(col(vecCol), c.getField("_3"))
           / c.getField("_2")).as("sim"),
@@ -430,7 +424,6 @@ object Ann {
   def hardNegatives(queries: DataFrame, corpus: DataFrame, idCol: String,
                     vecCol: String, labelCol: String, k: Int,
                     maxSim: Double): DataFrame = {
-    graft.plans.Expressions.ensureRegistered(queries.sparkSession)
     // Label rides the prepared projection directly — [[prepared]] + a join
     // back by id would self-join the corpus for a column the scan already
     // holds.

@@ -1,39 +1,35 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Kafka ingestion source (the streaming sibling of [[Rest]] — the
-  * reference's collector loop `src/collectors/trades_collector.py:24-48`
-  * polls REST and lands CSV; a production deployment of the same pipeline
-  * publishes each `/api/v3/trades` object to a Kafka topic keyed by
-  * symbol, and this wrapper is that feed's entry point).
+/** The Kafka trade feed's record contract (the streaming sibling of
+  * [[Rest]] — the reference's collector loop
+  * `src/collectors/trades_collector.py:24-48` polls REST and lands CSV; a
+  * production deployment of the same pipeline publishes each
+  * `/api/v3/trades` object to a Kafka topic keyed by symbol).
   *
-  * Deliberately THIN: all heavy lifting stays in Spark's own kafka
-  * connector (`format("kafka")`) and in [[graft.streaming.Bars]] — this
-  * object only (a) builds the option map from a typed config, and (b)
-  * projects the connector's fixed wire schema into the trades frame
-  * `Bars.oneMinuteBars` consumes. Both halves are pure DataFrame→DataFrame
-  * logic, so they are fully testable without a broker: specs drive
-  * [[parseTrades]] from a MemoryStream carrying [[wireSchema]] records and
-  * assert the option wiring separately.
+  * This object owns the half of that feed that needs no broker: the wire
+  * schema Spark's kafka connector emits per record ([[wireSchema]]), the
+  * trade payload it carries ([[tradeValueSchema]]), and [[parseTrades]],
+  * which projects such records into the trades frame
+  * `Bars.oneMinuteBars` consumes. It is pure DataFrame→DataFrame logic,
+  * identical for a stream and a batch, so specs drive it from a
+  * MemoryStream of wire records. The connector itself (`spark-sql-kafka`)
+  * is not a dependency of this build, so no reader is wired here.
   *
-  * Scale/delivery: the kafka source reads partitions in parallel (one
-  * Spark task per topic-partition slice), `maxOffsetsPerTrigger` bounds
-  * micro-batch size for backpressure, and at-least-once replay composes
-  * into effectively-once table state because the downstream sink upserts
-  * by (symbol, tf, open_time) — the same K4 idempotency argument as Bars.
-  * Malformed payloads parse to null and are dropped (poison-pill records
-  * must not wedge the stream); they remain countable upstream as
-  * `parsed.isNull` if a dead-letter branch is wanted.
+  * Delivery: at-least-once replay composes into effectively-once table
+  * state because the downstream sink upserts by (symbol, tf, open_time) —
+  * the same K4 idempotency argument as Bars. Malformed payloads parse to
+  * null and are dropped (poison-pill records must not wedge the stream);
+  * they remain countable upstream as `parsed.isNull` if a dead-letter
+  * branch is wanted.
   */
 object Kafka {
 
-  val Format = "kafka"
-
   /** The fixed schema Spark's kafka connector emits per record — the
-    * public wire contract specs mock when no broker/connector is present. */
+    * public wire contract specs mock, since no connector is present. */
   val wireSchema: StructType = StructType(Seq(
     StructField("key", BinaryType),
     StructField("value", BinaryType),
@@ -42,32 +38,6 @@ object Kafka {
     StructField("offset", LongType),
     StructField("timestamp", TimestampType),
     StructField("timestampType", IntegerType)))
-
-  /** Connector config. `startingOffsets` is "earliest" | "latest" | a
-    * per-partition JSON assignment, verbatim per the connector contract. */
-  final case class Config(
-      bootstrapServers: String,
-      topics: Seq[String],
-      startingOffsets: String = "latest",
-      maxOffsetsPerTrigger: Option[Long] = None,
-      failOnDataLoss: Boolean = true) {
-    require(bootstrapServers.nonEmpty, "bootstrapServers must be non-empty")
-    require(topics.nonEmpty, "at least one topic is required")
-  }
-
-  /** The exact option map handed to the connector — pure, so specs pin it
-    * without a broker. */
-  def sourceOptions(cfg: Config): Map[String, String] =
-    Map(
-      "kafka.bootstrap.servers" -> cfg.bootstrapServers,
-      "subscribe" -> cfg.topics.mkString(","),
-      "startingOffsets" -> cfg.startingOffsets,
-      "failOnDataLoss" -> cfg.failOnDataLoss.toString) ++
-      cfg.maxOffsetsPerTrigger.map("maxOffsetsPerTrigger" -> _.toString)
-
-  /** The raw record stream: one row per Kafka record, [[wireSchema]]. */
-  def readStream(spark: SparkSession, cfg: Config): DataFrame =
-    spark.readStream.format(Format).options(sourceOptions(cfg)).load()
 
   /** Value payload: one `/api/v3/trades` JSON object per record
     * (trades_collector.py:36-46 field set; price/qty are decimal STRINGS

@@ -41,6 +41,9 @@ class GraftSessionSpec extends AnyFunSuite {
     // Room for every generated class of the registry and the product path
     // (plans/codegen_cache/): Spark's default of 100 evicts on every pass.
     assert(m("spark.sql.codegen.cache.maxEntries") == "4000")
+    // The custom expressions are injected at session build, not registered
+    // by their callers.
+    assert(m("spark.sql.extensions") == "graft.GraftExtensions")
     // No duplicate keys hiding a lost value.
     assert(GraftSession.sharedConfs.size == m.size)
   }
@@ -60,12 +63,23 @@ class GraftSessionSpec extends AnyFunSuite {
     val withoutKryo = new org.apache.spark.SparkConf(false)
       .set("spark.shuffle.sort.bypassMergeThreshold", "0")
       .set("spark.sql.codegen.cache.maxEntries", cacheSize)
+      .set("spark.sql.extensions", "graft.GraftExtensions")
     val ex = intercept[IllegalStateException] {
       GraftSession.checkStaticConfs(withoutKryo)
     }
     assert(ex.getMessage.contains("spark.serializer=<unset>"))
     assert(!ex.getMessage.contains("bypassMergeThreshold"))
     assert(!ex.getMessage.contains("maxEntries"))
+    assert(!ex.getMessage.contains("extensions"))
+    // A context built without the extension has none of the custom functions.
+    val withoutExtension = withoutKryo.clone()
+      .set("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
+      .remove("spark.sql.extensions")
+    val extEx = intercept[IllegalStateException] {
+      GraftSession.checkStaticConfs(withoutExtension)
+    }
+    assert(extEx.getMessage.contains("spark.sql.extensions=<unset>"))
+    assert(!extEx.getMessage.contains("serializer"))
     val bypass = withoutKryo.clone()
       .set("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
       .set("spark.shuffle.sort.bypassMergeThreshold", "200")
@@ -85,6 +99,33 @@ class GraftSessionSpec extends AnyFunSuite {
       defaultCache.clone().set("spark.sql.codegen.cache.maxEntries", cacheSize))
     // The shared test session carries them, so the check passes on it.
     GraftSession.checkStaticConfs(SparkTestSession.spark.sparkContext.getConf)
+  }
+
+  test("a fresh newSession() resolves all ten custom functions by name") {
+    import org.apache.spark.sql.functions.{array, call_function, col, lit, typedlit}
+    val fresh = SparkTestSession.spark.newSession()
+    val df = fresh.createDataFrame(Seq(
+      (1L, "abc", Seq(1.0, 2.0)), (1L, "abd", Seq(3.0, -1.0)),
+      (2L, "xyz", Seq(0.5, 0.5))))
+      .toDF("k", "text", "vec")
+    val scalars = df.select(
+      call_function("rolling_hash", col("text")),
+      call_function("simhash64", array(col("text"))),
+      call_function("dot_product", col("vec"), col("vec")),
+      call_function("char_entropy", col("text")),
+      call_function("sign_signature", col("vec"),
+        typedlit(Seq(Seq(1.0, 0.0), Seq(0.0, 1.0)))))
+    val aggregates = df.groupBy(col("k")).agg(
+      call_function("bounded_collect_set", col("text"), lit(4)),
+      call_function("kth_largest", col("k"), lit(1)),
+      call_function("max_pair_long", col("k"), col("k")),
+      call_function("min_pair_long", col("k"), col("k")),
+      call_function("vector_floor_sum", col("vec"), lit(2.0)))
+    val called = (scalars.columns ++ aggregates.columns)
+      .flatMap(c => "^[a-z0-9_]+(?=\\()".r.findFirstIn(c)).toSet
+    assert(called == graft.plans.Expressions.functions.map(_._1.funcName).toSet)
+    assert(scalars.collect().map(_.getDouble(2)).toSeq == Seq(5.0, 10.0, 0.5))
+    assert(aggregates.collect().length == 2)
   }
 
   test("a repeated query compiles no new class") {

@@ -37,7 +37,8 @@ class LargeScaleSpec extends AnyFunSuite {
   private lazy val spark: SparkSession = {
     // sharedConfs ride this builder too (ADVICE r18): a standalone
     // LargeScaleSpec run otherwise measures under a different serializer
-    // and shuffle writer than every production entry point.
+    // and shuffle writer than every production entry point. afterCreate
+    // then checks that the running context carries the static ones.
     val b = SparkSession.builder()
       .master("local[8]")
       .appName("graft-large-scale")
@@ -45,7 +46,7 @@ class LargeScaleSpec extends AnyFunSuite {
     val s = GraftSession.sharedConfs
       .foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
       .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    GraftSession.afterCreate(s, "WARN")
     s
   }
 

@@ -635,7 +635,8 @@ class DedupSpec extends AnyFunSuite {
 
   test("withSimhash on an already-registered session logs no re-registration WARN") {
     // Re-creating the session's temp functions on every call made Spark log
-    // "replaced a previously registered function" once per function.
+    // "replaced a previously registered function" once per function; the
+    // functions now come from GraftExtensions at session build.
     import org.apache.logging.log4j.{Level, LogManager}
     import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
     import org.apache.logging.log4j.core.appender.AbstractAppender
@@ -662,7 +663,6 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("rolling hash expression matches the scala reference implementation") {
-    Expressions.ensureRegistered(spark)
     val df = docs.select(col("doc_id"), Expressions.rollingHash(col("text")).as("h"),
       col("text"))
     df.as[(Long, Long, String)].collect().foreach { case (_, h, text) =>

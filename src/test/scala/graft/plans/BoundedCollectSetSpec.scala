@@ -16,11 +16,9 @@ class BoundedCollectSetSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  private def agg(df: org.apache.spark.sql.DataFrame, cap: Int) = {
-    Expressions.ensureRegistered(spark)
+  private def agg(df: org.apache.spark.sql.DataFrame, cap: Int) =
     df.groupBy(col("k"))
       .agg(Expressions.boundedCollectSet(col("v"), cap).as("ids"))
-  }
 
   test("equals collect_set + sort + df-band filter (long elements)") {
     // key k has k distinct values 0..k-1, each duplicated 3 times

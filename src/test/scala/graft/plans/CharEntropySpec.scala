@@ -13,7 +13,6 @@ class CharEntropySpec extends AnyFunSuite {
   import spark.implicits._
 
   private def entropyOf(s: String): Double = {
-    Expressions.ensureRegistered(spark)
     Seq(Tuple1(s)).toDF("t")
       .select(Expressions.charEntropy(col("t"))).as[Double].head()
   }
@@ -26,7 +25,6 @@ class CharEntropySpec extends AnyFunSuite {
   }
 
   test("null propagates as null") {
-    Expressions.ensureRegistered(spark)
     val got = Seq(Tuple1(null: String)).toDF("t")
       .select(Expressions.charEntropy(col("t"))).collect()
     assert(got.head.isNullAt(0))
@@ -42,7 +40,6 @@ class CharEntropySpec extends AnyFunSuite {
         val p = c.toDouble / bytes.length; -p * math.log(p)
       }.sum / math.log(2.0)
     }
-    Expressions.ensureRegistered(spark)
     val got = texts.map(Tuple1(_)).toDF("t")
       .select(col("t"), Expressions.charEntropy(col("t")))
       .as[(String, Double)].collect().toMap
@@ -54,7 +51,6 @@ class CharEntropySpec extends AnyFunSuite {
   }
 
   test("runs under CODEGEN_ONLY (real doGenCode, no fallback)") {
-    Expressions.ensureRegistered(spark)
     spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     try {
       val got = Seq("alpha", "beta beta", "gamma gamma gamma")

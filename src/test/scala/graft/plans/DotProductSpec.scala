@@ -13,13 +13,9 @@ class DotProductSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  private lazy val vecs = {
-    val df = (0 until 50).map { i =>
-      (i.toLong, (0 until 64).map(d => math.sin(i * 64 + d) * 3).toArray)
-    }.toDF("id", "vec")
-    Expressions.ensureRegistered(spark)
-    df
-  }
+  private lazy val vecs = (0 until 50).map { i =>
+    (i.toLong, (0 until 64).map(d => math.sin(i * 64 + d) * 3).toArray)
+  }.toDF("id", "vec")
 
   test("bit-identical to the aggregate(zip_with) composite") {
     val composite = aggregate(zip_with(col("vec"), col("v2"), (x, y) => x * y),

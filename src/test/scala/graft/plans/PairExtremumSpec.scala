@@ -20,7 +20,6 @@ class PairExtremumSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   test("max_pair_long equals max(struct) on random groups incl. ties") {
-    Expressions.ensureRegistered(spark)
     // Deterministic pseudo-random (k, ord, pay) rows with forced ord ties.
     val df = spark.range(0, 2000, 1, 8).select(
       (col("id") % 37).as("k"),
@@ -38,7 +37,6 @@ class PairExtremumSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("min_pair_long equals min(struct) and matches the keeper ordering") {
-    Expressions.ensureRegistered(spark)
     val df = Seq(
       ("g1", 3L, 10L), ("g1", 3L, 2L), ("g1", 5L, 1L), // min ord 3, tie -> pay 2
       ("g2", -4L, 7L), ("g2", -4L, 7L),                // exact duplicate rows
@@ -52,7 +50,6 @@ class PairExtremumSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("null legs are ignored; all-null group evaluates to NULL") {
-    Expressions.ensureRegistered(spark)
     val df = Seq(
       ("a", Some(1L), Some(5L)), ("a", Some(9L), None), ("a", None, Some(99L)),
       ("b", None, None)
@@ -65,7 +62,6 @@ class PairExtremumSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("plans as HashAggregate where max(struct) plans SortAggregate") {
-    Expressions.ensureRegistered(spark)
     val df = spark.range(100).select((col("id") % 5).as("k"),
       col("id").as("ord"), (col("id") * 2).as("pay"))
     def aggNames(d: org.apache.spark.sql.DataFrame): Seq[String] = {
@@ -85,7 +81,6 @@ class PairExtremumSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("partials merge correctly across a real 16-partition exchange") {
-    Expressions.ensureRegistered(spark)
     val df = spark.range(0, 100000, 1, 16).select(
       (col("id") % 3).as("k"), (col("id") % 997).as("ord"), col("id").as("pay"))
     val got = df.groupBy("k")

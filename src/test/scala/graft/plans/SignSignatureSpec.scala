@@ -9,11 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * to signature 0 — never NULL — so null-vector rows land in LSH bucket 0
   * instead of silently dropping out of block equi-joins. */
 class SignSignatureSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    Expressions.ensureRegistered(s)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   private val planes = Seq(Seq(1.0, 1.0), Seq(1.0, -1.0), Seq(-1.0, -1.0))

@@ -9,11 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * refinement — including the null rules — while carrying ONE aggregate
   * expression instead of dim. */
 class VectorFloorSumSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    Expressions.ensureRegistered(s)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   private val scale = 16777216.0 // 2^24, the Ann.MeanScale quantum

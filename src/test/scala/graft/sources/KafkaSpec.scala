@@ -7,13 +7,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 import graft.streaming.Bars
 
-/** Kafka connector wiring + the broker-free parse path. The connector jar
-  * is not on this environment's classpath, so the source itself cannot
-  * execute here; the spec instead (a) pins the exact format/options handed
-  * to Spark's DataSource lookup, (b) proves `format("kafka")` IS what the
-  * reader resolves (the lookup fails by NAME without the jar), and (c)
-  * drives the full parse→bars pipeline from a MemoryStream carrying the
-  * connector's wire schema — the half of the feed this library owns.
+/** The broker-free half of the Kafka feed: the connector's wire schema and
+  * [[Kafka.parseTrades]]. The connector jar is not on this build's
+  * classpath, so the spec (a) pins the mocked record shape to
+  * [[Kafka.wireSchema]], and (b) drives the full parse→bars pipeline from
+  * a MemoryStream carrying that wire schema, and the same rows as a batch.
   *
   * [[KafkaWire]] is one mocked record in the connector's wire shape
   * (top-level: Spark's case-class encoder cannot reach a suite-inner
@@ -36,37 +34,6 @@ class KafkaSpec extends AnyFunSuite {
 
   // 2024-01-01 00:00:00 UTC in epoch millis.
   private val T0 = 1704067200000L
-
-  test("sourceOptions builds the exact connector option map") {
-    val cfg = Kafka.Config("broker1:9092,broker2:9092",
-      Seq("trades.btc", "trades.eth"), startingOffsets = "earliest",
-      maxOffsetsPerTrigger = Some(50000L), failOnDataLoss = false)
-    assert(Kafka.sourceOptions(cfg) == Map(
-      "kafka.bootstrap.servers" -> "broker1:9092,broker2:9092",
-      "subscribe" -> "trades.btc,trades.eth",
-      "startingOffsets" -> "earliest",
-      "failOnDataLoss" -> "false",
-      "maxOffsetsPerTrigger" -> "50000"))
-    // Defaults: latest offsets, fail on data loss, no trigger cap.
-    val defaults = Kafka.sourceOptions(Kafka.Config("b:9092", Seq("t")))
-    assert(defaults("startingOffsets") == "latest")
-    assert(defaults("failOnDataLoss") == "true")
-    assert(!defaults.contains("maxOffsetsPerTrigger"))
-    intercept[IllegalArgumentException](Kafka.Config("b:9092", Nil))
-    intercept[IllegalArgumentException](Kafka.Config("", Seq("t")))
-  }
-
-  test("readStream resolves the source by the name 'kafka' (plan wiring)") {
-    // Without the connector jar the DataSource lookup fails BY NAME —
-    // which is exactly the assertion: the reader hands Spark the literal
-    // format "kafka" plus our options. With the jar deployed, this same
-    // call returns the wire-schema stream.
-    val err = intercept[Exception] {
-      Kafka.readStream(spark, Kafka.Config("b:9092", Seq("trades")))
-    }
-    assert(err.getMessage.toLowerCase.contains("kafka"),
-      s"lookup failure does not name the kafka source: ${err.getMessage}")
-  }
 
   test("mocked wire batch matches the connector's wire schema") {
     val mock = Seq(rec("S", "{}", 0L)).toDF()
