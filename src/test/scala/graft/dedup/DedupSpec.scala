@@ -634,9 +634,9 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("withSimhash on an already-registered session logs no re-registration WARN") {
-    // Re-creating the session's temp functions on every call made Spark log
-    // "replaced a previously registered function" once per function; the
-    // functions now come from GraftExtensions at session build.
+    // Spark logs "replaced a previously registered function" whenever a
+    // function is registered again under a different builder; operators
+    // must leave the registry as GraftExtensions filled it.
     import org.apache.logging.log4j.{Level, LogManager}
     import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
     import org.apache.logging.log4j.core.appender.AbstractAppender
